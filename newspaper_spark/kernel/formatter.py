@@ -14,20 +14,16 @@ from html import unescape
 from ..dom import (
     Element,
     css_select,
+    drop_tag,
     find_by_tag,
     find_by_tags,
     remove_keep_tail,
     strip_tags,
 )
+from .scorer import get_text
 from .text import inner_trim
 
 _LITERAL_NL = r"\n"  # two characters: backslash + n
-
-
-def get_text(node: Element) -> str:
-    parts: list = []
-    node._gather_text(parts)
-    return inner_trim(" ".join(parts).strip())
 
 
 def get_formatted_text(top_node: Element) -> str:
@@ -125,7 +121,7 @@ def convert_to_html(top_node: Element) -> str:
                 and el.tag not in _ARTICLE_HTML_ALLOW
                 and el.getparent() is not None
             ):
-                drop_tag_keep_content(el)
+                drop_tag(el)
                 changed = True
     for el in node.iterdescendants():
         if isinstance(el.tag, str):
@@ -134,12 +130,6 @@ def convert_to_html(top_node: Element) -> str:
         node.tag = "div"  # lxml Cleaner keeps a root container
     _sanitize_attrs(node)
     return node_to_html(node, with_tail=False)
-
-
-def drop_tag_keep_content(el: Element) -> None:
-    from ..dom import drop_tag
-
-    drop_tag(el)
 
 
 def convert_to_text(top_node: Element) -> str:

@@ -201,15 +201,19 @@ def summarize(title="", text="", max_sents=5, language="en") -> str:
     """nlp.py:40-54 + article.py:386-388 ('\n'-joined)."""
     if not text or not title or max_sents <= 0:
         return ""
-    summaries = []
+    return summarize_with_keywords(title, text, keywords(text, language), max_sents, language)
+
+
+def summarize_with_keywords(title, text, kws, max_sents, language) -> str:
+    """summarize() given kws = keywords(text, language), for callers
+    that also need the keywords."""
+    if not text or not title or max_sents <= 0:
+        return ""
     sentences = split_sentences(text)
-    kws = keywords(text, language)
-    title_words = split_words(title)
-    ranks = score_sentences(sentences, title_words, kws, language).most_common(max_sents)
-    for rank in ranks:
-        summaries.append(rank[0])
+    ranks = score_sentences(sentences, split_words(title), kws, language).most_common(max_sents)
+    summaries = [rank[0] for rank in ranks]
     summaries.sort(key=lambda summary: summary[0])
-    return "\n".join([summary[1] for summary in summaries])
+    return "\n".join(summary[1] for summary in summaries)
 
 
 def keyword_union(title: str, text: str, language: str = "en", max_keywords: int = 35) -> list:

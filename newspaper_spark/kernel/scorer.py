@@ -14,7 +14,7 @@ parallelism is Spark's partitioning.
 """
 from __future__ import annotations
 
-from ..dom import Element, find_by_tag
+from ..dom import Element, find_by_tag, remove_keep_tail
 from .text import inner_trim, stopword_stats
 
 
@@ -22,10 +22,6 @@ def get_text(node: Element) -> str:
     parts: list = []
     node._gather_text(parts)
     return inner_trim(" ".join(parts).strip())
-
-
-def _stats(text: str, language: str):
-    return stopword_stats(text, language)
 
 
 def is_highlink_density(e: Element) -> bool:
@@ -82,28 +78,20 @@ def get_score(node: Element) -> float:
 # candidate list, collect the bottom-quartile penalty, and get their
 # <tr> removed by remove_negativescores_nodes — while the goldens keep
 # those captions (verified: corpus failures 23 → 21 when td is
-# excluded, no regressions). Default follows the goldens; set
-# CURRENT_REFERENCE_TAGS for the current-code behavior.
+# excluded, no regressions).
 CANDIDATE_TAGS = ("p", "pre")
-CURRENT_REFERENCE_TAGS = ("p", "pre", "td")
 
 
-def nodes_to_check(doc: Element, tags=None) -> list:
+def nodes_to_check(doc: Element) -> list:
     out = []
-    for tag in tags or CANDIDATE_TAGS:
+    for tag in CANDIDATE_TAGS:
         out += find_by_tag(doc, tag=tag)
     return out
 
 
-def is_boostable(node: Element, language: str) -> bool:
+def _is_boostable(node: Element, node_stats) -> bool:
     """≤3 preceding <p> siblings, any with >5 stopwords
     (extractors.py:845-870)."""
-    return _is_boostable_cached(
-        node, lambda n: _stats(get_text(n), language)
-    )
-
-
-def _is_boostable_cached(node: Element, node_stats) -> bool:
     steps_away = 0
     for current_node in node.itersiblings(preceding=True):
         if current_node.tag == "p":
@@ -133,7 +121,7 @@ def calculate_best_node(doc: Element, language: str = "en"):
         key = id(node)
         hit = stats_cache.get(key)
         if hit is None:
-            hit = _stats(get_text(node), language)
+            hit = stopword_stats(get_text(node), language)
             stats_cache[key] = hit
         return hit
 
@@ -148,7 +136,7 @@ def calculate_best_node(doc: Element, language: str = "en"):
 
     for node in nodes_with_text:
         boost_score = 0.0
-        if _is_boostable_cached(node, _node_stats):
+        if _is_boostable(node, _node_stats):
             if cnt >= 0:
                 boost_score = (1.0 / starting_boost) * 50
                 starting_boost += 1
@@ -207,7 +195,7 @@ def get_siblings_score(top_node: Element, language: str) -> float:
     paragraphs_score = 0
     for node in find_by_tag(top_node, tag="p"):
         text_node = get_text(node)
-        word_stats = _stats(text_node, language)
+        word_stats = stopword_stats(text_node, language)
         if word_stats.stop_word_count > 2 and not is_highlink_density(node):
             paragraphs_number += 1
             paragraphs_score += word_stats.stop_word_count
@@ -227,7 +215,7 @@ def get_siblings_content(current_sibling: Element, baseline: float, language: st
     for first_paragraph in find_by_tag(current_sibling, tag="p"):
         text = get_text(first_paragraph)
         if len(text) > 0:
-            paragraph_score = _stats(text, language).stop_word_count
+            paragraph_score = stopword_stats(text, language).stop_word_count
             score = float(baseline * 0.30)
             if score < paragraph_score and not is_highlink_density(first_paragraph):
                 ps.append(Element("p", text=text))
@@ -249,11 +237,5 @@ def post_cleanup(top_node: Element, language: str = "en") -> Element:
     for e in list(node):
         if e.tag != "p":
             if is_highlink_density(e):
-                remove_from_parent(e)
+                remove_keep_tail(e)
     return node
-
-
-def remove_from_parent(node: Element) -> None:
-    from ..dom import remove_keep_tail
-
-    remove_keep_tail(node)

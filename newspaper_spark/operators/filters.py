@@ -364,7 +364,7 @@ def badwords_filter(
 
     # toks feeds three consumers (unigram probe, bigram first-token
     # candidates, adjacency verify). Persisting it was probed and
-    # measured WORSE (round-7 3×3 job_count_probe: CPU median 4.37 s
+    # measured WORSE (round-7 3×3 per-query CPU probe: median 4.37 s
     # persisted vs 3.69 s recomputed at sf0.01) — the codegen
     # lower+split+posexplode is cheaper than materializing corpus-
     # sized (id, pos, w) rows, the same verdict as dclm_prep's

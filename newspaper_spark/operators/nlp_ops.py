@@ -55,12 +55,7 @@ def _nlp_batch(titles, texts, langs):
     raises, ``summarize()`` would raise at its own internal
     ``keywords()`` call, so both columns take their original fallbacks
     (``[]`` / ``""``)."""
-    from ..kernel.nlp import (
-        keywords,
-        score_sentences,
-        split_sentences,
-        split_words,
-    )
+    from ..kernel.nlp import keywords, summarize_with_keywords
 
     kw_out, sum_out = [], []
     for title, text, lang in zip(titles, texts, langs):
@@ -74,21 +69,8 @@ def _nlp_batch(titles, texts, langs):
             kws = None
             kw_out.append([])
         try:
-            if not text or not title:
-                sum_out.append("")
-            else:
-                if kws is None:
-                    raise ValueError("keywords failed")
-                # summarize(title, text, 5, lang) with kws shared
-                sentences = split_sentences(text)
-                ranks = score_sentences(
-                    sentences, split_words(title), kws, lang
-                ).most_common(5)
-                summaries = [rank[0] for rank in ranks]
-                summaries.sort(key=lambda summary: summary[0])
-                sum_out.append(
-                    "\n".join(summary[1] for summary in summaries)[:5000]
-                )
+            summary = "" if kws is None else summarize_with_keywords(title, text, kws, 5, lang)
+            sum_out.append(summary[:5000])
         except Exception:
             sum_out.append("")
     return pd.DataFrame({"keywords": kw_out, "summary": sum_out})

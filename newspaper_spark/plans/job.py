@@ -43,6 +43,23 @@ def salt_col(conv_col, turn_col, n_salts: int):
     return F.pmod(F.xxhash64(conv_col, turn_col), F.lit(n_salts)).cast("int")
 
 
+def _lineage_aggs() -> list:
+    """Per-bucket rows, errors and content checksum: the manifest's
+    lineage columns, shared by the commit-time stats and the audit."""
+    return [
+        F.count("*").alias("rows"),
+        F.sum(F.when(~F.col("status").eqNullSafe("ok"), 1).otherwise(0)).alias("errors"),
+        # XOR-fold: order-insensitive, overflow-free content hash
+        F.bit_xor(
+            F.xxhash64(
+                F.col("conv_id"),
+                F.col("turn_idx"),
+                F.coalesce(F.col("text"), F.lit("")),
+            )
+        ).alias("checksum"),
+    ]
+
+
 class ExtractionJob:
     def __init__(
         self,
@@ -74,18 +91,11 @@ class ExtractionJob:
         os.replace(tmp, self.manifest_path)  # atomic commit
 
     # -- run --------------------------------------------------------
-    def run(self, transcripts: DataFrame, fail_injector=None,
-            cache_input: bool = False) -> dict:
+    def run(self, transcripts: DataFrame, fail_injector=None) -> dict:
         """Process all not-yet-done buckets; returns the manifest.
 
         fail_injector(bucket_group) -> None | raise — test hook used by
         the resume test to simulate a mid-job crash.
-
-        cache_input: persist the bucketed input across commit groups —
-        right for bench-scale reruns. At real scale the input table is
-        stored WITH a bucket column (Iceberg bucket(conv_id) partition
-        transform), so each commit group's filter is partition pruning
-        on the scan instead of recompute-and-filter.
         """
         manifest = self.load_manifest()
         done = {
@@ -100,8 +110,6 @@ class ExtractionJob:
         with_bucket = transcripts.withColumn(
             "bucket", bucket_col(F.col("conv_id"), self.n_buckets)
         )
-        if cache_input:
-            with_bucket = with_bucket.persist()
 
         for start in range(0, len(todo), self.buckets_per_commit):
             group = todo[start : start + self.buckets_per_commit]
@@ -135,8 +143,6 @@ class ExtractionJob:
                     b, {"status": "done", "rows": 0, "errors": 0, "checksum": 0}
                 )
             self._save_manifest(manifest)
-        if cache_input:
-            with_bucket.unpersist()
         return manifest
 
     def _clean_bucket_dir(self, bucket: int) -> None:
@@ -158,24 +164,7 @@ class ExtractionJob:
         if not paths:
             return {}
         out = self.spark.read.option("basePath", self.output_dir).parquet(*paths)
-        rows = (
-            out.groupBy("bucket")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(
-                    F.when(~F.col("status").eqNullSafe("ok"), 1).otherwise(0)
-                ).alias("errors"),
-                # XOR-fold: order-insensitive, overflow-free content hash
-                F.bit_xor(
-                    F.xxhash64(
-                        F.col("conv_id"),
-                        F.col("turn_idx"),
-                        F.coalesce(F.col("text"), F.lit("")),
-                    )
-                ).alias("checksum"),
-            )
-            .collect()
-        )
+        rows = out.groupBy("bucket").agg(*_lineage_aggs()).collect()
         return {
             r["bucket"]: {
                 "status": "done",
@@ -199,23 +188,7 @@ def audit_output(spark: SparkSession, output_dir: str) -> dict:
     with open(os.path.join(output_dir, MANIFEST_NAME)) as f:
         manifest = json.load(f)
     out = spark.read.parquet(output_dir)
-    actual = (
-        out.groupBy("bucket")
-        .agg(
-            F.count("*").alias("rows"),
-            F.sum(
-                F.when(~F.col("status").eqNullSafe("ok"), 1).otherwise(0)
-            ).alias("errors"),
-            F.bit_xor(
-                F.xxhash64(
-                    F.col("conv_id"),
-                    F.col("turn_idx"),
-                    F.coalesce(F.col("text"), F.lit("")),
-                )
-            ).alias("checksum"),
-        )
-        .collect()
-    )
+    actual = out.groupBy("bucket").agg(*_lineage_aggs()).collect()
     actual_by_bucket = {
         r["bucket"]: (r["rows"], int(r["errors"] or 0), int(r["checksum"] or 0))
         for r in actual

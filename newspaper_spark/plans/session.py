@@ -48,10 +48,10 @@ def get_spark(
         # throughput-oriented collector: the extraction pipeline allocates
         # short-lived Arrow/row buffers at a high rate across many task
         # threads; ParallelGC measured ~10% over the default G1 on the
-        # 32-core extraction stage (interleaved medians, scripts/
-        # ab_extract.py), and never worse at 8 cores. Only takes effect
-        # when this session launches the JVM (always true for the
-        # pinned bench subprocesses).
+        # 32-core extraction stage (interleaved A/B in BENCH.md), and
+        # never worse at 8 cores. Only takes effect when this session
+        # launches the JVM (always true for the pinned bench
+        # subprocesses).
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC"),

@@ -49,16 +49,20 @@ sys.path.insert(0, str(REPO))
 DIM = 64
 BASE_N = 2000
 SEED_EVERY = 25
+RNG_SEED = 10007
 CACHE = REPO / ".ladder_cache"
 
 
 def build_input(spark, k: int) -> str:
-    """k x BASE_N fresh pseudo-random vectors, parquet-backed."""
-    out = CACHE / f"ann_x{k}"
+    """k x BASE_N fresh pseudo-random vectors, parquet-backed. The cache
+    directory is named by every value that shapes the vectors, so a
+    changed rung never reads a stale input."""
+    seed = RNG_SEED * k + 1
+    out = CACHE / f"ann_n{BASE_N * k}_d{DIM}_s{seed}"
     if not (out / "_SUCCESS").exists():
         import numpy as np
 
-        rng = np.random.RandomState(10007 * k + 1)
+        rng = np.random.RandomState(seed)
         vecs = rng.uniform(-1.0, 1.0, size=(BASE_N * k, DIM))
         rows = [
             (int(i), [float(x) for x in vecs[i]])
@@ -155,9 +159,8 @@ def main() -> None:
             "samples": samples,
             "us_per_candidate": round(med / max(cands, 1) * 1e6, 2),
         }
-        if n_planes == 32:
-            # production shape: results must be exactly the seeded set
-            assert pairs == seeded, (tag, pairs, seeded)
+        # every rung, 10-bit bands included, finds exactly the seeded set
+        assert pairs == seeded, (tag, pairs, seeded)
         result["rungs"][tag] = rung
         print(tag, json.dumps(rung), flush=True)
 

@@ -202,26 +202,39 @@ def test_composition_job_counts_bounded(spark):
     57 jobs, heavy_hitters ran 4 corpus passes) show up as JOB-COUNT
     blow-ups long before they show up in a benchmark. Pin the two
     heaviest compositions' job counts with slack: dclm_prep measured
-    30 jobs / warc_extract 5 jobs via job_count_probe at sf0.01
-    (BENCH.md round-7 audit). AQE makes counts mildly data/plan
-    dependent, so the bound is a ceiling, not an exact count."""
+    30 jobs / warc_extract 5 jobs at sf0.01 (BENCH.md round-7 audit).
+    AQE makes counts mildly data/plan dependent, so the bound is a
+    ceiling, not an exact count."""
     import __spark_entry__ as E
-    from newspaper_spark import cache
+    from newspaper_spark import cache, obs
 
-    sc = spark.sparkContext
     bounds = {"dclm_prep": 40, "warc_extract": 10}
     for name, bound in bounds.items():
-        group = f"jobcount_{name}"
-        sc.setJobGroup(group, name)
-        try:
-            with cache.tracking_scope():
-                E.queries()[name](spark, SF_DIR).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-        finally:
-            sc.setJobGroup(None, None)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert len(jobs) <= bound, (name, len(jobs))
+        with obs.profile(spark, name) as rec, cache.tracking_scope():
+            E.queries()[name](spark, SF_DIR).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        assert rec["jobs"] <= bound, (name, rec["jobs"])
+
+
+def test_obs_profile_record_with_ui_off(spark):
+    """obs.profile's record has one fixed key set; with the UI off (the
+    session default) the counts still come from the status tracker and
+    the REST-only sums stay None."""
+    from newspaper_spark import obs
+
+    assert spark.sparkContext.uiWebUrl is None
+    df = spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count()
+    with obs.profile(spark, "agg") as rec:
+        df.write.format("noop").mode("overwrite").save()
+    assert set(rec) == {
+        "name", "wall_s", "jobs", "stages", "tasks", "run_s", "cpu_s", "gc_s",
+        "shuffle_write_bytes", "spill_bytes", "output_bytes",
+    }
+    assert rec["name"] == "agg" and rec["wall_s"] > 0
+    assert rec["jobs"] > 0 and rec["stages"] > 0 and rec["tasks"] > 0
+    rest_only = set(rec) - {"name", "wall_s", "jobs", "stages", "tasks"}
+    assert all(rec[k] is None for k in rest_only)
 
 
 def test_badwords_blocklist_probes_are_broadcast(spark):
