@@ -20,6 +20,7 @@ import re
 from html.parser import HTMLParser
 
 from .element import COMMENT, Element, make_comment
+from .tokenizer import tokenize
 
 VOID_ELEMENTS = frozenset(
     "area base basefont br col command embed frame hr img input isindex "
@@ -277,11 +278,6 @@ class _TreeBuilder(HTMLParser):
         pass
 
 
-# the single-pass tokenizer is ~2× faster than HTMLParser.feed with
-# token-level parity (dom/tokenizer.py); flip off to fall back
-USE_FAST_TOKENIZER = True
-
-
 def parse_document(html: str) -> Element | None:
     """Parse an HTML string into an <html> root, or None on hard failure
     (mirrors Parser.fromstring returning None, parsers.py:59-72)."""
@@ -293,13 +289,10 @@ def parse_document(html: str) -> Element | None:
         return None
     builder = _TreeBuilder()
     try:
-        if USE_FAST_TOKENIZER:
-            from .tokenizer import tokenize
-
-            tokenize(html, builder)
-        else:
-            builder.feed(html)
-            builder.close()
+        # the single-pass tokenizer drives _TreeBuilder instead of
+        # HTMLParser.feed (dom/tokenizer.py; tests/test_dom.py pins the
+        # trees both build)
+        tokenize(html, builder)
     except Exception:
         return None
     return builder.root

@@ -1,12 +1,17 @@
 """Single-pass HTML tokenizer — a whole-input specialization of
-stdlib html.parser's goahead loop (~2× faster: no incremental-buffer
-bookkeeping, no updatepos, one dispatch loop).
+stdlib html.parser's goahead loop: no incremental-buffer bookkeeping,
+no updatepos, one dispatch loop. About 1.28× HTMLParser.feed: 0.35
+vs 0.45 s to build the trees of the 400 article pages in perfbench's
+job_resume input (seed 1), one process on a 4-core host.
 
-Token-level parity with html.parser(convert_charrefs=False) is kept by
-reusing its exact tolerant regexes (tagfind/attrfind/locatestarttagend)
-and mirroring its recovery paths; the golden corpus validates byte
-parity end-to-end. The builder receives the same handle_* calls
-_TreeBuilder implements.
+It reuses html.parser's tolerant regexes (tagfind/attrfind/
+locatestarttagend) and mirrors its recovery paths, and it makes the
+handle_* calls _TreeBuilder implements. On
+perfbench's generated pages it builds the same tree as HTMLParser.feed +
+close (tests/test_dom.py). It is NOT token-level identical on malformed
+input: the trees differ for unterminated script/style/textarea/title
+at EOF, a trailing ``<`` or bare ``&name`` at EOF, and C1 numeric
+references (``&#x80;``) in attribute values.
 """
 from __future__ import annotations
 

@@ -148,11 +148,12 @@ sentence_features_udf = F.pandas_udf(_sentence_features_batch, _SENT_FEATURES_TY
 
 
 def add_nlp(df: DataFrame, title_col="title", text_col="text", lang="en") -> DataFrame:
-    # one fused Arrow crossing; the struct's two fields are projected
-    # out of a SINGLE UDF evaluation (equal deterministic python-UDF
-    # expressions are deduplicated into one ArrowEvalPython slot —
-    # plan-pinned in tests/test_plan_shapes.py)
-    nlp = nlp_udf(F.col(title_col), F.col(text_col), F.lit(lang))
-    return df.withColumns(
-        {"keywords": nlp["keywords"], "summary": nlp["summary"]}
+    # one fused Arrow crossing: the struct is materialised once as a
+    # column and both fields are projected from it (one ArrowEvalPython
+    # slot — plan-pinned in tests/test_plan_shapes.py)
+    nlp = F.col("_nlp")
+    return (
+        df.withColumn("_nlp", nlp_udf(F.col(title_col), F.col(text_col), F.lit(lang)))
+        .withColumns({"keywords": nlp["keywords"], "summary": nlp["summary"]})
+        .drop("_nlp")
     )

@@ -167,3 +167,26 @@ def test_xml_decl_stripped():
 def test_invalid_returns_none():
     assert fromstring("") is None
     assert fromstring("   ") is None
+
+
+def test_tokenizer_builds_html_parser_trees_on_generated_pages():
+    """parse_document drives _TreeBuilder with dom/tokenizer.py; the stdlib
+    HTMLParser.feed + close path must build the identical tree for every
+    turn of perfbench's job_resume input. Media payloads (extraction
+    skips them) and the malformed-input classes the tokenizer does not
+    match (see its docstring) are outside this claim."""
+    from newspaper_spark.dom.htmlparser import _TreeBuilder
+    from perfbench.gen import job_transcripts
+
+    n = 0
+    for seed in (1, 2, 3):
+        for turn in job_transcripts(seed, 800):
+            if not turn.text or turn.expected_status == "skipped_media":
+                continue
+            ref = _TreeBuilder()
+            ref.feed(turn.text)
+            ref.close()
+            assert outer_html(parse_document(turn.text)) == outer_html(ref.root), (
+                seed, turn.key)
+            n += 1
+    assert n > 2000

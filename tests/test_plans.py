@@ -90,3 +90,39 @@ def test_minhash_band_join_is_hash_partitioned(spark):
     plan = _plan(minhash_lsh_pairs(docs, num_hashes=8, bands=4))
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
+
+
+def test_get_spark_defaults_to_usable_cores(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset, get_spark asks for local[N] with N
+    the cores this process may run on. SparkSession.builder is replaced
+    by a recorder, so no second JVM starts."""
+    import os
+    import types
+
+    import pytest
+
+    from newspaper_spark.plans import session
+
+    conf = {}
+
+    class Builder:
+        def master(self, url):
+            return self.config("master", url)
+
+        def appName(self, name):
+            return self
+
+        def config(self, key, value):
+            conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            raise LookupError("recorded")
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=Builder()))
+    with pytest.raises(LookupError, match="recorded"):
+        session.get_spark()
+    n = len(os.sched_getaffinity(0))
+    assert conf["master"] == f"local[{n}]"
+    assert conf["spark.sql.shuffle.partitions"] == str(max(n, 8))
