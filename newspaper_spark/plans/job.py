@@ -15,7 +15,11 @@ partial failure. Design:
   are recomputed and their directories overwritten (dynamic partition
   overwrite ⇒ idempotent, Iceberg-snapshot-equivalent in plain parquet).
 * Lineage: per-bucket row count, error count and an order-insensitive
-  content checksum (sum of per-row xxhash64), written into the manifest.
+  content checksum (XOR fold of per-row xxhash64), observed on the
+  write itself (``DataFrame.observe``) and written into the manifest.
+  ``audit_output`` recomputes them from a re-read of the output: it
+  stays independent because a stage resubmitted after a fetch failure
+  can double-count observed metrics.
 
 On a real cluster the same structure maps onto Iceberg: bucket(conv_id)
 partition transform + snapshot-isolated overwrite of failed partitions.
@@ -27,7 +31,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_articles
@@ -43,20 +47,20 @@ def salt_col(conv_col, turn_col, n_salts: int):
     return F.pmod(F.xxhash64(conv_col, turn_col), F.lit(n_salts)).cast("int")
 
 
-def _lineage_aggs() -> list:
-    """Per-bucket rows, errors and content checksum: the manifest's
-    lineage columns, shared by the commit-time stats and the audit."""
+def _lineage_aggs(where: str = "true", suffix: str = "") -> list:
+    """Rows, errors and content checksum over the rows where the SQL
+    predicate ``where`` holds: the manifest's lineage columns, shared by
+    the write-time observation (one ``bucket = b`` predicate per bucket,
+    names suffixed ``_b``) and the audit's ``groupBy("bucket")``. SQL
+    text keeps them cheap to build: one Py4J call per aggregate."""
     return [
-        F.count("*").alias("rows"),
-        F.sum(F.when(~F.col("status").eqNullSafe("ok"), 1).otherwise(0)).alias("errors"),
+        F.expr(f"count_if({where}) AS rows{suffix}"),
+        F.expr(f"count_if(({where}) AND NOT (status <=> 'ok')) AS errors{suffix}"),
         # XOR-fold: order-insensitive, overflow-free content hash
-        F.bit_xor(
-            F.xxhash64(
-                F.col("conv_id"),
-                F.col("turn_idx"),
-                F.coalesce(F.col("text"), F.lit("")),
-            )
-        ).alias("checksum"),
+        F.expr(
+            f"bit_xor(if({where}, xxhash64(conv_id, turn_idx, coalesce(text, '')), NULL))"
+            f" AS checksum{suffix}"
+        ),
     ]
 
 
@@ -129,6 +133,14 @@ class ExtractionJob:
             # stable (conv_id, turn_idx) ordering within each output file
             extracted = extracted.sortWithinPartitions("conv_id", "turn_idx")
 
+            # lineage observed on the write itself: no second job re-reads
+            # the group's buckets
+            observation = Observation()
+            extracted = extracted.observe(
+                observation,
+                *[a for b in group for a in _lineage_aggs(f"bucket = {b}", f"_{b}")],
+            )
+
             for b in group:
                 self._clean_bucket_dir(b)
             (
@@ -137,7 +149,7 @@ class ExtractionJob:
                 .parquet(self.output_dir)
             )
 
-            stats = self._bucket_stats(group)
+            stats = self._bucket_stats(group, observation.get)
             for b in group:
                 manifest["buckets"][str(b)] = stats.get(
                     b, {"status": "done", "rows": 0, "errors": 0, "checksum": 0}
@@ -150,29 +162,19 @@ class ExtractionJob:
         if os.path.isdir(d):
             shutil.rmtree(d)  # idempotent overwrite of a failed partition
 
-    def _bucket_stats(self, group) -> dict:
-        # read ONLY this commit group's bucket dirs: scanning the whole
-        # output root per group would re-list every earlier bucket —
-        # O(groups²) listing amplification over a long job. basePath
-        # keeps the bucket partition column; buckets that wrote zero
-        # rows have no dir and fall back to the caller's default entry.
-        paths = [
-            p
-            for b in group
-            if os.path.isdir(p := os.path.join(self.output_dir, f"bucket={b}"))
-        ]
-        if not paths:
-            return {}
-        out = self.spark.read.option("basePath", self.output_dir).parquet(*paths)
-        rows = out.groupBy("bucket").agg(*_lineage_aggs()).collect()
+    def _bucket_stats(self, group, observed: dict) -> dict:
+        """Manifest entries from the write's observed metrics; buckets
+        that wrote zero rows are left to the caller's default entry.
+        Starts no Spark job."""
         return {
-            r["bucket"]: {
+            b: {
                 "status": "done",
-                "rows": r["rows"],
-                "errors": int(r["errors"] or 0),
-                "checksum": int(r["checksum"] or 0),
+                "rows": observed[f"rows_{b}"],
+                "errors": observed[f"errors_{b}"],
+                "checksum": int(observed[f"checksum_{b}"] or 0),
             }
-            for r in rows
+            for b in group
+            if observed[f"rows_{b}"]
         }
 
 

@@ -58,6 +58,18 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC"),
         )
     )
+    # Python workers fork from a daemon that first drops the Spark
+    # archives the installed pyspark/py4j duplicate: pyspark's per-task
+    # importlib.invalidate_caches() otherwise re-reads their zip
+    # directories, and task launch to a no-op UDF's first call took
+    # 159–312 ms instead of 73–89 ms (4-core host, BENCH.md "Python
+    # worker fixed cost per task"). The daemon lives in this package,
+    # so the workers get its parent on their path whatever the driver's
+    # working directory (extra_conf may still set another path).
+    package_parent = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    builder = builder.config(
+        "spark.python.daemon.module", "newspaper_spark.worker_daemon"
+    ).config("spark.executorEnv.PYTHONPATH", package_parent)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
