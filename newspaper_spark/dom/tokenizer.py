@@ -8,10 +8,12 @@ It reuses html.parser's tolerant regexes (tagfind/attrfind/
 locatestarttagend) and mirrors its recovery paths, and it makes the
 handle_* calls _TreeBuilder implements. On
 perfbench's generated pages it builds the same tree as HTMLParser.feed +
-close (tests/test_dom.py). It is NOT token-level identical on malformed
-input: the trees differ for unterminated script/style/textarea/title
-at EOF, a trailing ``<`` or bare ``&name`` at EOF, and C1 numeric
-references (``&#x80;``) in attribute values.
+close (tests/test_dom.py). On malformed input its handle_* calls match
+HTMLParser's except in the cases named in
+tests/test_tokenizer_differential.py: markup or a bare ``&x``/``&#``
+left open at EOF, unterminated script/style at EOF, a ``&#`` that starts
+no reference before a later ``;``, a CDATA-like section holding ``]>``,
+and C1/control numeric references (``&#x80;``) in attribute values.
 """
 from __future__ import annotations
 

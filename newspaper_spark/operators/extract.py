@@ -161,8 +161,9 @@ def extract_articles(
             F.col(text_col), url_expr, F.lit(include_article_html)
         ),
     )
-    cols = keep + [F.col(f"article.{n}").alias(n) for n, _ in ARTICLE_FIELDS]
-    return enriched.select(*cols)
+    # one star expansion, not 21 aliased field projections: the same
+    # optimized plan for ~half the driver's plan-building time
+    return enriched.select(*keep, "article.*")
 
 
 def extract_articles_packed(
@@ -192,8 +193,7 @@ def extract_articles_packed(
             F.col(packed_col), url_expr, F.lit(include_article_html)
         ),
     )
-    cols = keep + [F.col(f"article.{n}").alias(n) for n, _ in ARTICLE_FIELDS]
-    return enriched.select(*cols)
+    return enriched.select(*keep, "article.*")
 
 
 def extract_fulltext(

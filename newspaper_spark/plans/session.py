@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .. import jvm
+
 
 def get_spark(
     app_name: str = "newspaper-spark",
@@ -70,7 +72,18 @@ def get_spark(
     builder = builder.config(
         "spark.python.daemon.module", "newspaper_spark.worker_daemon"
     ).config("spark.executorEnv.PYTHONPATH", package_parent)
+    # Without the native Hadoop library the stock local filesystem forks
+    # `chmod` for every file and directory a write creates: 107 forks per
+    # job_resume pass, and writing 800 rows from 4 tasks into 8 buckets
+    # (106 forks) took 0.99–1.04 s instead of 0.57–0.62 s (4-core host,
+    # BENCH.md "Hadoop local-FS chmod per created path"). jvm.py's
+    # filesystem makes the same chmod(2) call in-process.
+    conf = jvm.local_fs_conf()
     for k, v in (extra_conf or {}).items():
+        if k == "spark.driver.extraClassPath" and k in conf:
+            v = conf[k] + os.pathsep + v  # the filesystem class stays loadable
+        conf[k] = v
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
