@@ -3,10 +3,8 @@ from .htmlparser import fromstring, parse_document
 from .ops import drop_tag, drop_tree, remove_keep_tail, strip_tags
 from .select import (
     css_select,
-    find_attr_regex,
     find_by_tag,
     find_by_tags,
-    get_element_by_id,
     iter_comments,
 )
 from .serialize import node_to_html, outer_html
@@ -24,10 +22,8 @@ __all__ = [
     "remove_keep_tail",
     "strip_tags",
     "css_select",
-    "find_attr_regex",
     "find_by_tag",
     "find_by_tags",
-    "get_element_by_id",
     "iter_comments",
     "node_to_html",
     "outer_html",

@@ -6,8 +6,6 @@
 * ``find_attr_contains`` semantics — case-insensitive *substring* match
   on one attribute (the translate()+contains() xpath at
   parsers.py:121-122), folded into find_by_tag
-* ``find_attr_regex``    — case-insensitive regex search on one
-  attribute (the EXSLT re:test path, parsers.py:117-119)
 * ``css_select``    — the small CSS subset the reference passes to
   cssselect: tag, [attr], [attr=v], [attr~=v], [attr*=v], descendant
   combinator and comma groups.
@@ -27,16 +25,13 @@ from .element import Element, is_comment, is_element
 _UPPER_TO_LOWER = str.maketrans(string.ascii_uppercase, string.ascii_lowercase)
 
 
-def find_by_tag(root, tag=None, attr=None, value=None, use_regex=False):
+def find_by_tag(root, tag=None, attr=None, value=None):
     """descendant-or-self search; mirrors getElementsByTag's quirk of
     dropping the root itself from results when a tag is given."""
     results = []
     check_attr = attr is not None and value is not None
     if check_attr:
-        if use_regex:
-            rx = re.compile(value, re.IGNORECASE)
-        else:
-            low = value.lower()
+        low = value.lower()
     stack = [root]
     pop = stack.pop
     push = stack.extend
@@ -56,12 +51,7 @@ def find_by_tag(root, tag=None, attr=None, value=None, use_regex=False):
                 continue
         if check_attr:
             av = node.attrib.get(attr)
-            if av is None:
-                continue
-            if use_regex:
-                if not rx.search(av):
-                    continue
-            elif low not in av.translate(_UPPER_TO_LOWER):
+            if av is None or low not in av.translate(_UPPER_TO_LOWER):
                 continue
         results.append(node)
     return results
@@ -133,29 +123,6 @@ def find_by_tags(root, tags) -> list:
     return results
 
 
-def find_attr_regex(root, attr: str, pattern: str) -> list:
-    rx = re.compile(pattern, re.IGNORECASE)
-    search = rx.search
-    results = []
-    stack = [root]
-    pop = stack.pop
-    push = stack.extend
-    while stack:
-        node = pop()
-        children = node._children
-        if children:
-            # NOTE: the [::-1] slice beats extend(reversed(...)) here —
-            # slice+extend is two C memcpys, the iterator pays per-item
-            # dispatch (measured on the 300-page kernel bench)
-            push(children[::-1])
-        if node.tag.__class__ is not str:
-            continue
-        av = node.attrib.get(attr)
-        if av is not None and search(av):
-            results.append(node)
-    return results
-
-
 def iter_comments(root) -> list:
     out = []
     stack = [root]
@@ -167,16 +134,6 @@ def iter_comments(root) -> list:
         if is_comment(node):
             out.append(node)
     return out
-
-
-def get_element_by_id(root, idd):
-    stack = [root]
-    while stack:
-        node = stack.pop()
-        if node.tag.__class__ is str and node.attrib.get("id") == idd:
-            return node
-        stack.extend(node._children[::-1])
-    return None
 
 
 # ---------------------------------------------------------------------------

@@ -17,7 +17,6 @@ MIN_WORD_COUNT = 300  # configuration.py:29
 MIN_SENT_COUNT = 7  # configuration.py:30
 MAX_TITLE = 200
 MAX_TEXT = 100000
-MAX_SUMMARY = 5000
 
 _MEDIA_PATHS = [
     "/video", "/slide", "/gallery", "/powerpoint", "/fashion", "/glamour",
@@ -88,10 +87,6 @@ def url_filetype_col(url: Column) -> Column:
     path = F.parse_url(url, F.lit("PATH"))
     trimmed = F.regexp_replace(path, r"/$", "")
     return F.lower(F.regexp_extract(trimmed, r"\.([A-Za-z0-9]{1,5})$", 1))
-
-
-def url_domain_col(url: Column) -> Column:
-    return F.parse_url(url, F.lit("HOST"))
 
 
 def truncate_title(c: Column) -> Column:

@@ -71,9 +71,7 @@ def _empty(status="parse_failed"):
     return rec
 
 
-def extract_article(html: str, url: str = "", language: str = "en",
-                    use_meta_language: bool = True,
-                    keep_article_html: bool = False) -> dict:
+def extract_article(html: str, url: str = "", keep_article_html: bool = False) -> dict:
     """Full Article.parse() equivalent on one HTML payload."""
     if not html or not isinstance(html, str):
         return _empty("no_html")
@@ -102,8 +100,7 @@ def extract_article(html: str, url: str = "", language: str = "en",
 
     meta_lang = get_meta_lang(clean_doc, midx)
     rec["meta_lang"] = meta_lang
-    if use_meta_language and meta_lang:
-        language = meta_lang
+    language = meta_lang or "en"
 
     rec["meta_favicon"] = get_favicon(clean_doc, midx)
     rec["meta_site_name"] = get_meta_site_name(clean_doc, midx)

@@ -1,4 +1,6 @@
-"""DocumentCleaner: 15 sequential DOM rewrites before scoring.
+"""DocumentCleaner: the reference's sequential DOM rewrites before
+scoring; all but the three div_to_para passes find their targets in
+one tree walk.
 
 From-scratch re-expression of /root/reference/newspaper/cleaners.py
 (semantics, not code): strip naughty-id/class nodes, scripts/styles/
@@ -12,14 +14,11 @@ import re
 
 from ..dom import (
     Element,
-    css_select,
     drop_tag,
-    find_attr_regex,
     find_by_tag,
     find_by_tags,
     fromstring,
     is_comment,
-    iter_comments,
     outer_html,
     remove_keep_tail,
 )
@@ -39,13 +38,6 @@ REMOVE_NODES_RE = (
     "|konafilter|KonaFilter|breadcrumbs|^fn$|wp-caption-text"
     "|legende|ajoutVideo|timestamp|js_replies"
 )
-
-CAPTION_RE = "^caption$"
-GOOGLE_RE = " google "
-ENTRIES_RE = "^[^entry-]more.*$"
-FACEBOOK_RE = "[^-]facebook"
-FACEBOOK_BROADCASTING_RE = "facebook-broadcasting"
-TWITTER_RE = "[^-]twitter"
 
 _DIV_TO_P_TAGS = ["a", "blockquote", "dl", "div", "img", "ol", "p", "pre", "table", "ul"]
 
@@ -79,15 +71,19 @@ def clean_document(doc: Element) -> Element:
     """Steps 1–7 (body class, article attrs, em drop, dropcaps,
     scripts/styles/comments, naughty/pattern removals, p-span drop)
     collect their targets in ONE pre-order walk (_collect_clean_targets)
-    and then apply mutations in the reference's pass order — the
-    per-pass target sets are invariant under the earlier passes'
-    mutations (attr pops touch no structure; drop_tag keeps descendants
+    and then apply mutations in the reference's pass order. The walk
+    matches each node as the reference's pass would see it: the first
+    body's class and every article's id/name/class are already popped
+    by passes 1–2 when the naughty and pattern regexes run (else a
+    ``<body class="comments-open">`` takes the whole page with it, the
+    case the reference pops the class for), and like getElementsByTag
+    those two passes skip the root. The other target sets are invariant
+    under the earlier passes' mutations (drop_tag keeps descendants
     live; a node already detached by an earlier removal is re-processed
-    inside its detached subtree, a no-op for the final tree — verified
-    byte-exact on the golden corpus). div_to_para stays a per-pass
-    snapshot: its replacement re-parse can CREATE elements that the
-    reference's later span/section snapshots pick up, so pre-collection
-    would diverge."""
+    inside its detached subtree, a no-op for the final tree). div_to_para
+    stays a per-pass snapshot: its replacement re-parse can CREATE
+    elements that the reference's later span/section snapshots pick up,
+    so pre-collection would diverge."""
     targets = _collect_clean_targets(doc)
     if targets.body is not None:
         targets.body.attrib.pop("class", None)
@@ -185,15 +181,17 @@ def _collect_clean_targets(doc: Element) -> _CleanTargets:
         elif tag == "style":
             t.styles.append(node)
         elif tag == "article":
-            t.articles.append(node)
+            if node is not doc:
+                t.articles.append(node)
+                continue  # no id/name/class left to match
         elif tag == "body":
-            if t.body is None:
+            if t.body is None and node is not doc:
                 t.body = node
         attrib = node.attrib
         if not attrib:
             continue
         id_v = attrib.get("id")
-        class_v = attrib.get("class")
+        class_v = attrib.get("class") if node is not t.body else None
         if tag == "span" and class_v is not None:
             toks = class_v.split()
             if "dropcap" in toks or "drop_cap" in toks:
@@ -212,112 +210,6 @@ def _collect_clean_targets(doc: Element) -> _CleanTargets:
                 if class_v is not None and rx.search(class_v):
                     t.extra[k][1].append(node)
     return t
-
-
-def _clean_bad_and_pattern_tags(doc: Element) -> None:
-    """clean_bad_tags + the six remove_nodes_regex passes
-    (cleaners.py:60-67, 121-145) with ONE tree walk instead of 15.
-
-    Matches are pre-collected per (pattern, attr) bucket in document
-    order, then removals run in the reference's pass order. A node
-    already detached by an earlier pass is re-removed inside its
-    detached subtree — a no-op for the final tree, identical output
-    (verified byte-exact on the golden corpus)."""
-    # buckets: naughty×(id,class,name), then per extra pattern ×(id,class)
-    n_extra = len(_PATTERN_RXS)
-    naughty = ([], [], [])
-    extra = [([], []) for _ in range(n_extra)]
-    stack = [doc]
-    while stack:
-        node = stack.pop()
-        children = node._children
-        if children:
-            stack.extend(children[::-1])
-        if node.tag.__class__ is not str:
-            continue
-        attrib = node.attrib
-        if not attrib:
-            continue
-        id_v = attrib.get("id")
-        class_v = attrib.get("class")
-        name_v = attrib.get("name")
-        if id_v is not None and _NAUGHTY_RX.search(id_v):
-            naughty[0].append(node)
-        if class_v is not None and _NAUGHTY_RX.search(class_v):
-            naughty[1].append(node)
-        if name_v is not None and _NAUGHTY_RX.search(name_v):
-            naughty[2].append(node)
-        for k, rx in enumerate(_PATTERN_RXS):
-            if id_v is not None and rx.search(id_v):
-                extra[k][0].append(node)
-            if class_v is not None and rx.search(class_v):
-                extra[k][1].append(node)
-    for bucket in naughty:
-        for node in bucket:
-            if not _has_article_descendant(node):
-                remove_keep_tail(node)
-    for k in range(n_extra):
-        for bucket in extra[k]:
-            for node in bucket:
-                remove_keep_tail(node)
-
-
-def clean_body_classes(doc):
-    elements = find_by_tag(doc, tag="body")
-    if elements:
-        elements[0].attrib.pop("class", None)
-    return doc
-
-
-def clean_article_tags(doc):
-    for article in find_by_tag(doc, tag="article"):
-        for attr in ("id", "name", "class"):
-            article.attrib.pop(attr, None)
-    return doc
-
-
-def clean_em_tags(doc):
-    for node in find_by_tag(doc, tag="em"):
-        if not find_by_tag(node, tag="img"):
-            drop_tag(node)
-    return doc
-
-
-def remove_drop_caps(doc):
-    for item in css_select(doc, "span[class~=dropcap], span[class~=drop_cap]"):
-        drop_tag(item)
-    return doc
-
-
-def remove_scripts_styles(doc):
-    for item in find_by_tag(doc, tag="script"):
-        remove_keep_tail(item)
-    for item in find_by_tag(doc, tag="style"):
-        remove_keep_tail(item)
-    for item in iter_comments(doc):
-        remove_keep_tail(item)
-    return doc
-
-
-def clean_bad_tags(doc):
-    for attr in ("id", "class", "name"):
-        for node in find_attr_regex(doc, attr, REMOVE_NODES_RE):
-            if not _has_article_descendant(node):
-                remove_keep_tail(node)
-    return doc
-
-
-def remove_nodes_regex(doc, pattern):
-    for selector in ("id", "class"):
-        for node in find_attr_regex(doc, selector, pattern):
-            remove_keep_tail(node)
-    return doc
-
-
-def clean_para_spans(doc):
-    for item in css_select(doc, "p span"):
-        drop_tag(item)
-    return doc
 
 
 def _get_text(node: Element) -> str:

@@ -20,8 +20,8 @@ from ..dom import (
     css_select,
     find_by_tag,
     find_by_tags,
-    node_to_html,
 )
+from ..dom.select import _UPPER_TO_LOWER
 from .scorer import get_text
 from .urlutils import STRICT_DATE_REGEX
 
@@ -212,14 +212,18 @@ def _split_title(title: str, splitter, hint=None) -> str:
 class MetaIndex:
     """One-walk collection of <meta> and <link> elements — the metadata
     pass queries these lists instead of re-scanning the tree (the
-    reference's repeated css_select/xpath calls are the analog)."""
+    reference's repeated css_select/xpath calls are the analog).
+
+    ``metas`` follows lxml's cssselect, which translates selectors with
+    ``descendant-or-self::``, so a ``<meta>`` root is in it. The lookups
+    the reference makes with getElementsByTag (meta-lang, favicon,
+    canonical link, the img_src link) drop the root: ``links`` never
+    holds it and get_meta_lang skips it."""
 
     __slots__ = ("metas", "links")
 
     def __init__(self, doc: Element):
-        from ..dom import find_by_tags
-
-        self.metas = []
+        self.metas = [doc] if doc.tag == "meta" else []
         self.links = []
         for node in find_by_tags(doc, ("meta", "link")):
             (self.metas if node.tag == "meta" else self.links).append(node)
@@ -239,11 +243,8 @@ def _match_meta(metas, selector: str):
     return out
 
 
-def get_meta_content(doc: Element, metaname: str, index: "MetaIndex | None" = None) -> str:
-    if index is not None:
-        meta = _match_meta(index.metas, metaname)
-    else:
-        meta = css_select(doc, metaname)
+def get_meta_content(doc: Element, metaname: str, index: MetaIndex) -> str:
+    meta = _match_meta(index.metas, metaname)
     content = None
     if meta:
         content = meta[0].attrib.get("content")
@@ -252,7 +253,7 @@ def get_meta_content(doc: Element, metaname: str, index: "MetaIndex | None" = No
     return ""
 
 
-def get_title(doc: Element, index=None) -> str:
+def get_title(doc: Element, index: MetaIndex) -> str:
     title = ""
     title_element = find_by_tag(doc, tag="title")
     if not title_element:
@@ -326,40 +327,27 @@ def get_title(doc: Element, index=None) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _links_rel_contains(links, value: str):
+def _attr_contains(nodes, attr: str, value: str) -> list:
+    """find_by_tag's attribute test over an index list: ASCII
+    case-insensitive substring match (the reference's
+    translate()+contains() xpath)."""
     low = value.lower()
-    return [
-        l for l in links
-        if l.attrib.get("rel") is not None and low in l.attrib["rel"].lower()
-    ]
+    return [n for n in nodes if low in (n.attrib.get(attr) or "").translate(_UPPER_TO_LOWER)]
 
 
-def get_favicon(doc: Element, index: "MetaIndex | None" = None) -> str:
-    if index is not None:
-        meta = _links_rel_contains(index.links, "icon")
-    else:
-        meta = find_by_tag(doc, tag="link", attr="rel", value="icon")
+def get_favicon(doc: Element, index: MetaIndex) -> str:
+    meta = _attr_contains(index.links, "rel", "icon")
     if meta:
         return meta[0].attrib.get("href") or ""
     return ""
 
 
-def _metas_attr_contains(metas, attr, value):
-    low = value.lower()
-    return [
-        m for m in metas
-        if m.attrib.get(attr) is not None and low in m.attrib[attr].lower()
-    ]
-
-
-def get_meta_lang(doc: Element, index: "MetaIndex | None" = None):
+def get_meta_lang(doc: Element, index: MetaIndex):
     attr = doc.attrib.get("lang")
     if attr is None:
+        metas = [m for m in index.metas if m is not doc]  # getElementsByTag drops the root
         for a, v in (("http-equiv", "content-language"), ("name", "lang")):
-            if index is not None:
-                meta = _metas_attr_contains(index.metas, a, v)
-            else:
-                meta = find_by_tag(doc, tag="meta", attr=a, value=v)
+            meta = _attr_contains(metas, a, v)
             if meta:
                 attr = meta[0].attrib.get("content")
                 break
@@ -370,28 +358,27 @@ def get_meta_lang(doc: Element, index: "MetaIndex | None" = None):
     return None
 
 
-def get_meta_type(doc: Element, index=None) -> str:
+def get_meta_type(doc: Element, index: MetaIndex) -> str:
     return get_meta_content(doc, 'meta[property="og:type"]', index)
 
 
-def get_meta_site_name(doc: Element, index=None) -> str:
+def get_meta_site_name(doc: Element, index: MetaIndex) -> str:
     return get_meta_content(doc, 'meta[property="og:site_name"]', index)
 
 
-def get_meta_description(doc: Element, index=None) -> str:
+def get_meta_description(doc: Element, index: MetaIndex) -> str:
     return get_meta_content(doc, "meta[name=description]", index)
 
 
-def get_meta_keywords(doc: Element, index=None) -> str:
+def get_meta_keywords(doc: Element, index: MetaIndex) -> str:
     return get_meta_content(doc, "meta[name=keywords]", index)
 
 
-def get_meta_data(doc: Element, index=None) -> dict:
+def get_meta_data(doc: Element, index: MetaIndex) -> dict:
     """Nested meta dict with ':'-split keys and int coercion
     (extractors.py:492-529)."""
     data = defaultdict(dict)
-    metas = index.metas if index is not None else css_select(doc, "meta")
-    for prop in metas:
+    for prop in index.metas:
         key = prop.attrib.get("property") or prop.attrib.get("name")
         value = prop.attrib.get("content") or prop.attrib.get("value")
         if not key or not value:
@@ -420,11 +407,8 @@ def get_meta_data(doc: Element, index=None) -> dict:
     return data
 
 
-def get_canonical_link(article_url: str, doc: Element, index=None) -> str:
-    if index is not None:
-        links = _links_rel_contains(index.links, "canonical")
-    else:
-        links = find_by_tag(doc, tag="link", attr="rel", value="canonical")
+def get_canonical_link(article_url: str, doc: Element, index: MetaIndex) -> str:
+    links = _attr_contains(index.links, "rel", "canonical")
     canonical = links[0].attrib.get("href", "") if links else ""
     og_url = get_meta_content(doc, 'meta[property="og:url"]', index)
     meta_url = canonical or og_url or ""
@@ -486,27 +470,16 @@ def get_first_img_url(article_url: str, top_node: Element) -> str:
 _IMG_SRC_RX = re.compile("img_src|image_src", re.IGNORECASE)
 
 
-def get_meta_img_url(article_url: str, doc: Element, index=None) -> str:
+def get_meta_img_url(article_url: str, doc: Element, index: MetaIndex) -> str:
     top_meta_image, try_one, try_two, try_three, try_four = [None] * 5
     try_one = get_meta_content(doc, 'meta[property="og:image"]', index) or None
     if try_one is None:
-        if index is not None:
-            elems = [
-                l for l in index.links
-                if l.attrib.get("rel") is not None and _IMG_SRC_RX.search(l.attrib["rel"])
-            ]
-        else:
-            elems = find_by_tag(
-                doc, tag="link", attr="rel", value="img_src|image_src", use_regex=True
-            )
+        elems = [l for l in index.links if _IMG_SRC_RX.search(l.attrib.get("rel") or "")]
         try_two = elems[0].attrib.get("href") if elems else None
         if not try_two:
             try_three = get_meta_content(doc, 'meta[name="og:image"]', index) or None
             if try_three is None:
-                if index is not None:
-                    elems = _links_rel_contains(index.links, "icon")
-                else:
-                    elems = find_by_tag(doc, tag="link", attr="rel", value="icon")
+                elems = _attr_contains(index.links, "rel", "icon")
                 try_four = elems[0].attrib.get("href") if elems else None
     top_meta_image = try_one or try_two or try_three or try_four
     if top_meta_image:

@@ -21,17 +21,6 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id string, kind string, n_bytes long, "

@@ -219,7 +219,7 @@ def extract_page_links(
 
 def _source_meta_batch(source_urls, htmls):
     from ..dom.htmlparser import fromstring
-    from ..kernel.metadata import get_meta_description
+    from ..kernel.metadata import MetaIndex, get_meta_description
     from ..kernel.urlutils import extract_domain
 
     brands, descs = [], []
@@ -230,7 +230,7 @@ def _source_meta_batch(source_urls, htmls):
             brands.append("")
         try:
             doc = fromstring(html or "")
-            descs.append(get_meta_description(doc) if doc is not None else "")
+            descs.append(get_meta_description(doc, MetaIndex(doc)) if doc is not None else "")
         except Exception:
             descs.append("")
     return pd.DataFrame({"brand": brands, "description": descs})

@@ -11,9 +11,11 @@ partial failure. Design:
   ``pmod(xxhash64(conv_id, turn_idx), salt)`` before the UDF stage so a
   mega-conversation can't serialize one task (explicit skew handling).
 * A JSON checkpoint manifest records bucket → {status, rows, errors,
-  checksum}. Re-running skips ``done`` buckets; failed/missing buckets
-  are recomputed and their directories overwritten (dynamic partition
-  overwrite ⇒ idempotent, Iceberg-snapshot-equivalent in plain parquet).
+  checksum} and the bucket count it was hashed with; resuming with a
+  different count is refused. Re-running skips ``done`` buckets;
+  failed/missing buckets are recomputed: their ``bucket=b`` directories
+  are deleted and the group is appended afresh (idempotent,
+  Iceberg-snapshot-equivalent in plain parquet).
 * Lineage: per-bucket row count, error count and an order-insensitive
   content checksum (XOR fold of per-row xxhash64), observed on the
   write itself (``DataFrame.observe``) and written into the manifest.
@@ -102,6 +104,12 @@ class ExtractionJob:
         the resume test to simulate a mid-job crash.
         """
         manifest = self.load_manifest()
+        if manifest["n_buckets"] != self.n_buckets:
+            # the done buckets were hashed modulo the stored count
+            raise ValueError(
+                f"{self.output_dir} was written with n_buckets={manifest['n_buckets']}, "
+                f"not {self.n_buckets}"
+            )
         done = {
             int(b)
             for b, info in manifest["buckets"].items()
@@ -186,7 +194,9 @@ def audit_output(spark: SparkSession, output_dir: str) -> dict:
     """Lineage audit: recompute per-bucket (rows, errors, checksum) from
     the written output and compare against the checkpoint manifest.
     Returns {'ok': bool, 'mismatches': [...]} — the integrity check a
-    10^12-turn run would execute before promoting a snapshot."""
+    10^12-turn run would execute before promoting a snapshot. Rows in a
+    bucket the manifest does not mark done are a mismatch too
+    (``manifest: None``): read_output would return them unverified."""
     with open(os.path.join(output_dir, MANIFEST_NAME)) as f:
         manifest = json.load(f)
     out = spark.read.parquet(output_dir)
@@ -195,12 +205,13 @@ def audit_output(spark: SparkSession, output_dir: str) -> dict:
         r["bucket"]: (r["rows"], int(r["errors"] or 0), int(r["checksum"] or 0))
         for r in actual
     }
-    mismatches = []
-    for b, info in manifest["buckets"].items():
-        if info.get("status") != "done":
-            continue
-        got = actual_by_bucket.get(int(b), (0, 0, 0))
+    done = {int(b): info for b, info in manifest["buckets"].items()
+            if info.get("status") == "done"}
+    mismatches = [{"bucket": b, "manifest": None, "actual": got}
+                  for b, got in sorted(actual_by_bucket.items()) if b not in done]
+    for b, info in done.items():
+        got = actual_by_bucket.get(b, (0, 0, 0))
         want = (info["rows"], info["errors"], info["checksum"])
         if got != want and not (info["rows"] == 0 and got == (0, 0, 0)):
-            mismatches.append({"bucket": int(b), "manifest": want, "actual": got})
+            mismatches.append({"bucket": b, "manifest": want, "actual": got})
     return {"ok": not mismatches, "mismatches": mismatches}

@@ -36,10 +36,6 @@ _REFERENCE_DATA = "/root/reference/tests/data"
 _ROLES = ["user", "assistant", "tool"]
 
 
-def reference_available() -> bool:
-    return os.path.isdir(_REFERENCE_DATA)
-
-
 # fixtures whose golden .txt uses a different stem (the reference's
 # language/cnn tests reference them explicitly, unit_tests.py:146-245,
 # 674-742)

@@ -2,11 +2,12 @@
 table.
 
   spark-submit --py-files dist/newspaper_spark.zip scripts/submit_job.py \
-      --input <parquet dir> --output <dir> [--buckets 64] [--resume]
+      --input <parquet dir> --output <dir> [--buckets 64] [--buckets-per-commit 16] [--salts 8]
 
 On a cluster, --master/--num-executors etc. come from spark-submit; in
 this sandbox it runs local-mode. The job writes bucketed parquet plus
-_manifest.json (per-bucket lineage) and resumes from the manifest.
+_manifest.json (per-bucket lineage). Re-running the same command
+resumes from the manifest; a different --buckets is refused.
 """
 import argparse
 import json

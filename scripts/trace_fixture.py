@@ -1,6 +1,10 @@
 """Debug helper: trace where a text snippet is lost in the pipeline.
 
-Usage: python scripts/trace_fixture.py <fixture-name> <snippet>
+Runs the stages extract_article runs, in its order: parse →
+clean_document → best node → post_cleanup → the formatter's steps, and
+prints after each whether the snippet is still in the tree.
+
+Usage: python scripts/trace_fixture.py <page.html> <snippet>
 """
 import pathlib
 import sys
@@ -9,24 +13,9 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from newspaper_spark.dom import fromstring
 from newspaper_spark.kernel import formatter as F
-from newspaper_spark.kernel.cleaner import (
-    clean_bad_tags,
-    clean_body_classes,
-    clean_article_tags,
-    clean_em_tags,
-    clean_para_spans,
-    div_to_para,
-    remove_drop_caps,
-    remove_nodes_regex,
-    remove_scripts_styles,
-    CAPTION_RE,
-    GOOGLE_RE,
-    ENTRIES_RE,
-    FACEBOOK_RE,
-    FACEBOOK_BROADCASTING_RE,
-    TWITTER_RE,
-)
-from newspaper_spark.kernel.metadata import get_meta_lang
+from newspaper_spark.kernel.article import extract_article
+from newspaper_spark.kernel.cleaner import clean_document
+from newspaper_spark.kernel.metadata import MetaIndex, get_meta_lang
 from newspaper_spark.kernel.scorer import calculate_best_node, post_cleanup
 
 
@@ -35,35 +24,17 @@ def has(node, snippet):
 
 
 def main():
-    name, snippet = sys.argv[1], sys.argv[2]
-    html = pathlib.Path(
-        f"/root/reference/tests/data/html/{name}.html"
-    ).read_text(encoding="utf-8")
+    path, snippet = sys.argv[1], sys.argv[2]
+    html = pathlib.Path(path).read_text(encoding="utf-8")
     doc = fromstring(html)
-    lang = get_meta_lang(doc) or "en"
+    if doc is None:
+        print("parse failed")
+        return
+    lang = get_meta_lang(doc, MetaIndex(doc)) or "en"
     print("lang:", lang)
     print("parsed:", has(doc, snippet))
-    steps = [
-        ("body_classes", clean_body_classes),
-        ("article_tags", clean_article_tags),
-        ("em_tags", clean_em_tags),
-        ("drop_caps", remove_drop_caps),
-        ("scripts", remove_scripts_styles),
-        ("bad_tags", clean_bad_tags),
-        ("caption", lambda d: remove_nodes_regex(d, CAPTION_RE)),
-        ("google", lambda d: remove_nodes_regex(d, GOOGLE_RE)),
-        ("entries", lambda d: remove_nodes_regex(d, ENTRIES_RE)),
-        ("facebook", lambda d: remove_nodes_regex(d, FACEBOOK_RE)),
-        ("fb-bcast", lambda d: remove_nodes_regex(d, FACEBOOK_BROADCASTING_RE)),
-        ("twitter", lambda d: remove_nodes_regex(d, TWITTER_RE)),
-        ("para_spans", clean_para_spans),
-        ("div2p-div", lambda d: div_to_para(d, "div")),
-        ("div2p-span", lambda d: div_to_para(d, "span")),
-        ("div2p-section", lambda d: div_to_para(d, "section")),
-    ]
-    for label, fn in steps:
-        doc = fn(doc)
-        print(f"after {label}: {has(doc, snippet)}")
+    doc = clean_document(doc)
+    print("after clean_document:", has(doc, snippet))
     top = calculate_best_node(doc, lang)
     if top is None:
         print("no top node")
@@ -72,6 +43,7 @@ def main():
     print("in top:", has(top, snippet))
     top = post_cleanup(top, lang)
     print("after post_cleanup:", has(top, snippet))
+    # get_formatted's steps, in its order
     for label, fn in [
         ("negscores", F.remove_negativescores_nodes),
         ("links", F.links_to_text),
@@ -83,8 +55,8 @@ def main():
     ]:
         fn(top)
         print(f"after {label}: {has(top, snippet)}")
-    out = F.convert_to_text(top)
-    print("in final text:", snippet in out)
+    print("in final text:", snippet in F.convert_to_text(top))
+    print("in extract_article text:", snippet in extract_article(html)["text"])
 
 
 if __name__ == "__main__":

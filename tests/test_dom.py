@@ -2,7 +2,6 @@
 from newspaper_spark.dom import (
     css_select,
     drop_tag,
-    find_attr_regex,
     find_by_tag,
     fromstring,
     iter_comments,
@@ -129,14 +128,6 @@ def test_find_by_tag_attr_contains():
     )
     found = find_by_tag(doc, attr="class", value="author")
     assert len(found) == 1
-
-
-def test_find_attr_regex():
-    doc = parse_document(
-        '<body><div id="sidebar">x</div><div id="main">y</div></body>'
-    )
-    found = find_attr_regex(doc, "id", "^side")
-    assert len(found) == 1 and found[0].attrib["id"] == "sidebar"
 
 
 def test_css_select():

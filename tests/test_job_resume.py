@@ -56,6 +56,10 @@ def test_job_resume_after_failure(spark, tmp_path):
     }
     assert 0 < len(done_after_crash) < 8  # partial progress checkpointed
 
+    # the done buckets were hashed modulo 8: another count must not resume
+    with pytest.raises(ValueError, match="n_buckets=8"):
+        ExtractionJob(spark, out_dir, n_buckets=4, buckets_per_commit=4).run(t)
+
     # resume: only remaining buckets processed; done buckets untouched
     processed_groups = []
     job2 = ExtractionJob(spark, out_dir, n_buckets=8, buckets_per_commit=4)
@@ -112,9 +116,20 @@ def test_audit_matches_manifest(spark, tmp_path):
     out_dir = str(tmp_path / "out")
     t = _small_transcripts(spark, 24)
     job = ExtractionJob(spark, out_dir, n_buckets=4, buckets_per_commit=4)
-    job.run(t)
+    manifest = job.run(t)
     report = audit_output(spark, out_dir)
     assert report["ok"], report["mismatches"]
+
+    # rows in a bucket whose entry is missing or not done are returned
+    # by read_output unverified: the audit must flag them
+    missing, failed = [b for b, e in sorted(manifest["buckets"].items()) if e["rows"]][:2]
+    del manifest["buckets"][missing]
+    manifest["buckets"][failed]["status"] = "failed"
+    job._save_manifest(manifest)
+    report = audit_output(spark, out_dir)
+    assert not report["ok"]
+    assert {(m["bucket"], m["manifest"]) for m in report["mismatches"]} == {
+        (int(missing), None), (int(failed), None)}
 
 
 def test_observed_lineage_matches_reread(spark, tmp_path):

@@ -110,65 +110,65 @@ def test_language_fixtures_exact(html_name, txt_name, lang):
 
 def test_get_title_simple():
     from newspaper_spark.dom import fromstring
-    from newspaper_spark.kernel.metadata import get_title
+    from newspaper_spark.kernel.metadata import MetaIndex, get_title
 
     doc = fromstring("<html><head><title>Test title</title></head></html>")
-    assert get_title(doc) == "Test title"
+    assert get_title(doc, MetaIndex(doc)) == "Test title"
 
 
 def test_get_title_pipe_split_prefers_h1_hint():
     from newspaper_spark.dom import fromstring
-    from newspaper_spark.kernel.metadata import get_title
+    from newspaper_spark.kernel.metadata import MetaIndex, get_title
 
     doc = fromstring(
         "<html><head><title>Wow thats a title | site.com</title></head>"
         "<body><h1>Wow thats a title</h1></body></html>"
     )
-    assert get_title(doc) == "Wow thats a title"
+    assert get_title(doc, MetaIndex(doc)) == "Wow thats a title"
 
 
 def test_get_title_dash_split():
     from newspaper_spark.dom import fromstring
-    from newspaper_spark.kernel.metadata import get_title
+    from newspaper_spark.kernel.metadata import MetaIndex, get_title
 
     doc = fromstring(
         "<html><head><title>This is a longer piece here - x</title></head></html>"
     )
-    assert get_title(doc) == "This is a longer piece here"
+    assert get_title(doc, MetaIndex(doc)) == "This is a longer piece here"
 
 
 def test_canonical_link_from_rel():
     from newspaper_spark.dom import fromstring
-    from newspaper_spark.kernel.metadata import get_canonical_link
+    from newspaper_spark.kernel.metadata import MetaIndex, get_canonical_link
 
     doc = fromstring(
         '<html><head><link rel="canonical" href="http://x.com/a"></head></html>'
     )
-    assert get_canonical_link("http://x.com/b", doc) == "http://x.com/a"
+    assert get_canonical_link("http://x.com/b", doc, MetaIndex(doc)) == "http://x.com/a"
 
 
 def test_canonical_link_og_url_fallback():
     from newspaper_spark.dom import fromstring
-    from newspaper_spark.kernel.metadata import get_canonical_link
+    from newspaper_spark.kernel.metadata import MetaIndex, get_canonical_link
 
     doc = fromstring(
         '<html><head><meta property="og:url" content="http://x.com/og"></head></html>'
     )
-    assert get_canonical_link("http://x.com/b", doc) == "http://x.com/og"
+    assert get_canonical_link("http://x.com/b", doc, MetaIndex(doc)) == "http://x.com/og"
 
 
 def test_meta_img_chain():
     from newspaper_spark.dom import fromstring
-    from newspaper_spark.kernel.metadata import get_meta_img_url
+    from newspaper_spark.kernel.metadata import MetaIndex, get_meta_img_url
 
     doc = fromstring(
         '<html><head><meta property="og:image" content="/img/a.png"></head></html>'
     )
-    assert get_meta_img_url("http://x.com/p", doc) == "http://x.com/img/a.png"
+    assert get_meta_img_url("http://x.com/p", doc, MetaIndex(doc)) == "http://x.com/img/a.png"
     doc2 = fromstring(
         '<html><head><link rel="image_src" href="/img/b.png"></head></html>'
     )
-    assert get_meta_img_url("http://x.com/p", doc2) == "http://x.com/img/b.png"
+    assert get_meta_img_url("http://x.com/p", doc2, MetaIndex(doc2)) == "http://x.com/img/b.png"
 
 
 def test_authors_byline():
@@ -208,7 +208,7 @@ def test_pubdate_from_meta():
 
 def test_meta_data_nested():
     from newspaper_spark.dom import fromstring
-    from newspaper_spark.kernel.metadata import get_meta_data
+    from newspaper_spark.kernel.metadata import MetaIndex, get_meta_data
 
     # og:image must come before og:image:width: the later flat key
     # would overwrite the nested dict (reference semantics,
@@ -218,7 +218,7 @@ def test_meta_data_nested():
         '<meta property="og:image:width" content="300">'
         '<meta name="simple" content="42"></head></html>'
     )
-    md = get_meta_data(doc)
+    md = get_meta_data(doc, MetaIndex(doc))
     assert md["simple"] == 42
     assert md["og"]["image"]["identifier"] == "http://x.com/i.png"
     assert md["og"]["image"]["width"] == 300
@@ -294,16 +294,67 @@ def test_split_sentences_initials():
     ]
 
 
+def test_meta_root_follows_css_for_meta_getters_only():
+    """A page that is one <meta> parses to that element. cssselect's
+    descendant-or-self:: sees it, getElementsByTag drops it."""
+    from newspaper_spark.dom import fromstring
+    from newspaper_spark.kernel.article import extract_article
+    from newspaper_spark.kernel.metadata import (
+        MetaIndex,
+        get_canonical_link,
+        get_favicon,
+        get_meta_data,
+        get_meta_description,
+        get_meta_lang,
+    )
+
+    html = '<meta name="description" content="x">'
+    doc = fromstring(html)
+    assert doc.tag == "meta"
+    index = MetaIndex(doc)
+    assert get_meta_description(doc, index) == "x"
+    assert get_meta_data(doc, index) == {"description": "x"}
+    rec = extract_article(html)
+    assert rec["meta_description"] == "x" and rec["meta_data_json"] == '{"description": "x"}'
+
+    lang = fromstring('<meta http-equiv="content-language" content="de">')
+    assert get_meta_lang(lang, MetaIndex(lang)) is None
+    link = fromstring('<link rel="canonical icon" href="http://x.com/a">')
+    assert get_canonical_link("", link, MetaIndex(link)) == ""
+    assert get_favicon(link, MetaIndex(link)) == ""
+
+
+@pytest.mark.parametrize("html", [
+    '<html><body class="page comments-open"><p>{}</p></body></html>',
+    '<html><body><article class="post tags-news" id="footer"><p>{}</p></article></body></html>',
+])
+def test_cleaner_matches_after_body_and_article_attrs_are_popped(html):
+    """The reference pops the first body's class and every article's
+    id/name/class before the naughty and pattern removals, so neither
+    can take the page with it; a naughty node elsewhere still goes."""
+    from newspaper_spark.dom import fromstring, outer_html
+    from newspaper_spark.kernel.article import extract_article
+    from newspaper_spark.kernel.cleaner import clean_document
+
+    para = "The council said that it would vote on the plan for the river next week. " * 4
+    html = html.format(para) + '<div class="footer">Footer text</div>'
+    cleaned = outer_html(clean_document(fromstring(html)))
+    assert "comments-open" not in cleaned and "tags-news" not in cleaned
+    assert para.strip() in cleaned and "Footer text" not in cleaned
+    assert extract_article(html)["text"] == para.strip()
+
+
 @requires_reference
 def test_cnn_meta_data_deep_equality():
     """Deep meta_data dict parity (reference unit_tests.py:255-301)."""
     from newspaper_spark.dom import fromstring
-    from newspaper_spark.kernel.metadata import get_meta_data, get_meta_type
+    from newspaper_spark.kernel.metadata import MetaIndex, get_meta_data, get_meta_type
 
     html = (DATA / "html" / "cnn_article.html").read_text(encoding="utf-8")
     doc = fromstring(html)
-    assert get_meta_type(doc) == "article"
-    meta = get_meta_data(doc)
+    index = MetaIndex(doc)
+    assert get_meta_type(doc, index) == "article"
+    meta = get_meta_data(doc, index)
     expected = {
         "medium": "news",
         "googlebot": "noarchive",
