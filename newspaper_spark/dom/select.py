@@ -211,12 +211,19 @@ def _parse_selector(selector: str):
 _SELECTOR_CACHE: dict = {}
 
 
-def css_select(root: Element, selector: str) -> list:
+def parsed_selector(selector: str):
+    """``_parse_selector(selector)``, cached for the first 512 selectors
+    (the kernel uses a fixed few dozen)."""
     groups = _SELECTOR_CACHE.get(selector)
     if groups is None:
         groups = _parse_selector(selector)
         if len(_SELECTOR_CACHE) < 512:
             _SELECTOR_CACHE[selector] = groups
+    return groups
+
+
+def css_select(root: Element, selector: str) -> list:
+    groups = parsed_selector(selector)
     out = []
     stack = [root]
     # fast path: every group is a single simple selector (the common

@@ -12,11 +12,11 @@ import string
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..kernel.article import MAX_TEXT, MAX_TITLE
+
 # --- constants from the reference ------------------------------------------
 MIN_WORD_COUNT = 300  # configuration.py:29
 MIN_SENT_COUNT = 7  # configuration.py:30
-MAX_TITLE = 200
-MAX_TEXT = 100000
 
 _MEDIA_PATHS = [
     "/video", "/slide", "/gallery", "/powerpoint", "/fashion", "/glamour",
@@ -24,6 +24,37 @@ _MEDIA_PATHS = [
 ]  # article.py:365-366
 
 _PUNCT = string.punctuation
+
+# Explicit ASCII whitespace class — byte-identical to Java regex \s
+# ([ \t\n\x0B\f\r]) but, unlike \s, read the SAME way by DuckDB's RE2
+# (whose \s lacks \x0B). Every cross-engine pattern must use this, never
+# bare \s, so Spark and the SQL oracle can't silently diverge.
+WS_CLASS = "[ \\t\\n\\x0B\\f\\r]"
+
+
+def normalized_text(c: Column) -> Column:
+    """Lowercase, collapse WS_CLASS runs to one space, trim: the
+    canonical text form every token, hash and n-gram operator reads.
+    Oracle: ``trim(regexp_replace(lower(x), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))``."""
+    return F.trim(F.regexp_replace(F.lower(c), WS_CLASS + "+", " "))
+
+
+def ws_tokens(c: Column) -> Column:
+    """Whitespace tokens of the normalized text (an empty text is one
+    '' token). Oracle: ``string_split(<normalized_text>, ' ')``."""
+    return F.split(normalized_text(c), " ")
+
+
+def md5_long(c: Column) -> Column:
+    """First 60 bits of md5(c) as a non-negative BIGINT.
+    Oracle: ``('0x' || substring(md5(x), 1, 15))::BIGINT``."""
+    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+
+
+def round6(c: Column) -> Column:
+    """Portable HALF_UP at 6 decimals.
+    Oracle: ``floor(x * 1000000.0 + 0.5) / 1000000.0``."""
+    return F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
 
 
 def inner_trim_col(c: Column) -> Column:

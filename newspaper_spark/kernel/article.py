@@ -86,56 +86,57 @@ def extract_article(html: str, url: str = "", keep_article_html: bool = False) -
     # EVERY pristine-tree reader (metadata, meta/img extraction) runs
     # BEFORE clean_document mutates the tree, so the copy is elided —
     # one full-tree copy per page saved, corpus byte-identical
-    clean_doc = doc
-
     rec = _empty("ok")
 
-    midx = MetaIndex(clean_doc)  # one walk for all meta/link queries
+    midx = MetaIndex(doc)  # one walk for all meta/link queries
 
-    title = get_title(clean_doc, midx)
+    title = get_title(doc, midx)
     rec["title"] = (title or "")[:MAX_TITLE]
 
-    authors = get_authors(clean_doc)
+    authors = get_authors(doc)
     rec["authors"] = authors[:MAX_AUTHORS]
 
-    meta_lang = get_meta_lang(clean_doc, midx)
+    meta_lang = get_meta_lang(doc, midx)
     rec["meta_lang"] = meta_lang
     language = meta_lang or "en"
 
-    rec["meta_favicon"] = get_favicon(clean_doc, midx)
-    rec["meta_site_name"] = get_meta_site_name(clean_doc, midx)
-    rec["meta_description"] = get_meta_description(clean_doc, midx)
-    rec["canonical_link"] = get_canonical_link(url, clean_doc, midx)
+    rec["meta_favicon"] = get_favicon(doc, midx)
+    rec["meta_site_name"] = get_meta_site_name(doc, midx)
+    rec["meta_description"] = get_meta_description(doc, midx)
+    rec["canonical_link"] = get_canonical_link(url, doc, midx)
     # surfaced as an output column so a pipeline CAN refetch the
     # redirect target (the reference's follow_meta_refresh loop,
     # article.py:202-207, is off by default and needs network — oos)
     from .urlutils import extract_meta_refresh
 
-    rec["meta_refresh_target"] = extract_meta_refresh(clean_doc)
-    rec["tags"] = sorted(extract_tags(clean_doc))
-    mk = get_meta_keywords(clean_doc, midx)
+    rec["meta_refresh_target"] = extract_meta_refresh(doc)
+    rec["tags"] = sorted(extract_tags(doc))
+    mk = get_meta_keywords(doc, midx)
     rec["meta_keywords"] = [k.strip() for k in mk.split(",")] if mk else []
-    rec["meta_type"] = get_meta_type(clean_doc, midx)
-    meta_data = get_meta_data(clean_doc, midx)
+    rec["meta_type"] = get_meta_type(doc, midx)
+    meta_data = get_meta_data(doc, midx)
     rec["meta_data_json"] = json.dumps(meta_data, ensure_ascii=False, sort_keys=True,
                                        default=str)
-    pd = get_publishing_date(url, clean_doc)
+    pd = get_publishing_date(url, doc)
     rec["publish_date"] = pd
 
-    # pristine-tree image extraction must precede the body pass now
-    # that clean_doc aliases doc (see above)
-    meta_img = get_meta_img_url(url, clean_doc, midx)
+    # pristine-tree image extraction must precede the body pass (see
+    # above)
+    meta_img = get_meta_img_url(url, doc, midx)
     rec["meta_img"] = meta_img
-    imgs = get_img_urls(url, clean_doc)
+    imgs = get_img_urls(url, doc)
 
     # body pass on the (mutated) doc
     doc = clean_document(doc)
     top_node = calculate_best_node(doc, language)
-    clean_top_node = None
+    rec["top_image"] = meta_img
     if top_node is not None:
         rec["movies"] = get_movies(top_node)
         top_node = post_cleanup(top_node, language)
-        clean_top_node = top_node.copy_subtree()
+        # the cleaned top node's first image, read before the formatter
+        # rewrites the node
+        if not meta_img:
+            rec["top_image"] = get_first_img_url(url, top_node)
         text, article_html = get_formatted(top_node, keep_article_html)
         rec["text"] = (text or "")[:MAX_TEXT]
         rec["article_html"] = article_html or ""
@@ -143,10 +144,6 @@ def extract_article(html: str, url: str = "", keep_article_html: bool = False) -
     if meta_img:
         imgs.add(meta_img)
     rec["images"] = sorted(imgs)
-    if clean_top_node is not None:
-        rec["top_image"] = meta_img or get_first_img_url(url, clean_top_node)
-    else:
-        rec["top_image"] = meta_img
 
     # deterministic link hash: md5 of url-or-html, without the reference's
     # time.time() suffix (utils.py:57-73 — nondeterminism dropped on purpose)

@@ -22,7 +22,7 @@ from ..dom import (
     outer_html,
     remove_keep_tail,
 )
-from .text import inner_trim
+from .scorer import get_text
 
 REMOVE_NODES_RE = (
     "^side$|combx|retweet|mediaarticlerelated|menucontainer|"
@@ -212,11 +212,6 @@ def _collect_clean_targets(doc: Element) -> _CleanTargets:
     return t
 
 
-def _get_text(node: Element) -> str:
-    txts = [t for t in node.itertext()]
-    return inner_trim(" ".join(txts).strip())
-
-
 def _child_nodes_with_text(node: Element) -> list:
     """Materialize text/tails as synthetic tag='text' elements
     (parsers.py:138-159)."""
@@ -273,7 +268,7 @@ def _get_replacement_nodes(div):
             replacement_text = []
             nodes_to_return.append(kid)
         elif kid.tag == "text":
-            kid_text = _get_text(kid)
+            kid_text = get_text(kid)
             _replace_walk_left_right(kid, kid_text, replacement_text, nodes_to_remove)
         else:
             nodes_to_return.append(kid)

@@ -21,7 +21,7 @@ from ..dom import (
     find_by_tag,
     find_by_tags,
 )
-from ..dom.select import _UPPER_TO_LOWER
+from ..dom.select import _UPPER_TO_LOWER, parsed_selector
 from .scorer import get_text
 from .urlutils import STRICT_DATE_REGEX
 
@@ -231,9 +231,7 @@ class MetaIndex:
 
 def _match_meta(metas, selector: str):
     """Evaluate a 'meta[attr=val]'-style selector against the list."""
-    from ..dom.select import _parse_selector
-
-    groups = _parse_selector(selector)
+    groups = parsed_selector(selector)
     out = []
     for node in metas:
         for chain in groups:

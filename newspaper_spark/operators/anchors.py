@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from newspaper_spark import cache
-from newspaper_spark.operators.textstats import WS_CLASS
+from newspaper_spark.functions.columns import normalized_text
 
 __all__ = ["anchor_topk"]
 
@@ -51,13 +51,7 @@ def anchor_topk(
     any other value — dropping it is the caller's filter, not a
     silent default.
     """
-    norm = F.trim(
-        F.regexp_replace(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-            WS_CLASS + "+",
-            " ",
-        )
-    )
+    norm = normalized_text(F.coalesce(F.col(text_col), F.lit("")))
     agg = cache.track(
         links.select(F.col(target_col).alias("target"), norm.alias("anchor"))
         .groupBy("target", "anchor")

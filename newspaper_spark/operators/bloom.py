@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from newspaper_spark.functions.columns import md5_long
+
 __all__ = [
     "bloom_build",
     "bloom_probe",
@@ -51,12 +53,7 @@ _MASK = "shiftleft(cast(1 as bigint), cast(pos % 32 as int))"
 
 def _bit_pos(col, i: int, m: int):
     """Probe i's bit position for value ``col`` — md5-derived, exact."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{i}:"), col)), 1, 15), 16, 10
-        ).cast("long")
-        % m
-    )
+    return md5_long(F.concat(F.lit(f"{i}:"), col)) % m
 
 
 def bloom_build(df: DataFrame, col: str, m: int = 1 << 20, k: int = 4) -> DataFrame:

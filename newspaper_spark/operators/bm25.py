@@ -54,20 +54,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from newspaper_spark import cache
-from newspaper_spark.operators.textstats import WS_CLASS
+from newspaper_spark.functions.columns import ws_tokens
 
 __all__ = ["bm25_topk"]
 
 
 def _toks(col):
-    """The repo's portable tokenization (dsir.py / textstats.py):
-    lower → collapse explicit-whitespace runs → split on ' '."""
-    return F.split(
-        F.trim(
-            F.regexp_replace(F.lower(F.coalesce(col, F.lit(""))), WS_CLASS + "+", " ")
-        ),
-        " ",
-    )
+    """The repo's portable tokenization, a null text read as ''."""
+    return ws_tokens(F.coalesce(col, F.lit("")))
 
 
 def bm25_topk(

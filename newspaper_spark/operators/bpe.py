@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import _tokens
+from ..functions.columns import ws_tokens
 
 __all__ = ["bpe_word_counts", "bpe_train", "bpe_apply", "bpe_encode_docs"]
 
@@ -58,7 +58,7 @@ def bpe_word_counts(
     return (
         df.select(
             F.explode(
-                _tokens(F.coalesce(F.col(text_col), F.lit("")))
+                ws_tokens(F.coalesce(F.col(text_col), F.lit("")))
             ).alias("word")
         )
         .groupBy("word")
@@ -160,7 +160,7 @@ def bpe_encode_docs(
     back. Raw text never shuffles; the merge chain is Column-only."""
     words = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(_tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("word"),
+        F.explode(ws_tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("word"),
     )
     doc_words = words.groupBy("_id", "word").agg(
         F.count("*").cast("long").alias("k")

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from newspaper_spark.operators.textstats import _tokens
+from newspaper_spark.functions.columns import ws_tokens
 
 __all__ = ["chunk_text"]
 
@@ -54,7 +54,7 @@ def chunk_text(
     c, s = int(chunk_tokens), int(stride)
     if not (0 < s <= c):
         raise ValueError(f"stride must be in (0, chunk_tokens]; got {s}, {c}")
-    toks = _tokens(F.coalesce(F.col(text_col), F.lit("")))
+    toks = ws_tokens(F.coalesce(F.col(text_col), F.lit("")))
     n = F.size(toks).cast("long")
     n_chunks = F.expr(
         f"(greatest(n - {c}, cast(0 as bigint)) + {s - 1}) div {s}"

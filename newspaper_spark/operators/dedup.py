@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from newspaper_spark import cache
-
+from newspaper_spark.functions.columns import md5_long, normalized_text, ws_tokens
 
 log = logging.getLogger(__name__)
 
@@ -83,15 +83,6 @@ def _cap_collision_groups(
     return blocked.join(big.select(*key_cols), key_cols, "left_anti")
 
 
-def normalized_text(c):
-    """lowercase, collapse whitespace — canonical form for hashing.
-
-    Whitespace class spelled explicitly (== Java \\s) so the DuckDB
-    oracle's RE2, whose \\s lacks \\x0B, reads the identical set.
-    """
-    return F.trim(F.regexp_replace(F.lower(c), r"[ \t\n\x0B\f\r]+", " "))
-
-
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact-dup fingerprint: md5 of normalized text."""
     return df.withColumn("fingerprint", F.md5(normalized_text(F.col(text_col))))
@@ -109,7 +100,7 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
 def shingles_col(text_col, n: int = 3):
     """Word n-gram shingles as an array column (JVM-side)."""
-    toks = F.split(normalized_text(text_col), " ")
+    toks = ws_tokens(text_col)
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
     return F.array_distinct(
         F.transform(
@@ -117,14 +108,6 @@ def shingles_col(text_col, n: int = 3):
             lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
         )
     )
-
-
-def md5_long(c):
-    """First 60 bits of md5(c) as a non-negative BIGINT.
-
-    Portable: DuckDB computes the identical value with
-    ``('0x' || substring(md5(x), 1, 15))::BIGINT``."""
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
 def affine_params(num_hashes: int) -> list[tuple[int, int]]:
@@ -316,7 +299,7 @@ def simhash_col(text_col, bits: int = 64):
     all 64 bits accumulate in a single `aggregate` pass carrying a
     64-slot vote array; the final fold sets bit i when vote_i > 0."""
     assert bits == 64, "simhash_col is specialized to 64 bits"
-    toks = F.split(normalized_text(text_col), " ")
+    toks = ws_tokens(text_col)
     # one md5 per token (materialized by the first transform), then the
     # second transform splits the hex into 4 16-bit ints
     hexes = F.transform(toks, lambda t: F.md5(t))
@@ -376,7 +359,7 @@ def simhash_table(
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(
-            F.split(normalized_text(F.coalesce(F.col(text_col), F.lit(""))), " ")
+            ws_tokens(F.coalesce(F.col(text_col), F.lit("")))
         ).alias("w"),
     )
     hx = F.md5("w")

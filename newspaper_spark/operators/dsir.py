@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from newspaper_spark import cache
-from newspaper_spark.operators.textstats import WS_CLASS
+from newspaper_spark.functions.columns import md5_long, normalized_text, round6
 
 
 def _bucket_rows(df: DataFrame, id_col: str, text_col: str, n_buckets: int):
@@ -53,13 +53,7 @@ def _bucket_rows(df: DataFrame, id_col: str, text_col: str, n_buckets: int):
     window produced. Verified row-for-row identical to the window form
     (incl. empty/null/single-token/multi-space docs); everything fuses
     into the scan stage."""
-    norm = F.trim(
-        F.regexp_replace(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-            WS_CLASS + "+",
-            " ",
-        )
-    )
+    norm = normalized_text(F.coalesce(F.col(text_col), F.lit("")))
     # normalize in its OWN projection: split and regexp_extract_all
     # both consume it, and inlining the expression evaluates the
     # lower+regexp_replace twice per row (measured ~20% of the stage)
@@ -71,13 +65,7 @@ def _bucket_rows(df: DataFrame, id_col: str, text_col: str, n_buckets: int):
     return dn.select(
         "id",
         F.explode(F.concat(toks, bigrams)).alias("g"),
-    ).select(
-        "id",
-        (
-            F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("long")
-            % n_buckets
-        ).alias("b"),
-    )
+    ).select("id", (md5_long("g") % n_buckets).alias("b"))
 
 
 def dsir_scores(
@@ -161,8 +149,5 @@ def dsir_scores(
     scored = feats_raw.join(F.broadcast(ratio), "b")
     return scored.groupBy("id").agg(
         F.sum("k").cast("long").alias("n_feats"),
-        (
-            F.floor(F.sum(F.col("k") * F.col("lr")) * 1000000.0 + 0.5)
-            / 1000000.0
-        ).alias("dsir_logratio"),
+        round6(F.sum(F.col("k") * F.col("lr"))).alias("dsir_logratio"),
     ).select(F.col("id").alias(id_col), "n_feats", "dsir_logratio")

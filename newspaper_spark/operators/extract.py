@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .batch import row_udf
+
 ARTICLE_FIELDS = [
     ("title", T.StringType()),
     ("text", T.StringType()),
@@ -124,18 +126,14 @@ def extract_article_packed_udf(
     return _extract_batch(texts, urls, flags)
 
 
-@F.pandas_udf(T.StringType())
-def fulltext_udf(texts: pd.Series, langs: pd.Series) -> pd.Series:
+def _fulltext(html, lang):
     """newspaper.fulltext equivalent (api.py:71-93): html → main text."""
     from ..kernel.fulltext import fulltext
 
-    out = []
-    for html, lang in zip(texts, langs):
-        try:
-            out.append(fulltext(html, lang or "en"))
-        except Exception:
-            out.append("")
-    return pd.Series(out, dtype="object")
+    return fulltext(html, lang or "en")
+
+
+fulltext_udf = row_udf(_fulltext, T.StringType(), str)
 
 
 def extract_articles(

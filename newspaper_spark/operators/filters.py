@@ -29,7 +29,8 @@ import functools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import WS_CLASS, token_count_col
+from ..functions.columns import normalized_text, ws_tokens
+from .textstats import token_count_col
 
 
 def c4_filters(
@@ -42,7 +43,7 @@ def c4_filters(
     n_sentences = F.size(
         F.filter(F.split(c, r"\."), lambda s: F.trim(s) != "")
     )
-    # the ONE whitespace-token-count spelling (textstats._tokens) —
+    # the ONE whitespace-token-count spelling (functions.columns.ws_tokens) —
     # never re-spell it, or the oracles drift
     n_words = token_count_col(c)
     has_curly = c.contains("{")
@@ -111,7 +112,7 @@ def gopher_filters(
     count.
     """
     c = F.coalesce(F.col(text_col), F.lit(""))
-    norm = F.trim(F.regexp_replace(F.lower(c), WS_CLASS + "+", " "))
+    norm = normalized_text(c)
     toks = F.split(norm, " ")
     n_words = F.when(norm == "", F.lit(0)).otherwise(F.size(toks)).cast("long")
     # Σ token length without a per-token fold: collapse the spaces out
@@ -198,7 +199,7 @@ _LINE_TRIM_RE = "^[ \\t\\r]+|[ \\t\\r]+$"
 
 def _line_word_count(line):
     """Words on one line — the ONE spelling, mirrored in the oracle."""
-    collapsed = F.trim(F.regexp_replace(F.lower(line), WS_CLASS + "+", " "))
+    collapsed = normalized_text(line)
     return F.when(collapsed == "", F.lit(0)).otherwise(
         F.size(F.split(collapsed, " "))
     )
@@ -315,8 +316,6 @@ def badwords_filter(
     (occurrence count over all entries) and ``badwords_ok``
     (= zero hits, the C4 keep verdict).
     """
-    from .textstats import _tokens
-
     list_input = not isinstance(badwords, DataFrame)
     if list_input:
         # validate in Python BEFORE createDataFrame: free, and the
@@ -372,7 +371,7 @@ def badwords_filter(
     toks = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(
-            _tokens(F.coalesce(F.col(text_col), F.lit("")))
+            ws_tokens(F.coalesce(F.col(text_col), F.lit("")))
         ).alias("pos", "w"),
     ).filter(F.col("w") != "")
     uni = toks.join(

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 
 from newspaper_spark import cache
-from newspaper_spark.operators.textstats import _tokens
+from newspaper_spark.functions.columns import ws_tokens
 
 __all__ = ["build_postings", "sparse_dot_pairs"]
 
@@ -55,7 +55,7 @@ def build_postings(
     tokpos = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(
-            _tokens(F.coalesce(F.col(text_col), F.lit("")))
+            ws_tokens(F.coalesce(F.col(text_col), F.lit("")))
         ).alias("pos", "term"),
     )
     # deltas from the sorted per-posting position list: zip each
@@ -137,7 +137,7 @@ def sparse_dot_pairs(
         df.select(
             F.col(id_col).alias("id"),
             F.explode(
-                _tokens(F.coalesce(F.col(text_col), F.lit("")))
+                ws_tokens(F.coalesce(F.col(text_col), F.lit("")))
             ).alias("term"),
         )
         .groupBy("term", "id")

@@ -16,11 +16,10 @@ checks.
 """
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .batch import map_payloads
 
 FEATURE_SCHEMA = (
     "media_id string, kind string, n_bytes long, "
@@ -28,17 +27,27 @@ FEATURE_SCHEMA = (
 )
 
 
-def attach_media(df: DataFrame, text_col: str = "text", kind: str = "image") -> DataFrame:
-    """Derive a deterministic binary payload column from text (test/bench
-    stand-in for real blob columns)."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+def _media_table(df: DataFrame, text_col: str, kind: str, payload, mime: str) -> DataFrame:
+    """(media_id, kind, payload, mime, n_bytes) rows, keyed by md5(text)."""
     return df.select(
         F.md5(F.col(text_col)).alias("media_id"),
         F.lit(kind).alias("kind"),
         payload.alias("payload"),
-        F.lit("application/octet-stream").alias("mime"),
+        F.lit(mime).alias("mime"),
         F.length(payload).cast("long").alias("n_bytes"),
     )
+
+
+def _padded_bytes(text_col: str, n: int):
+    """The first n chars of the text, space-padded, as bytes."""
+    return F.encode(F.substring(F.rpad(F.col(text_col), n, " "), 1, n), "UTF-8")
+
+
+def attach_media(df: DataFrame, text_col: str = "text", kind: str = "image") -> DataFrame:
+    """Derive a deterministic binary payload column from text (test/bench
+    stand-in for real blob columns)."""
+    payload = F.encode(F.col(text_col), "UTF-8")
+    return _media_table(df, text_col, kind, payload, "application/octet-stream")
 
 
 #: generated-PPM geometry for the real-decode test path
@@ -51,19 +60,9 @@ def attach_ppm(df: DataFrame, text_col: str = "text") -> DataFrame:
     raster bytes are the first w·h·3 chars of the (space-padded) text —
     all-ASCII corpus, so byte k == ascii(char k) and the DuckDB oracle
     reconstructs every decoded feature from the text column alone."""
-    n_raster = PPM_W * PPM_H * 3
-    pixels = F.encode(
-        F.substring(F.rpad(F.col(text_col), n_raster, " "), 1, n_raster),
-        "UTF-8",
-    )
+    pixels = _padded_bytes(text_col, PPM_W * PPM_H * 3)
     payload = F.concat(F.encode(F.lit(_PPM_HEADER), "UTF-8"), pixels)
-    return df.select(
-        F.md5(F.col(text_col)).alias("media_id"),
-        F.lit("image").alias("kind"),
-        payload.alias("payload"),
-        F.lit("image/x-portable-pixmap").alias("mime"),
-        F.length(payload).cast("long").alias("n_bytes"),
-    )
+    return _media_table(df, text_col, "image", payload, "image/x-portable-pixmap")
 
 
 def _raster_feature(raster: bytes, maxval: int = 255) -> list:
@@ -179,18 +178,8 @@ def attach_wav(df: DataFrame, text_col: str = "text") -> DataFrame:
     whose sample bytes are the first WAV_SAMPLES chars of the
     (space-padded) text — all-ASCII corpus, so the oracle reconstructs
     every decoded feature from the text column alone."""
-    samples = F.encode(
-        F.substring(F.rpad(F.col(text_col), WAV_SAMPLES, " "), 1, WAV_SAMPLES),
-        "UTF-8",
-    )
-    payload = F.concat(F.lit(_wav_header(WAV_SAMPLES)), samples)
-    return df.select(
-        F.md5(F.col(text_col)).alias("media_id"),
-        F.lit("audio").alias("kind"),
-        payload.alias("payload"),
-        F.lit("audio/wav").alias("mime"),
-        F.length(payload).cast("long").alias("n_bytes"),
-    )
+    payload = F.concat(F.lit(_wav_header(WAV_SAMPLES)), _padded_bytes(text_col, WAV_SAMPLES))
+    return _media_table(df, text_col, "audio", payload, "audio/wav")
 
 
 def _decode_wav(payload: bytes):
@@ -240,6 +229,9 @@ def _decode_wav(payload: bytes):
     raise ValueError("WAV without data chunk")
 
 
+#: pass-through columns of the media feature stages
+_MEDIA_KEYS = ["media_id", "kind", "n_bytes"]
+
 AUDIO_SCHEMA = (
     "media_id string, kind string, n_bytes long, "
     "n_samples int, sample_rate int, n_channels int, "
@@ -251,39 +243,10 @@ def extract_audio_features(df: DataFrame) -> DataFrame:
     """mapInPandas stage: WAV payload → (sample geometry, 8-band
     amplitude feature). Same per-row error-column fault tolerance as
     the image path; map-only binary batches at any scale."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ns, rates, chans, feats, errs = [], [], [], [], []
-            for payload in pdf["payload"].values:
-                try:
-                    n, r, c, feat = _decode_wav(payload)
-                    ns.append(n)
-                    rates.append(r)
-                    chans.append(c)
-                    feats.append(feat)
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001
-                    ns.append(None)
-                    rates.append(None)
-                    chans.append(None)
-                    feats.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "kind": pdf["kind"].values,
-                    "n_bytes": pdf["n_bytes"].values,
-                    "n_samples": ns,
-                    "sample_rate": rates,
-                    "n_channels": chans,
-                    "feature": feats,
-                    "error": errs,
-                }
-            )
-
-    pruned = df.select("media_id", "kind", "n_bytes", "payload")
-    return pruned.mapInPandas(op, schema=AUDIO_SCHEMA)
+    return map_payloads(
+        df, _MEDIA_KEYS, _decode_wav,
+        ["n_samples", "sample_rate", "n_channels", "feature"], AUDIO_SCHEMA,
+    )
 
 
 def _riff_chunks(payload: bytes, form: bytes, label: str):
@@ -1663,48 +1626,15 @@ def _decode_image(payload: bytes, real_decode: bool = False):
     return (w, h, 1, feat)
 
 
-def extract_media_features(
-    df: DataFrame, batch_limit: int = 256, real_decode: bool = False
-) -> DataFrame:
+def extract_media_features(df: DataFrame, real_decode: bool = False) -> DataFrame:
     """mapInPandas stage: binary payload → (dims, frames, feature vec).
 
     Errors never kill the task — they land in the ``error`` column
-    (per-row fault tolerance, same policy as the HTML kernel). The
-    batch loop iterates column arrays directly (zip over numpy values,
-    never ``iterrows``) and emits one column-oriented frame per batch."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            widths, heights, frames, feats, errs = [], [], [], [], []
-            for payload in pdf["payload"].values:
-                try:
-                    w, h, nf, feat = _decode_image(payload, real_decode)
-                    widths.append(w)
-                    heights.append(h)
-                    frames.append(nf)
-                    feats.append(feat)
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001
-                    widths.append(None)
-                    heights.append(None)
-                    frames.append(None)
-                    feats.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "kind": pdf["kind"].values,
-                    "n_bytes": pdf["n_bytes"].values,
-                    "width": widths,
-                    "height": heights,
-                    "n_frames": frames,
-                    "feature": feats,
-                    "error": errs,
-                }
-            )
-
-    pruned = df.select("media_id", "kind", "n_bytes", "payload")
-    return pruned.mapInPandas(op, schema=FEATURE_SCHEMA)
+    (per-row fault tolerance, same policy as the HTML kernel)."""
+    return map_payloads(
+        df, _MEDIA_KEYS, lambda payload: _decode_image(payload, real_decode),
+        ["width", "height", "n_frames", "feature"], FEATURE_SCHEMA,
+    )
 
 
 RESIZE_SCHEMA = (
@@ -1731,32 +1661,16 @@ def resize_media(
 ) -> DataFrame:
     """mapInPandas resize stage over decoded dims (fake decoder supplies
     md5-derived dims; the pixel resample itself is behind the same
-    real_decode stub as decoding). Column-array iteration, no iterrows."""
+    real_decode stub as decoding)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, rws, rhs, errs = [], [], [], [], []
-            for payload in pdf["payload"].values:
-                try:
-                    w, h, _nf, _feat = _decode_image(payload, real_decode)
-                    rw, rh = _resize_dims(w, h, target)
-                    ws.append(w); hs.append(h); rws.append(rw); rhs.append(rh)
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001
-                    ws.append(None); hs.append(None); rws.append(None); rhs.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "width": ws,
-                    "height": hs,
-                    "resized_w": rws,
-                    "resized_h": rhs,
-                    "error": errs,
-                }
-            )
+    def resized(payload):
+        w, h, _nf, _feat = _decode_image(payload, real_decode)
+        return (w, h, *_resize_dims(w, h, target))
 
-    return df.select("media_id", "payload").mapInPandas(op, schema=RESIZE_SCHEMA)
+    return map_payloads(
+        df, ["media_id"], resized,
+        ["width", "height", "resized_w", "resized_h"], RESIZE_SCHEMA,
+    )
 
 
 def sample_frame_indices(n_frames_col, every_n: int = 4, max_frames: int = 8):
@@ -1790,33 +1704,11 @@ def probe_media_dims(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     when pixels aren't needed. Same per-row error-column fault policy
     as extract_media_features."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, widths, heights, errs = [], [], [], []
-            for payload in pdf["payload"].values:
-                try:
-                    w, h, fmt = probe_image_dims(payload)
-                    fmts.append(fmt)
-                    widths.append(w)
-                    heights.append(h)
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001
-                    fmts.append(None)
-                    widths.append(None)
-                    heights.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "fmt": fmts,
-                    "width": widths,
-                    "height": heights,
-                    "error": errs,
-                }
-            )
+    def probed(payload):
+        w, h, fmt = probe_image_dims(payload)
+        return (fmt, w, h)
 
-    pruned = df.select(F.col(id_col), "payload")
-    return pruned.mapInPandas(
-        op,
+    return map_payloads(
+        df, [id_col], probed, ["fmt", "width", "height"],
         f"{id_col} string, fmt string, width int, height int, error string",
     )

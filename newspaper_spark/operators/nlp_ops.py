@@ -7,36 +7,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .batch import row_udf
 
-def _keywords_batch(texts, langs):
+
+def _keywords(text, lang):
     from ..kernel.nlp import keywords
 
-    out = []
-    for text, lang in zip(texts, langs):
-        try:
-            out.append(sorted(keywords(text or "", lang or "en").keys()))
-        except Exception:
-            out.append([])
-    return pd.Series(out, dtype="object")
+    return sorted(keywords(text or "", lang or "en").keys())
 
 
-def _summary_batch(titles, texts, langs):
+def _summary(title, text, lang):
     from ..kernel.nlp import summarize
 
-    out = []
-    for title, text, lang in zip(titles, texts, langs):
-        try:
-            out.append(
-                summarize(title=title or "", text=text or "", max_sents=5,
-                          language=lang or "en")[:5000]
-            )
-        except Exception:
-            out.append("")
-    return pd.Series(out, dtype="object")
+    return summarize(title=title or "", text=text or "", max_sents=5,
+                     language=lang or "en")[:5000]
 
 
-keywords_udf = F.pandas_udf(_keywords_batch, T.ArrayType(T.StringType()))
-summary_udf = F.pandas_udf(_summary_batch, T.StringType())
+keywords_udf = row_udf(_keywords, T.ArrayType(T.StringType()), list)
+summary_udf = row_udf(_summary, T.StringType(), str)
 
 _NLP_TYPE = T.StructType(
     [
@@ -95,7 +83,7 @@ _SENT_FEATURES_TYPE = T.ArrayType(
 )
 
 
-def _sentence_features_batch(titles, texts, langs):
+def _sentence_features(title, text, lang):
     """Full sentence-scoring breakdown through the real kernel
     (split_sentences → keywords → sentence_features), plus the
     most_common(5) selection the summary actually uses."""
@@ -107,44 +95,36 @@ def _sentence_features_batch(titles, texts, langs):
         split_words,
     )
 
-    out = []
-    for title, text, lang in zip(titles, texts, langs):
-        try:
-            title = title or ""
-            text = text or ""
-            lang = lang or "en"
-            sentences = split_sentences(text)
-            kws = keywords(text, lang)
-            title_words = split_words(title)
-            feats = sentence_features(sentences, title_words, kws, lang)
-            top5 = {
-                idx
-                for (idx, _s), _score in score_sentences(
-                    sentences, title_words, kws, lang
-                ).most_common(5)
-            }
-            out.append(
-                [
-                    (
-                        f["idx"],
-                        f["sentence"],
-                        float(f["title_score"]),
-                        float(f["length_score"]),
-                        float(f["position_score"]),
-                        float(f["sbs"]),
-                        float(f["dbs"]),
-                        float(f["total"]),
-                        f["idx"] in top5,
-                    )
-                    for f in feats
-                ]
-            )
-        except Exception:
-            out.append([])
-    return pd.Series(out, dtype="object")
+    title = title or ""
+    text = text or ""
+    lang = lang or "en"
+    sentences = split_sentences(text)
+    kws = keywords(text, lang)
+    title_words = split_words(title)
+    feats = sentence_features(sentences, title_words, kws, lang)
+    top5 = {
+        idx
+        for (idx, _s), _score in score_sentences(
+            sentences, title_words, kws, lang
+        ).most_common(5)
+    }
+    return [
+        (
+            f["idx"],
+            f["sentence"],
+            float(f["title_score"]),
+            float(f["length_score"]),
+            float(f["position_score"]),
+            float(f["sbs"]),
+            float(f["dbs"]),
+            float(f["total"]),
+            f["idx"] in top5,
+        )
+        for f in feats
+    ]
 
 
-sentence_features_udf = F.pandas_udf(_sentence_features_batch, _SENT_FEATURES_TYPE)
+sentence_features_udf = row_udf(_sentence_features, _SENT_FEATURES_TYPE, list)
 
 
 def add_nlp(df: DataFrame, title_col="title", text_col="text", lang="en") -> DataFrame:

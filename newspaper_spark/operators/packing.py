@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from newspaper_spark import cache
+from newspaper_spark.functions.columns import md5_long
 
 
 
@@ -160,17 +161,7 @@ def shard_assign(
     Returns ``(id, shuffle_key, n_tokens, offset, shard_id,
     pos_in_shard)``.
     """
-    key = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string"))
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    key = md5_long(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
     placed = _global_offsets(
         df.select(
             F.col(id_col).alias("id"),

@@ -5,7 +5,7 @@ match counts.
 All patterns are pure Column ``regexp_replace`` / ``regexp_extract_all``
 expressions — JVM-side, whole-stage-codegen, no UDFs — and are written
 in the cross-engine-safe dialect this repo standardizes on (see
-textstats.WS_CLASS): explicit character classes only, no ``\\s``/``\\d``
+functions.columns.WS_CLASS): explicit character classes only, no ``\\s``/``\\d``
 /``\\w``/``\\b``, no lookarounds, so Spark's Java regex and DuckDB's RE2
 read every pattern identically and the SQL oracle can reproduce the
 output byte-for-byte.

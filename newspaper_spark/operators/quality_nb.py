@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from newspaper_spark import cache
+from newspaper_spark.functions.columns import round6
 from newspaper_spark.operators.dsir import _bucket_rows
 
 __all__ = ["nb_quality_scores"]
@@ -153,16 +154,9 @@ def nb_quality_scores(
         .groupBy("id", "prior")
         .agg(
             F.sum("k").cast("long").alias("n_feats"),
-            (
-                F.floor(
-                    (
-                        F.col("prior")
-                        + F.sum(F.col("k") * F.coalesce(F.col("lr"), F.col("lr0")))
-                    )
-                    * 1000000.0
-                    + 0.5
-                )
-                / 1000000.0
+            round6(
+                F.col("prior")
+                + F.sum(F.col("k") * F.coalesce(F.col("lr"), F.col("lr0")))
             ).alias("nb_logodds"),
         )
     )

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from newspaper_spark.functions.columns import round6
+
 #: hash → uniform [0, 1): first 8 md5 hex chars as a 32-bit integer.
 #: DuckDB mirror: ('0x' || substring(md5(key || ':' || salt), 1, 8))::BIGINT
 #: / 4294967296.0
@@ -115,8 +117,6 @@ def source_mix(
         "tokens",
         "weight",
         target.alias("target_tokens"),
-        (F.floor(rate * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)).alias(
-            "rate"
-        ),
+        round6(rate).alias("rate"),
         F.least(target, F.col("tokens")).cast("long").alias("expected_tokens"),
     )

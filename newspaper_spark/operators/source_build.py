@@ -16,70 +16,48 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .batch import row_udf
+
 MAX_ARTICLES_PER_SOURCE = 5000
 
 
-def _category_urls_batch(source_urls, htmls):
+def _category_urls(source_url, html):
     from ..kernel.source import get_category_urls
 
-    out = []
-    for su, html in zip(source_urls, htmls):
-        try:
-            out.append(get_category_urls(su or "", html or ""))
-        except Exception:
-            out.append([])
-    return pd.Series(out, dtype="object")
+    return get_category_urls(source_url or "", html or "")
 
 
-def _feed_urls_batch(source_urls, htmls):
+def _feed_urls(source_url, html):
     from ..kernel.source import get_feed_urls
 
-    out = []
-    for su, html in zip(source_urls, htmls):
-        try:
-            out.append(get_feed_urls(su or "", html or ""))
-        except Exception:
-            out.append([])
-    return pd.Series(out, dtype="object")
+    return get_feed_urls(source_url or "", html or "")
 
 
-def _article_pairs_batch(category_urls, htmls):
+def _article_pairs(category_url, html):
     from ..kernel.source import category_to_article_pairs
 
-    out = []
-    for cu, html in zip(category_urls, htmls):
-        try:
-            out.append(category_to_article_pairs(cu or "", html or ""))
-        except Exception:
-            out.append([])
-    return pd.Series(out, dtype="object")
+    return category_to_article_pairs(category_url or "", html or "")
 
 
-def _feed_article_urls_batch(source_urls, htmls):
+def _feed_article_urls(source_url, html):
     from ..kernel.source import feed_to_article_urls
 
-    out = []
-    for su, html in zip(source_urls, htmls):
-        try:
-            out.append(feed_to_article_urls(su or "", html or ""))
-        except Exception:
-            out.append([])
-    return pd.Series(out, dtype="object")
+    return feed_to_article_urls(source_url or "", html or "")
 
 
-category_urls_udf = F.pandas_udf(_category_urls_batch, T.ArrayType(T.StringType()))
-feed_urls_udf = F.pandas_udf(_feed_urls_batch, T.ArrayType(T.StringType()))
-article_pairs_udf = F.pandas_udf(
-    _article_pairs_batch,
+_URLS = T.ArrayType(T.StringType())
+category_urls_udf = row_udf(_category_urls, _URLS, list)
+feed_urls_udf = row_udf(_feed_urls, _URLS, list)
+article_pairs_udf = row_udf(
+    _article_pairs,
     T.ArrayType(
         T.StructType(
             [T.StructField("url", T.StringType()), T.StructField("title", T.StringType())]
         )
     ),
+    list,
 )
-feed_article_urls_udf = F.pandas_udf(
-    _feed_article_urls_batch, T.ArrayType(T.StringType())
-)
+feed_article_urls_udf = row_udf(_feed_article_urls, _URLS, list)
 
 
 def extract_categories(sources: DataFrame) -> DataFrame:
@@ -174,20 +152,14 @@ def build_sources(
     return purge_and_dedup(candidates, seen_urls)
 
 
-def _page_links_batch(htmls):
+def _page_links(html):
     from ..kernel.source import get_urls
 
-    out = []
-    for html in htmls:
-        try:
-            out.append(get_urls(html or "", titles=True))
-        except Exception:
-            out.append([])
-    return pd.Series(out, dtype="object")
+    return get_urls(html or "", titles=True)
 
 
-page_links_udf = F.pandas_udf(
-    _page_links_batch,
+page_links_udf = row_udf(
+    _page_links,
     T.ArrayType(
         T.StructType(
             [
@@ -196,6 +168,7 @@ page_links_udf = F.pandas_udf(
             ]
         )
     ),
+    list,
 )
 
 

@@ -177,10 +177,10 @@ def exact_substring_dedup(
     never funnel into one reducer.
 
     Token segmentation uses the explicit cross-engine whitespace
-    class (textstats.WS_CLASS — never ``\\s``, which differs between
+    class (functions.columns.WS_CLASS — never ``\\s``, which differs between
     Java and RE2), so the DuckDB oracle reproduces it exactly.
     """
-    from newspaper_spark.operators.textstats import WS_CLASS
+    from newspaper_spark.functions.columns import WS_CLASS
 
     return span_dedup(
         df, id_col, text_col, span=k, sep=WS_CLASS + "+", joiner=" "

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from newspaper_spark import cache
+from newspaper_spark.functions.columns import md5_long, normalized_text, round6, ws_tokens
 
 # small high-frequency marker lists per language (public knowledge,
 # intentionally tiny: this is an n-gram/marker heuristic, not a model).
@@ -34,19 +35,6 @@ LANG_CHAR_MARKERS = {
 }
 
 
-# Explicit ASCII whitespace class — byte-identical to Java regex \s
-# ([ \t\n\x0B\f\r]) but, unlike \s, read the SAME way by DuckDB's RE2
-# (whose \s lacks \x0B). Every cross-engine pattern must use this, never
-# bare \s, so Spark and the SQL oracle can't silently diverge.
-WS_CLASS = "[ \\t\\n\\x0B\\f\\r]"
-
-
-def _tokens(text_col):
-    return F.split(
-        F.trim(F.regexp_replace(F.lower(text_col), WS_CLASS + "+", " ")), " "
-    )
-
-
 def _substr_count(text_col, marker: str):
     """Occurrences of a literal marker — (len − len(removed)) / len(m).
     Exact integer; mirrors (length(x)-length(replace(x,m,'')))//k in SQL."""
@@ -57,7 +45,7 @@ def _substr_count(text_col, marker: str):
 def lang_id_col(text_col):
     """argmax over marker-hit counts; ties broken by language code order
     (stable, portable to SQL)."""
-    toks = _tokens(text_col)
+    toks = ws_tokens(text_col)
 
     def hit_count(words):
         # closure factory: a default-arg lambda would make pyspark treat
@@ -86,7 +74,7 @@ def lang_id_col(text_col):
 
 def token_count_col(text_col):
     """Whitespace token count."""
-    return F.size(_tokens(text_col))
+    return F.size(ws_tokens(text_col))
 
 
 #: pre-tokenizer pattern (GPT-2-ish without lookarounds, so the same
@@ -115,7 +103,7 @@ def quality_score_col(text_col):
     """Boilerplate-ish quality heuristic in [0,1]: length band, alpha
     ratio, mean word length band, stopword presence."""
     n_chars = F.length(text_col)
-    toks = _tokens(text_col)
+    toks = ws_tokens(text_col)
     n_words = F.size(toks)
     alpha_chars = F.length(F.regexp_replace(text_col, r"[^A-Za-zÀ-ÿ一-龥]", ""))
     alpha_ratio = F.when(n_chars > 0, alpha_chars / n_chars).otherwise(F.lit(0.0))
@@ -136,7 +124,7 @@ def quality_score_col(text_col):
 
 def doc_fingerprint_col(text_col):
     """Deterministic 128-bit content fingerprint of normalized text."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(text_col), WS_CLASS + "+", " ")))
+    return F.md5(normalized_text(text_col))
 
 
 def winnowing_fingerprints(
@@ -168,9 +156,7 @@ def winnowing_fingerprints(
         "id",
         "pos",
         "n",
-        F.conv(
-            F.substring(F.md5(F.substr("t", F.col("pos"), F.lit(k))), 1, 15), 16, 10
-        ).cast("long").alias("h"),
+        md5_long(F.substr("t", F.col("pos"), F.lit(k))).alias("h"),
     )
     w = W.partitionBy("id").orderBy("pos").rowsBetween(0, window - 1)
     minima = grams.withColumn("mh", F.min("h").over(w)).filter(
@@ -211,11 +197,7 @@ def repetition_stats(
 
     # null text behaves like empty text (one '' token) — stats stay
     # defined and no row vanishes
-    norm = F.trim(
-        F.regexp_replace(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))), WS_CLASS + "+", " "
-        )
-    )
+    norm = normalized_text(F.coalesce(F.col(text_col), F.lit("")))
     toks = F.split(norm, " ")
     base = df.select(
         F.col(id_col).alias("id"),
@@ -257,10 +239,6 @@ def repetition_stats(
             F.col("cnt").alias("top_cnt"),
         )
     )
-
-    def round6(x):
-        # portable HALF_UP at 6dp — identical spelling on the DuckDB side
-        return F.floor(x * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
 
     return (
         base.join(per_doc, F.col("id") == F.col("pid"), "left")
@@ -328,7 +306,7 @@ def unigram_logprob(
     tok_rows = df.select(
         F.col(id_col).alias("id"),
         *grp,
-        F.explode(_tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("tok"),
+        F.explode(ws_tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("tok"),
     )
     doc_tok = cache.track(
         tok_rows.groupBy("id", *grp, "tok")
@@ -364,10 +342,7 @@ def unigram_logprob(
             F.col("id").alias(id_col),
             *grp,
             F.col("n_tok").alias("n_tokens"),
-            (
-                F.floor((F.col("s") / F.col("n_tok")) * F.lit(1000000.0) + F.lit(0.5))
-                / F.lit(1000000.0)
-            ).alias("mean_logprob"),
+            round6(F.col("s") / F.col("n_tok")).alias("mean_logprob"),
         )
     )
 
@@ -408,13 +383,7 @@ def bigram_backoff_logprob(
         # row-for-row identical to the window form (incl. empty/null/
         # single-token/multi-space docs). substring_index recovers
         # (w1, w2) — tokens cannot contain spaces post-normalization.
-        norm = F.trim(
-            F.regexp_replace(
-                F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                WS_CLASS + "+",
-                " ",
-            )
-        )
+        norm = normalized_text(F.coalesce(F.col(text_col), F.lit("")))
         dn = frame.select(did, norm.alias("nt"))
         g = dn.select(
             "id",
@@ -434,7 +403,7 @@ def bigram_backoff_logprob(
     # table counts ALL train tokens (not just bigram w1s — the last
     # token of every doc is still a unigram event).
     ttok = train.select(
-        did, F.explode(_tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("tok")
+        did, F.explode(ws_tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("tok")
     )
     uni = cache.track(
         ttok.groupBy("tok").agg(F.count("*").cast("long").alias("c1")).persist()
@@ -496,12 +465,7 @@ def bigram_backoff_logprob(
             F.col("id").alias(id_col),
             F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
             F.coalesce(
-                F.floor(
-                    (F.col("s") / F.col("n_bigrams")) * F.lit(1000000.0)
-                    + F.lit(0.5)
-                )
-                / F.lit(1000000.0),
-                F.lit(0.0),
+                round6(F.col("s") / F.col("n_bigrams")), F.lit(0.0)
             ).alias("sb_logprob"),
         )
     )
@@ -533,7 +497,7 @@ def tfidf_topk(
 
     tok_rows = df.select(
         F.col(id_col).alias("id"),
-        F.explode(_tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("tok"),
+        F.explode(ws_tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("tok"),
     )
     doc_tok = cache.track(
         tok_rows.groupBy("id", "tok")
@@ -617,7 +581,7 @@ def pmi_collocations(
     t = df.select(
         did,
         F.posexplode(
-            _tokens(F.coalesce(F.col(text_col), F.lit("")))
+            ws_tokens(F.coalesce(F.col(text_col), F.lit("")))
         ).alias("pos", "w1"),
     )
     w = W.partitionBy("id").orderBy("pos")
@@ -635,7 +599,7 @@ def pmi_collocations(
         (F.col("pair_n").cast("double") * F.col("n_bigrams").cast("double"))
         / (F.col("left_n").cast("double") * F.col("right_n").cast("double"))
     )
-    pmi = F.floor(pmi_raw * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
+    pmi = round6(pmi_raw)
     return (
         bg.filter(F.col("pair_n") >= F.lit(int(min_count)))
         .join(left, "w1")

@@ -11,8 +11,8 @@ partial failure. Design:
   ``pmod(xxhash64(conv_id, turn_idx), salt)`` before the UDF stage so a
   mega-conversation can't serialize one task (explicit skew handling).
 * A JSON checkpoint manifest records bucket → {status, rows, errors,
-  checksum} and the bucket count it was hashed with; resuming with a
-  different count is refused. Re-running skips ``done`` buckets;
+  checksum}, the bucket count it was hashed with and the output schema;
+  resuming with a different count is refused. Re-running skips ``done`` buckets;
   failed/missing buckets are recomputed: their ``bucket=b`` directories
   are deleted and the group is appended afresh (idempotent,
   Iceberg-snapshot-equivalent in plain parquet).
@@ -33,8 +33,10 @@ import os
 import shutil
 import tempfile
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.extract import extract_articles
 
@@ -158,6 +160,10 @@ class ExtractionJob:
             )
 
             stats = self._bucket_stats(group, observation.get)
+            if "schema" not in manifest:
+                # for read_output of an all-empty job; bucket last, as a read puts it
+                schema = extracted.drop("bucket").schema.add(extracted.schema["bucket"])
+                manifest["schema"] = schema.jsonValue()
             for b in group:
                 manifest["buckets"][str(b)] = stats.get(
                     b, {"status": "done", "rows": 0, "errors": 0, "checksum": 0}
@@ -187,7 +193,20 @@ class ExtractionJob:
 
 
 def read_output(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.parquet(output_dir)
+    """The job's output. A job whose buckets all wrote zero rows leaves
+    no parquet file to infer a schema from; then the schema the
+    manifest recorded gives an empty frame of the same shape."""
+    try:
+        return spark.read.parquet(output_dir)
+    except AnalysisException as e:
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        with open(os.path.join(output_dir, MANIFEST_NAME)) as f:
+            schema = json.load(f).get("schema")
+        if schema is None:
+            raise
+        # a read, not createDataFrame: the read makes every field nullable
+        return spark.read.schema(T.StructType.fromJson(schema)).parquet(output_dir)
 
 
 def audit_output(spark: SparkSession, output_dir: str) -> dict:
@@ -199,7 +218,7 @@ def audit_output(spark: SparkSession, output_dir: str) -> dict:
     (``manifest: None``): read_output would return them unverified."""
     with open(os.path.join(output_dir, MANIFEST_NAME)) as f:
         manifest = json.load(f)
-    out = spark.read.parquet(output_dir)
+    out = read_output(spark, output_dir)
     actual = out.groupBy("bucket").agg(*_lineage_aggs()).collect()
     actual_by_bucket = {
         r["bucket"]: (r["rows"], int(r["errors"] or 0), int(r["checksum"] or 0))

@@ -5,6 +5,7 @@ order-insensitive value hash against oracle_sql() via DuckDB.
 import hashlib
 import pathlib
 import sys
+from collections import Counter
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
@@ -34,16 +35,30 @@ def norm_cell(v):
     return str(v)
 
 
-def value_hash(rows, colnames):
+def norm_lines(rows, colnames):
+    """Each row as one line of norm_cell values in column-name order."""
     order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    lines = sorted(
-        "|".join(norm_cell(r[i]) for i in order) for r in rows
-    )
+    return sorted("|".join(norm_cell(r[i]) for i in order) for r in rows)
+
+
+def value_hash(rows, colnames):
     h = hashlib.md5()
-    for line in lines:
+    for line in norm_lines(rows, colnames):
         h.update(line.encode("utf-8"))
         h.update(b"\n")
     return h.hexdigest()
+
+
+def print_row_diff(srows, scols, orows, ocols, limit=5):
+    """Up to ``limit`` normalised lines found only on each side."""
+    spark_lines = Counter(norm_lines(srows, scols))
+    oracle_lines = Counter(norm_lines(orows, ocols))
+    for side, only in (("spark", spark_lines - oracle_lines),
+                       ("oracle", oracle_lines - spark_lines)):
+        lines = sorted(only.elements())
+        print(f"    only in {side} ({len(lines)} lines):")
+        for line in lines[:limit]:
+            print(f"      {line}")
 
 
 def main():
@@ -115,13 +130,13 @@ def main():
                     f"dtype drift on '{c}': spark integral vs oracle {ot} "
                     "— pandas will float-ize it; cast the oracle to BIGINT"
                 )
+        srows = [tuple(r) for r in srows]
         if sorted(c.lower() for c in scols) != sorted(c.lower() for c in ocols):
             problems.append(f"schema {sorted(scols)} vs {sorted(ocols)}")
-        if not problems:
-            sh = value_hash([tuple(r) for r in srows], scols)
-            oh = value_hash(orows, ocols)
-            if sh != oh:
-                problems.append("value-hash MISMATCH")
+        elif value_hash(srows, scols) != value_hash(orows, ocols):
+            problems.append("value-hash MISMATCH")
+            print(f"✗ {name} value-hash MISMATCH")
+            print_row_diff(srows, scols, orows, ocols)
         results[name] = "OK" if not problems else "; ".join(problems)
 
     width = max(len(k) for k in results)

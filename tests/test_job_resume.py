@@ -91,6 +91,23 @@ def test_job_rerun_is_noop(spark, tmp_path):
     assert m1["buckets"] == m2["buckets"]
 
 
+def test_empty_input_job_audits_and_reads(spark, tmp_path):
+    """A job over no rows writes no parquet file; the audit still passes
+    and the read gives zero rows shaped like a non-empty run's."""
+    from newspaper_spark.plans.job import ExtractionJob, audit_output, read_output
+
+    empty_dir, full_dir = str(tmp_path / "empty"), str(tmp_path / "full")
+    manifest = ExtractionJob(spark, empty_dir, n_buckets=4, buckets_per_commit=4).run(
+        _small_transcripts(spark, 0))
+    assert [e["rows"] for e in manifest["buckets"].values()] == [0] * 4
+    assert audit_output(spark, empty_dir) == {"ok": True, "mismatches": []}
+    ExtractionJob(spark, full_dir, n_buckets=4, buckets_per_commit=4).run(
+        _small_transcripts(spark, 4))
+    out = read_output(spark, empty_dir)
+    assert out.count() == 0
+    assert out.schema == read_output(spark, full_dir).schema
+
+
 def test_salting_spreads_hot_conversation(spark):
     from newspaper_spark.plans.job import salt_col
 

@@ -45,7 +45,7 @@ def test_add_nlp_single_fused_udf_slot(spark):
     )
     p = _plan(spark, add_nlp(df))
     assert p.count("_nlp_batch") == 1
-    assert "_keywords_batch" not in p and "_summary_batch" not in p
+    assert "_keywords(" not in p and "_summary(" not in p
 
 
 def test_anchor_topk_window_group_limit_pushdown(spark):
