@@ -459,9 +459,13 @@ def get_img_urls(article_url: str, doc: Element) -> set:
 
 
 def get_first_img_url(article_url: str, top_node: Element) -> str:
-    node_images = list(get_img_urls(article_url, top_node))
-    if node_images:
-        return urljoin(article_url or "", node_images[0])
+    """The top node's first ``<img src>`` in document order, made
+    absolute (not an element of get_img_urls' set, whose order follows
+    the string-hash seed)."""
+    for t in find_by_tag(top_node, tag="img"):
+        src = t.attrib.get("src")
+        if src:
+            return urljoin(article_url or "", src)
     return ""
 
 

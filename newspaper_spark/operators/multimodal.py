@@ -4,17 +4,18 @@ Images/audio/video ride as ``binary`` columns with a metadata struct;
 decode/resize/frame-sample run as Arrow-batched ``mapInPandas`` stages.
 ``real_decode=True`` parses REAL containers with pure-stdlib decoders —
 PPM (P6), uncompressed BMP, PNG (zlib inflate + full scanline
-unfiltering), non-interlaced GIF (variable-width LZW), and JPEG — BOTH baseline
-sequential and progressive (T.81 Annex G: spectral selection +
+unfiltering), GIF (variable-width LZW, interlaced too), and JPEG — BOTH
+baseline sequential and progressive (T.81 Annex G: spectral selection +
 successive approximation), Huffman + dequant + IDCT + YCbCr — and
-surfaces
-every other variant as a per-row ValueError in the error column: that
+surfaces every other variant as a per-row ValueError in the error column: that
 error path is exactly where a PIL/opencv decoder would plug in on a
 cluster that has them (this container does not). ``real_decode=False``
 keeps the deterministic md5 fake used by the SQL-oracled plumbing
 checks.
 """
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -81,13 +82,19 @@ def _raster_feature(raster: bytes, maxval: int = 255) -> list:
     return feat
 
 
-def _decode_ppm(payload: bytes):
-    """Binary netpbm decoder (P6 RGB and P5 grayscale) — pure stdlib.
-    Header: magic, optional #-comments, width height maxval, one
-    whitespace, then w·h·(3|1) raw bytes."""
-    import re
+#: binary netpbm header: magic, optional #-comments, width height
+#: maxval, one whitespace. An explicit whitespace class, NOT \s: the
+#: decoder and probe_image_dims read every header with this one pattern.
+_PPM_HEADER_RE = re.compile(
+    rb"P([56])[ \t\r\n]+(?:#[^\n]*\n[ \t\r\n]*)*"
+    rb"(\d+)[ \t\r\n]+(\d+)[ \t\r\n]+(\d+)[ \t\r\n]"
+)
 
-    m = re.match(rb"P([56])[ \t\r\n]+(?:#[^\n]*\n[ \t\r\n]*)*(\d+)[ \t\r\n]+(\d+)[ \t\r\n]+(\d+)[ \t\r\n]", payload)
+
+def _decode_ppm(payload: bytes):
+    """Binary netpbm decoder (P6 RGB and P5 grayscale) — pure stdlib:
+    the _PPM_HEADER_RE header, then w·h·(3|1) raw bytes."""
+    m = _PPM_HEADER_RE.match(payload)
     if not m:
         raise ValueError("bad PPM header")
     depth = 3 if m.group(1) == b"6" else 1
@@ -194,7 +201,7 @@ def _decode_wav(payload: bytes):
     import struct
 
     fmt = None
-    for cid, body in _riff_chunks(payload, b"WAVE", "WAV"):
+    for cid, body in _riff_form(payload, b"WAVE", "WAV"):
         clen = len(body)
         if cid == b"fmt ":
             if clen < 16:
@@ -249,19 +256,24 @@ def extract_audio_features(df: DataFrame) -> DataFrame:
     )
 
 
-def _riff_chunks(payload: bytes, form: bytes, label: str):
-    """Yield (fourcc, body) for the top-level chunks of a RIFF
-    container with the given form tag, honoring word alignment —
-    the one chunk walk shared by the WAV and AVI decoders."""
-    import struct
-
+def _riff_form(payload: bytes, form: bytes, label: str):
+    """The top-level chunks of a RIFF container with the given form
+    tag, after checking its signature."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != form:
         raise ValueError(f"bad {label} signature")
-    pos = 12
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (clen,) = struct.unpack_from("<I", payload, pos + 4)
-        body = payload[pos + 8 : pos + 8 + clen]
+    return _riff_chunks(payload, 12, label)
+
+
+def _riff_chunks(data: bytes, pos: int, label: str):
+    """Yield (fourcc, body) for the chunks laid end to end in ``data``
+    from ``pos``, honoring word alignment — the one chunk walk of the
+    WAV and AVI decoders, for the top level and LIST bodies alike."""
+    import struct
+
+    while pos + 8 <= len(data):
+        cid = data[pos : pos + 4]
+        (clen,) = struct.unpack_from("<I", data, pos + 4)
+        body = data[pos + 8 : pos + 8 + clen]
         if len(body) < clen:
             raise ValueError(f"truncated {label} chunk")
         yield cid, body
@@ -285,28 +297,18 @@ def _decode_avi_mjpeg(payload: bytes, every_n: int = 2, max_frames: int = 4):
     n_frames = None
     aw = ah = None
     frames = []
-    for cid, body in _riff_chunks(payload, b"AVI ", "AVI"):
-        clen = len(body)
-        if cid == b"LIST":
-            ltype = body[:4]
-            if ltype in (b"hdrl", b"movi"):
-                # descend: re-scan the list body as chunks
-                sub = 4
-                while sub + 8 <= clen:
-                    scid = body[sub : sub + 4]
-                    (slen,) = struct.unpack_from("<I", body, sub + 4)
-                    sbody = body[sub + 8 : sub + 8 + slen]
-                    if len(sbody) < slen:
-                        raise ValueError("truncated AVI subchunk")
-                    if scid == b"avih":
-                        if slen < 40:
-                            raise ValueError("truncated AVI header")
-                        n_frames = struct.unpack_from("<I", sbody, 16)[0]
-                        aw = struct.unpack_from("<I", sbody, 32)[0]
-                        ah = struct.unpack_from("<I", sbody, 36)[0]
-                    elif scid[2:4] in (b"dc", b"db"):
-                        frames.append(sbody)
-                    sub += 8 + slen + (slen & 1)
+    for cid, body in _riff_form(payload, b"AVI ", "AVI"):
+        if cid != b"LIST" or body[:4] not in (b"hdrl", b"movi"):
+            continue
+        # descend: the list body after its type tag is chunks again
+        for scid, sbody in _riff_chunks(body, 4, "AVI"):
+            if scid == b"avih":
+                if len(sbody) < 40:
+                    raise ValueError("truncated AVI header")
+                (n_frames,) = struct.unpack_from("<I", sbody, 16)
+                aw, ah = struct.unpack_from("<II", sbody, 32)
+            elif scid[2:4] in (b"dc", b"db"):
+                frames.append(sbody)
     if n_frames is None:
         raise ValueError("AVI without avih header")
     if not frames:
@@ -821,19 +823,16 @@ class _JpegHuffTable:
 
 class _JpegBitReader:
     """MSB-first bit reader over entropy-coded data with 0xFF00 byte
-    stuffing; restart markers pause the stream (consumed by the MCU
-    loop via expect_restart)."""
+    stuffing. Any other marker ends the data a block may read; the
+    traversal consumes each RSTn with expect_restart."""
 
     def __init__(self, data: bytes, pos: int):
         self.d = data
         self.i = pos
         self.cur = 0
         self.nbits = 0
-        self.marker = None  # pending RSTn / EOI marker byte
 
     def _load_byte(self):
-        if self.marker is not None:
-            raise ValueError("JPEG entropy data ended at marker")
         if self.i >= len(self.d):
             raise ValueError("truncated JPEG entropy data")
         b = self.d[self.i]
@@ -841,13 +840,9 @@ class _JpegBitReader:
         if b == 0xFF:
             if self.i >= len(self.d):
                 raise ValueError("truncated JPEG entropy data")
-            nxt = self.d[self.i]
-            if nxt == 0x00:  # stuffed literal 0xFF
-                self.i += 1
-            else:  # a real marker terminates entropy data here
-                self.marker = nxt
-                self.i += 1
+            if self.d[self.i] != 0x00:  # not a stuffed literal 0xFF
                 raise ValueError("JPEG entropy data ended at marker")
+            self.i += 1
         self.cur = (self.cur << 8) | b
         self.nbits += 8
 
@@ -864,17 +859,12 @@ class _JpegBitReader:
         return v
 
     def expect_restart(self):
-        """Byte-align, consume one RSTn marker (pending or in-stream)."""
+        """Byte-align, then consume the RSTn marker that must follow."""
         self.nbits = 0  # discard padding bits to the byte boundary
-        if self.marker is None:
-            # marker not yet hit while bit-reading: it must be next
-            if self.i + 1 < len(self.d) and self.d[self.i] == 0xFF:
-                self.marker = self.d[self.i + 1]
-                self.i += 2
-        m = self.marker
-        if m is None or not 0xD0 <= m <= 0xD7:
+        d, i = self.d, self.i
+        if i + 1 >= len(d) or d[i] != 0xFF or not 0xD0 <= d[i + 1] <= 0xD7:
             raise ValueError("expected JPEG restart marker")
-        self.marker = None
+        self.i = i + 2
 
 
 def _jpeg_extend(v: int, t: int) -> int:
@@ -967,569 +957,404 @@ def _jpeg_planes_to_result(planes, comps, w: int, h: int, hmax: int, vmax: int,
     return (w, h, 1, _raster_feature(bytes(out)))
 
 
-def _jpeg_sof_marker(p: bytes):
-    """First SOFn marker byte (0xC0..0xCF except DHT/JPG/DAC), or None."""
-    if p[:2] != b"\xff\xd8":
-        raise ValueError("bad JPEG signature")
-    i = 2
-    while i + 4 <= len(p):
+def _jpeg_segment(p: bytes, i: int):
+    """The marker segment at ``p[i:]`` as (marker, body start, body
+    end), or None at EOI or where fewer than four bytes remain. Skips
+    the legal 0xFF fill bytes before a marker (T.81 B.1.1.2) and the
+    standalone TEM/RSTn markers; SOI has an empty body. The body end
+    may lie past the data: each caller bounds what it reads. This is
+    the one marker walk of the decoder and the dims probe."""
+    n = len(p)
+    while i + 4 <= n:
         if p[i] != 0xFF:
             raise ValueError("bad JPEG marker stream")
-        while i + 1 < len(p) and p[i + 1] == 0xFF:
+        while i + 1 < n and p[i + 1] == 0xFF:
             i += 1
-        if i + 2 > len(p):
-            break
+        if i + 2 > n:
+            return None
         m = p[i + 1]
-        if m == 0x01 or m == 0xD8 or 0xD0 <= m <= 0xD7:
+        if m == 0x01 or 0xD0 <= m <= 0xD7:
             i += 2
             continue
-        if m in (0xD9, 0xDA):
-            break
-        if 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
-            return m
-        seglen = int.from_bytes(p[i + 2 : i + 4], "big")
+        if m == 0xD9:
+            return None
+        if m == 0xD8:
+            return m, i + 2, i + 2
+        if i + 4 > n:
+            raise ValueError("truncated JPEG marker segment")
+        seglen = (p[i + 2] << 8) | p[i + 3]
         if seglen < 2:
             raise ValueError("bad JPEG segment length")
-        i += 2 + seglen
+        return m, i + 4, i + 2 + seglen
     return None
 
 
 def _decode_jpeg(payload: bytes, want: str = "feature"):
-    """Error-contract wrapper + SOF dispatch: baseline/extended
-    sequential (SOF0/1) take the streaming path, progressive (SOF2)
-    the multi-scan coefficient-accumulation path. Malformed streams
-    surface as ValueError (the documented error-column channel), never
-    IndexError / struct.error from short reads inside the parsers."""
-    import struct
-
-    try:
-        if _jpeg_sof_marker(payload) == 0xC2:
-            return _decode_jpeg_progressive(payload, want)
-        return _decode_jpeg_inner(payload, want)
-    except (IndexError, KeyError, struct.error) as e:
-        raise ValueError(f"truncated/malformed JPEG stream: {e}") from e
-
-
-def _decode_jpeg_inner(payload: bytes, want: str = "feature"):
-    """Baseline sequential JPEG decoder — pure stdlib (T.81: DQT/DHT
-    parse, canonical Huffman entropy decode with 0xFF00 stuffing and
-    DRI restart intervals, dequantize + de-zigzag, separable float
-    IDCT with half-up rounding, chroma upsample by replication,
-    YCbCr→RGB per JFIF). Grayscale (1 component), interleaved YCbCr
-    (3 components, any H/V in {1,2}), and NON-INTERLEAVED sequential
-    streams (one single-component SOS per component, T.81 A.2.2:
-    blocks in data-grid raster order, restart interval counted in
-    data units) are supported; progressive (SOF2), arithmetic coding,
-    12-bit precision, and the never-emitted 2-of-3-component scan
-    shape raise ValueError into the error column (the PIL plug-in
-    slot). Closes the reference parity gap for pixel math
-    on web JPEGs (reference images.py:49-74 needs pixels for entropy/
-    histogram scoring).
-    """
-    import math
+    """JPEG decoder — pure stdlib (T.81), Huffman-coded 8-bit frames:
+    baseline and extended sequential (SOF0/1; interleaved, or one
+    single-component scan per component with blocks in data-grid
+    raster order, T.81 A.2.2) and progressive (SOF2, Annex G: spectral
+    selection, successive approximation, EOB runs), with DRI restart
+    intervals and 0xFF00 stuffing. One walk over the marker segments;
+    every scan entropy-decodes into one coefficient grid per component
+    (_JpegFrame), then one dequantize + IDCT + upsample + YCbCr→RGB
+    pass (JFIF) gives the pixels, so any two encodings of the same
+    coefficients decode to the same bytes. Arithmetic coding,
+    lossless/hierarchical frames, 12-bit precision and the
+    2-of-3-component sequential scan raise ValueError into the error
+    column (the PIL plug-in slot); so does every malformed stream,
+    never IndexError / KeyError / struct.error from short reads.
+    Closes the reference parity gap for pixel math on web JPEGs
+    (reference images.py:49-74 needs pixels for entropy/histogram
+    scoring)."""
     import struct
 
     if payload[:2] != b"\xff\xd8":
         raise ValueError("bad JPEG signature")
-    qt = {}          # Tq -> [64] natural-order ints
-    huff_dc = {}     # Th -> _JpegHuffTable
-    huff_ac = {}
-    w = h = None
-    comps = []       # (comp_id, H, V, Tq)
-    restart_interval = 0
+    qt: dict = {}        # Tq -> [64] natural-order ints
+    huff_dc: dict = {}   # Th -> _JpegHuffTable
+    huff_ac: dict = {}
+    frame = None
+    dri = 0
     i = 2
-    planes = None
-    coded: set = set()
-    hmax = vmax = mcux = mcuy = 1
-    while i + 4 <= len(payload):
-        if payload[i] != 0xFF:
-            raise ValueError("bad JPEG marker stream")
-        # legal 0xFF fill bytes may pad before any marker (B.1.1.2)
-        while i + 1 < len(payload) and payload[i + 1] == 0xFF:
-            i += 1
-        if i + 2 > len(payload):
-            break
-        m = payload[i + 1]
-        if m == 0x01 or 0xD0 <= m <= 0xD7:
-            i += 2
-            continue
-        if m == 0xD9:
-            break
-        seglen = struct.unpack_from(">H", payload, i + 2)[0]
-        if seglen < 2 or i + 2 + seglen > len(payload):
-            raise ValueError("bad JPEG segment length")
-        seg = payload[i + 4 : i + 2 + seglen]
-        if m == 0xDB:  # DQT
-            _jpeg_parse_dqt(seg, qt)
-        elif m == 0xC4:  # DHT
-            _jpeg_parse_dht(seg, huff_dc, huff_ac)
-        elif m in (0xC0, 0xC1):  # SOF0/1: baseline / extended sequential
-            if seg[0] != 8:
-                raise ValueError("non-8-bit JPEG precision unsupported")
-            h, w = struct.unpack_from(">HH", seg, 1)
-            nf = seg[5]
-            if w <= 0 or h <= 0 or nf not in (1, 3):
-                raise ValueError("unsupported JPEG geometry")
-            # resource guard: the plane buffers allocate w·h up front;
-            # a crafted SOF can declare 65535² (4G pixels). Real web
-            # images sit far below 16M pixels — larger goes to the
-            # error column (the PIL plug-in slot on a real cluster).
-            if w * h > (1 << 24):
-                raise ValueError("JPEG too large for the pure-Python decoder")
-            comps = []
-            for c in range(nf):
-                cid, hv, tq = seg[6 + 3 * c : 9 + 3 * c]
-                hs, vs = hv >> 4, hv & 0xF
-                if hs not in (1, 2) or vs not in (1, 2):
-                    raise ValueError("unsupported JPEG sampling factors")
-                comps.append((cid, hs, vs, tq))
-            if nf == 1:
-                # T.81 A.2: a single-component scan is NON-interleaved —
-                # blocks cover ceil(w/8) x ceil(h/8) in raster order and
-                # the declared sampling factors do NOT introduce MCU
-                # padding (real encoders emit e.g. H=V=2 grayscale).
-                cid, _hs, _vs, tq = comps[0]
-                comps = [(cid, 1, 1, tq)]
-        elif m in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD,
-                   0xCE, 0xCF):
-            raise ValueError("non-baseline JPEG (progressive/arithmetic) "
-                             "unsupported")
-        elif m == 0xDD:  # DRI
-            restart_interval = struct.unpack_from(">H", seg, 0)[0]
-        elif m == 0xDA:  # SOS — interleaved (Ns=Nf) or per-component (Ns=1)
-            ns = seg[0]
-            if not comps:
-                raise ValueError("JPEG SOS before SOF")
-            if ns != len(comps) and ns != 1:
+    try:
+        while (seg := _jpeg_segment(payload, i)) is not None:
+            m, start, i = seg
+            if i > len(payload):
+                raise ValueError("bad JPEG segment length")
+            body = payload[start:i]
+            if m == 0xDB:
+                _jpeg_parse_dqt(body, qt)
+            elif m == 0xC4:
+                _jpeg_parse_dht(body, huff_dc, huff_ac)
+            elif m == 0xDD:
+                dri = struct.unpack_from(">H", body, 0)[0]
+            elif m == 0xD8:
+                raise ValueError("JPEG SOI inside the stream")
+            elif 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):  # SOFn
+                if frame is not None:
+                    raise ValueError("JPEG with more than one frame header")
+                frame = _JpegFrame(m, body)
+            elif m == 0xDA:
+                if frame is None:
+                    raise ValueError("JPEG SOS before SOF")
+                i = frame.decode_scan(payload, i, body, qt, huff_dc, huff_ac, dri)
+        if frame is None:
+            raise ValueError("JPEG scan not found")
+        return frame.result(qt, want)
+    except (IndexError, KeyError, struct.error) as e:
+        raise ValueError(f"truncated/malformed JPEG stream: {e}") from e
+
+
+class _JpegFrame:
+    """One frame (T.81 B.2.2): the SOF0/1/2 header with the decoder's
+    guards, one coefficient grid per component that every scan
+    decodes into, and each component's quantization table, bound when
+    the component's first scan starts (DQT builds a new list per
+    table, so the reference is the binding)."""
+
+    def __init__(self, marker: int, seg: bytes):
+        if marker not in (0xC0, 0xC1, 0xC2):
+            raise ValueError(
+                "unsupported JPEG frame (lossless/arithmetic/hierarchical)"
+            )
+        if seg[0] != 8:
+            raise ValueError("non-8-bit JPEG precision unsupported")
+        w, h = _jpeg_sof_dims(seg)
+        nf = seg[5]
+        if nf not in (1, 3):
+            raise ValueError("unsupported JPEG geometry")
+        # resource guard: the coefficient grids allocate w·h up front;
+        # a crafted SOF can declare 65535² (4G pixels). Real web images
+        # sit far below 16M pixels — larger goes to the error column
+        # (the PIL plug-in slot on a real cluster).
+        if w * h > (1 << 24):
+            raise ValueError("JPEG too large for the pure-Python decoder")
+        comps = []
+        for c in range(nf):
+            cid, hv, tq = seg[6 + 3 * c : 9 + 3 * c]
+            hs, vs = hv >> 4, hv & 0xF
+            if hs not in (1, 2) or vs not in (1, 2):
+                raise ValueError("unsupported JPEG sampling factors")
+            comps.append((cid, hs, vs, tq))
+        if nf == 1:
+            # T.81 A.2: a single-component scan is NON-interleaved —
+            # blocks cover ceil(w/8) x ceil(h/8) in raster order and
+            # the declared sampling factors do NOT introduce MCU
+            # padding (real encoders emit e.g. H=V=2 grayscale).
+            cid, _hs, _vs, tq = comps[0]
+            comps = [(cid, 1, 1, tq)]
+        self.progressive = marker == 0xC2
+        self.w, self.h, self.comps = w, h, comps
+        self.hmax = max(c[1] for c in comps)
+        self.vmax = max(c[2] for c in comps)
+        self.mcux = (w + 8 * self.hmax - 1) // (8 * self.hmax)
+        self.mcuy = (h + 8 * self.vmax - 1) // (8 * self.vmax)
+        # per component: [by][bx] -> [64] natural-order coefficients
+        # over the MCU-padded grid
+        self.grids = [
+            [[[0] * 64 for _ in range(self.mcux * hs)]
+             for _ in range(self.mcuy * vs)]
+            for cid, hs, vs, tq in comps
+        ]
+        self.quant: dict = {}
+        self.coded: set = set()
+
+    def decode_scan(self, payload, pos, seg, qt, huff_dc, huff_ac, dri):
+        """Entropy-decode the scan with header ``seg`` and data at
+        ``pos`` into the grids; returns the position after its data."""
+        ns = seg[0]
+        slots = []  # per scan component: (ci, Td, Ta), in scan order
+        for s in range(ns):
+            cid, tdta = seg[1 + 2 * s : 3 + 2 * s]
+            ci = next(
+                (ci for ci, c in enumerate(self.comps) if c[0] == cid), None
+            )
+            if ci is None:
+                raise ValueError("JPEG scan references unknown component")
+            slots.append((ci, tdta >> 4, tdta & 0xF))
+        if self.progressive:
+            ss, se, ahal = seg[1 + 2 * ns : 4 + 2 * ns]
+            ah, al = ahal >> 4, ahal & 0xF
+            if ss == 0 and se != 0:
+                raise ValueError("bad progressive DC band")
+            if ss and (ns != 1 or se > 63 or ss > se):
+                raise ValueError("bad progressive AC band")
+        else:
+            ss, se, ah, al = 0, 63, 0, 0
+            if ns != len(self.comps) and ns != 1:
                 # T.81 allows 2-of-3-component sequential scans, but no
                 # mainstream encoder emits them; error channel.
                 raise ValueError("unsupported JPEG scan component count")
-            scan = {}
-            for s in range(ns):
-                cid, tdta = seg[1 + 2 * s : 3 + 2 * s]
-                scan[cid] = (tdta >> 4, tdta & 0xF)
-            if planes is None:
-                hmax = max(c[1] for c in comps)
-                vmax = max(c[2] for c in comps)
-                mcux = (w + 8 * hmax - 1) // (8 * hmax)
-                mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-                planes = [
-                    [[0] * (mcux * hs * 8) for _ in range(mcuy * vs * 8)]
-                    for cid, hs, vs, tq in comps
-                ]
-            scan_cis = [
-                ci for ci, c in enumerate(comps) if c[0] in scan
+            for ci, _, _ in slots:
+                if ci in self.coded:
+                    raise ValueError("JPEG component coded twice")
+                self.coded.add(ci)
+        for ci, _, _ in slots:
+            self.quant.setdefault(ci, qt[self.comps[ci][3]])
+        br = _JpegBitReader(payload, pos)
+        step, restart = _jpeg_block_step(
+            br, huff_dc, huff_ac, len(self.comps), self.progressive,
+            ss, se, ah, al,
+        )
+        for slot, blk in self.blocks(slots, br, dri, restart):
+            step(slot, blk)
+        # scan ends: discard the padding bits; the next marker follows
+        return br.i
+
+    def blocks(self, slots, br, dri, restart):
+        """(slot, block) for one scan in stream order: MCU order over
+        the padded grids when the scan is interleaved, one block per
+        MCU over the component's data-block grid ceil(cw/8)×ceil(ch/8)
+        when it holds one component (T.81 A.2). A restart marker
+        precedes every ``dri``-th MCU and ``restart()`` clears the
+        predictions."""
+        grids = self.grids
+        if len(slots) > 1:
+            layout = [
+                (slot, grids[slot[0]], self.comps[slot[0]][1:3])
+                for slot in slots
             ]
-            if len(scan_cis) != ns:
-                raise ValueError("JPEG scan references unknown component")
-            if any(ci in coded for ci in scan_cis):
-                raise ValueError("JPEG component coded twice")
-            tables = {}
-            for ci in scan_cis:
-                cid, hs, vs, tq = comps[ci]
-                td, ta = scan[cid]
-                if td not in huff_dc or ta not in huff_ac or tq not in qt:
-                    raise ValueError("JPEG references undefined table")
-                tables[ci] = (huff_dc[td], huff_ac[ta], qt[tq])
-            br = _JpegBitReader(payload, i + 2 + seglen)
-            pred = {ci: 0 for ci in scan_cis}
-
-            def decode_block(ci, px, py):
-                # -- entropy-decode one 8×8 block straight into planes
-                dct, act, q = tables[ci]
-                t = dct.decode(br)
-                diff = _jpeg_extend(br.receive(t), t) if t else 0
-                pred[ci] += diff
-                coef = [0] * 64
-                coef[0] = pred[ci] * q[0]
-                k = 1
-                while k < 64:
-                    rs = act.decode(br)
-                    r, size = rs >> 4, rs & 0xF
-                    if size == 0:
-                        if r == 15:  # ZRL
-                            k += 16
-                            continue
-                        break  # EOB
-                    k += r
-                    if k > 63:
-                        raise ValueError("JPEG AC run overflow")
-                    nat = _JPEG_ZIGZAG[k]
-                    coef[nat] = _jpeg_extend(br.receive(size), size) * q[nat]
-                    k += 1
-                _jpeg_idct_block(coef, planes[ci], px, py)
-
-            n_unit = 0
-            if ns == len(comps):
-                # interleaved: MCU raster order over the full image
-                for my in range(mcuy):
-                    for mx in range(mcux):
-                        if (
-                            restart_interval
-                            and n_unit
-                            and n_unit % restart_interval == 0
-                        ):
-                            br.expect_restart()
-                            pred = {ci: 0 for ci in scan_cis}
-                        for ci in scan_cis:
-                            cid, hs, vs, tq = comps[ci]
-                            for by in range(vs):
-                                for bx in range(hs):
-                                    decode_block(
-                                        ci,
-                                        (mx * hs + bx) * 8,
-                                        (my * vs + by) * 8,
-                                    )
-                        n_unit += 1
-            else:
-                # non-interleaved per-component scan (T.81 A.2.2): the
-                # MCU is ONE data unit; blocks cover the component's
-                # data-block grid ceil(cw/8)×ceil(ch/8) in raster order
-                # (no MCU padding), restart interval counted in blocks
-                ci = scan_cis[0]
-                cid, hs, vs, tq = comps[ci]
-                cw = (w * hs + hmax - 1) // hmax
-                ch = (h * vs + vmax - 1) // vmax
-                for by in range((ch + 7) // 8):
-                    for bx in range((cw + 7) // 8):
-                        if (
-                            restart_interval
-                            and n_unit
-                            and n_unit % restart_interval == 0
-                        ):
-                            br.expect_restart()
-                            pred = {ci: 0}
-                        decode_block(ci, bx * 8, by * 8)
-                        n_unit += 1
-            coded.update(scan_cis)
-            # scan ends: byte-align; next marker begins at br.i unless
-            # the reader already consumed one (same idiom as the
-            # progressive path)
-            i = br.i - 2 if br.marker is not None else br.i
-            continue
-        i += 2 + seglen
-    if planes is None or w is None:
-        raise ValueError("JPEG scan not found")
-    if len(coded) != len(comps):
-        raise ValueError("JPEG stream missing a component scan")
-
-    return _jpeg_planes_to_result(planes, comps, w, h, hmax, vmax, want)
-
-
-def _decode_jpeg_progressive(payload: bytes, want: str = "feature"):
-    """Progressive JPEG decoder (T.81 Annex G, Huffman): the dominant
-    variant on the modern web. Coefficients accumulate across scans —
-    DC first/refinement (interleaved or single-component), AC spectral
-    bands with successive approximation and EOB-run coding, AC
-    refinement with correction bits (G.1.2.3) — then one dequantize +
-    IDCT + upsample + color-convert pass identical to the baseline
-    path (same _jpeg_idct_block/_jpeg_planes_to_result helpers, so
-    baseline and progressive encodings of the same coefficients decode
-    to the SAME bytes; the round-trip tests assert exactly that).
-    Arithmetic coding and 12-bit precision stay on the error channel.
-    """
-    import struct
-
-    qt: dict = {}
-    huff_dc: dict = {}
-    huff_ac: dict = {}
-    w = h = None
-    comps: list = []
-    dri = 0
-    coef: list = []      # per comp: [by][bx] -> [64] natural-order ints
-    grid: list = []      # per comp: (wb_full, hb_full, wb_data, hb_data)
-    hmax = vmax = 1
-    i = 2
-    while i + 2 <= len(payload):
-        if payload[i] != 0xFF:
-            raise ValueError("bad JPEG marker stream")
-        # legal 0xFF fill bytes may pad before any marker (B.1.1.2)
-        while i + 1 < len(payload) and payload[i + 1] == 0xFF:
-            i += 1
-        if i + 2 > len(payload):
-            break
-        m = payload[i + 1]
-        if m == 0x01 or 0xD0 <= m <= 0xD7:
-            i += 2
-            continue
-        if m == 0xD9:
-            break
-        seglen = struct.unpack_from(">H", payload, i + 2)[0]
-        if seglen < 2 or i + 2 + seglen > len(payload):
-            raise ValueError("bad JPEG segment length")
-        seg = payload[i + 4 : i + 2 + seglen]
-        if m == 0xDB:
-            _jpeg_parse_dqt(seg, qt)
-        elif m == 0xC4:
-            _jpeg_parse_dht(seg, huff_dc, huff_ac)
-        elif m == 0xC2:
-            if seg[0] != 8:
-                raise ValueError("non-8-bit JPEG precision unsupported")
-            h, w = struct.unpack_from(">HH", seg, 1)
-            nf = seg[5]
-            if w <= 0 or h <= 0 or nf not in (1, 3):
-                raise ValueError("unsupported JPEG geometry")
-            if w * h > (1 << 24):
-                raise ValueError("JPEG too large for the pure-Python decoder")
-            comps = []
-            for c in range(nf):
-                cid, hv, tq = seg[6 + 3 * c : 9 + 3 * c]
-                hs, vs = hv >> 4, hv & 0xF
-                if hs not in (1, 2) or vs not in (1, 2):
-                    raise ValueError("unsupported JPEG sampling factors")
-                comps.append((cid, hs, vs, tq))
-            if nf == 1:
-                # T.81 A.2: a single-component scan is NON-interleaved —
-                # blocks cover ceil(w/8) x ceil(h/8) in raster order and
-                # the declared sampling factors do NOT introduce MCU
-                # padding (real encoders emit e.g. H=V=2 grayscale).
-                cid, _hs, _vs, tq = comps[0]
-                comps = [(cid, 1, 1, tq)]
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            mcux = (w + 8 * hmax - 1) // (8 * hmax)
-            mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-            for cid, hs, vs, tq in comps:
-                wb_full, hb_full = mcux * hs, mcuy * vs
-                # non-interleaved scans cover only the DATA blocks of
-                # the component (ceil(comp_dim/8)), not the MCU padding
-                cw = (w * hs + hmax - 1) // hmax
-                ch = (h * vs + vmax - 1) // vmax
-                grid.append((wb_full, hb_full, (cw + 7) // 8, (ch + 7) // 8))
-                coef.append(
-                    [[[0] * 64 for _ in range(wb_full)] for _ in range(hb_full)]
-                )
-        elif m in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                   0xCD, 0xCE, 0xCF):
-            raise ValueError("mixed/unsupported SOF in progressive stream")
-        elif m == 0xDD:
-            dri = struct.unpack_from(">H", seg, 0)[0]
-        elif m == 0xDA:
-            if not comps:
-                raise ValueError("JPEG SOS before SOF")
-            i = _jpeg_decode_progressive_scan(
-                payload, i + 2 + seglen, seg, comps, grid, coef,
-                huff_dc, huff_ac, dri,
+            mcus = (
+                [
+                    (slot, grid[my * vs + by][mx * hs + bx])
+                    for slot, grid, (hs, vs) in layout
+                    for by in range(vs)
+                    for bx in range(hs)
+                ]
+                for my in range(self.mcuy)
+                for mx in range(self.mcux)
             )
-            continue
-        i += 2 + seglen
-    if w is None or not comps:
-        raise ValueError("JPEG scan not found")
-    planes = []
-    for ci, (cid, hs, vs, tq) in enumerate(comps):
-        if tq not in qt:
-            raise ValueError("JPEG references undefined table")
-        q = qt[tq]
-        wb_full, hb_full, _, _ = grid[ci]
-        plane = [[0] * (wb_full * 8) for _ in range(hb_full * 8)]
-        for by in range(hb_full):
-            for bx in range(wb_full):
-                blk = coef[ci][by][bx]
-                deq = [blk[z] * q[z] for z in range(64)]
-                _jpeg_idct_block(deq, plane, bx * 8, by * 8)
-        planes.append(plane)
-    return _jpeg_planes_to_result(planes, comps, w, h, hmax, vmax, want)
-
-
-def _jpeg_decode_progressive_scan(
-    payload, data_pos, seg, comps, grid, coef, huff_dc, huff_ac, dri
-):
-    """Entropy-decode ONE progressive scan into the coefficient grids;
-    returns the parse position of the next marker."""
-    ns = seg[0]
-    scomps = []
-    for s in range(ns):
-        cid, tdta = seg[1 + 2 * s : 3 + 2 * s]
-        for ci, c in enumerate(comps):
-            if c[0] == cid:
-                scomps.append((ci, tdta >> 4, tdta & 0xF))
-                break
         else:
-            raise ValueError("JPEG scan references unknown component")
-    ss, se, ahal = seg[1 + 2 * ns : 4 + 2 * ns]
-    ah, al = ahal >> 4, ahal & 0xF
-    br = _JpegBitReader(payload, data_pos)
-    zz = _JPEG_ZIGZAG
+            (slot,) = slots
+            _, hs, vs, _ = self.comps[slot[0]]
+            cw = (self.w * hs + self.hmax - 1) // self.hmax
+            ch = (self.h * vs + self.vmax - 1) // self.vmax
+            mcus = (
+                [(slot, blk)]
+                for row in grids[slot[0]][: (ch + 7) // 8]
+                for blk in row[: (cw + 7) // 8]
+            )
+        for n, mcu in enumerate(mcus):
+            if dri and n and n % dri == 0:
+                br.expect_restart()
+                restart()
+            yield from mcu
 
-    def correction(blk, idx, p1, m1):
+    def result(self, qt, want):
+        """Dequantize + IDCT every block, then crop/upsample/convert."""
+        if not self.progressive and len(self.coded) != len(self.comps):
+            raise ValueError("JPEG stream missing a component scan")
+        planes = []
+        for ci, (cid, hs, vs, tq) in enumerate(self.comps):
+            # progressive scans may never arrive: those coefficients
+            # stay zero, under the table the frame names
+            q = self.quant.setdefault(ci, qt[tq])
+            grid = self.grids[ci]
+            plane = [[0] * (len(grid[0]) * 8) for _ in range(len(grid) * 8)]
+            for by, row in enumerate(grid):
+                for bx, blk in enumerate(row):
+                    _jpeg_idct_block(
+                        [c * qz for c, qz in zip(blk, q)], plane, bx * 8, by * 8
+                    )
+            planes.append(plane)
+        return _jpeg_planes_to_result(
+            planes, self.comps, self.w, self.h, self.hmax, self.vmax, want
+        )
+
+
+def _jpeg_block_step(br, huff_dc, huff_ac, ncomps, progressive, ss, se, ah, al):
+    """(step, restart) for one scan. ``step(slot, block)`` entropy-
+    decodes one 8×8 block's coefficients: baseline DC+AC (T.81 F.2.2)
+    in a sequential frame, else the progressive step the band and
+    approximation pick (G.1.2): DC first, DC refine, AC first with EOB
+    runs, AC refine with correction bits. ``restart()`` clears the DC
+    predictions and the EOB run."""
+    zz = _JPEG_ZIGZAG
+    pred = [0] * ncomps
+    eobrun = 0
+    p1, m1 = 1 << al, -1 << al
+
+    def restart():
+        nonlocal eobrun
+        pred[:] = [0] * ncomps
+        eobrun = 0
+
+    def dc(slot):
+        ci, td, _ = slot
+        t = huff_dc[td].decode(br)
+        pred[ci] += _jpeg_extend(br.receive(t), t) if t else 0
+        return pred[ci]
+
+    def baseline(slot, blk):
+        blk[0] = dc(slot)
+        act = huff_ac[slot[2]]
+        k = 1
+        while k < 64:
+            rs = act.decode(br)
+            r, size = rs >> 4, rs & 0xF
+            if size == 0:
+                if r == 15:  # ZRL
+                    k += 16
+                    continue
+                break  # EOB
+            k += r
+            if k > 63:
+                raise ValueError("JPEG AC run overflow")
+            blk[zz[k]] = _jpeg_extend(br.receive(size), size)
+            k += 1
+
+    def dc_first(slot, blk):
+        blk[0] = dc(slot) << al
+
+    def dc_refine(slot, blk):
+        blk[0] |= br.read_bit() << al
+
+    def ac_first(slot, blk):
+        # EOB runs span blocks (G.1.2.2)
+        nonlocal eobrun
+        if eobrun > 0:
+            eobrun -= 1
+            return
+        act = huff_ac[slot[2]]
+        k = ss
+        while k <= se:
+            rs = act.decode(br)
+            r, size = rs >> 4, rs & 0xF
+            if size:
+                k += r
+                if k > se:
+                    raise ValueError("JPEG AC run overflow")
+                blk[zz[k]] = _jpeg_extend(br.receive(size), size) << al
+            else:
+                if r != 15:
+                    eobrun = (1 << r) - 1
+                    if r:
+                        eobrun += br.receive(r)
+                    break
+                k += 15  # ZRL
+            k += 1
+
+    def correction(blk, idx):
         if br.read_bit() and (blk[idx] & p1) == 0:
             blk[idx] += p1 if blk[idx] >= 0 else m1
 
-    if ss == 0:
-        # ---- DC scan (first or refinement); se must be 0
-        if se != 0:
-            raise ValueError("bad progressive DC band")
-        pred = [0] * len(comps)
-        if ns == len(comps) and ns > 1:
-            # interleaved MCU order over the full grids
-            mcux = grid[0][0] // comps[0][1]
-            mcuy = grid[0][1] // comps[0][2]
-            n_mcu = 0
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    if dri and n_mcu and n_mcu % dri == 0:
-                        br.expect_restart()
-                        pred = [0] * len(comps)
-                    for ci, td, ta in scomps:
-                        _, hs, vs, _ = comps[ci]
-                        for by in range(vs):
-                            for bx in range(hs):
-                                blk = coef[ci][my * vs + by][mx * hs + bx]
-                                if ah == 0:
-                                    t = huff_dc[td].decode(br)
-                                    pred[ci] += _jpeg_extend(br.receive(t), t) if t else 0
-                                    blk[0] = pred[ci] << al
-                                else:
-                                    blk[0] |= br.read_bit() << al
-                    n_mcu += 1
-        else:
-            # single-component DC scan (or 1-component image): block
-            # raster order over the component's FULL grid (a
-            # 1-component scan of a 1-component image is "interleaved"
-            # per T.81 and covers the padded grid)
-            for ci, td, ta in scomps:
-                wb, hb = grid[ci][0], grid[ci][1]
-                if len(comps) > 1:
-                    wb, hb = grid[ci][2], grid[ci][3]
-                n_mcu = 0
-                for by in range(hb):
-                    for bx in range(wb):
-                        if dri and n_mcu and n_mcu % dri == 0:
-                            br.expect_restart()
-                            pred[ci] = 0
-                        blk = coef[ci][by][bx]
-                        if ah == 0:
-                            t = huff_dc[td].decode(br)
-                            pred[ci] += _jpeg_extend(br.receive(t), t) if t else 0
-                            blk[0] = pred[ci] << al
-                        else:
-                            blk[0] |= br.read_bit() << al
-                        n_mcu += 1
-    else:
-        # ---- AC scan: always single-component, data-block raster order
-        if ns != 1 or se > 63 or ss > se:
-            raise ValueError("bad progressive AC band")
-        ci, td, ta = scomps[0]
-        act = huff_ac.get(ta)
-        if act is None:
-            raise ValueError("JPEG references undefined table")
-        wb, hb = (grid[ci][0], grid[ci][1]) if len(comps) == 1 else (
-            grid[ci][2], grid[ci][3]
-        )
-        p1, m1 = 1 << al, -1 << al
-        eobrun = 0
-        n_mcu = 0
-        for by in range(hb):
-            for bx in range(wb):
-                if dri and n_mcu and n_mcu % dri == 0:
-                    br.expect_restart()
-                    eobrun = 0
-                n_mcu += 1
-                blk = coef[ci][by][bx]
-                if ah == 0:
-                    # ---- AC first scan (G.1.2.2): EOB runs span blocks
-                    if eobrun > 0:
-                        eobrun -= 1
-                        continue
-                    k = ss
-                    while k <= se:
-                        rs = act.decode(br)
-                        r, size = rs >> 4, rs & 0xF
-                        if size:
-                            k += r
-                            if k > se:
-                                raise ValueError("JPEG AC run overflow")
-                            blk[zz[k]] = (
-                                _jpeg_extend(br.receive(size), size) << al
-                            )
-                        else:
-                            if r != 15:
-                                eobrun = (1 << r) - 1
-                                if r:
-                                    eobrun += br.receive(r)
-                                break
-                            k += 15  # ZRL
-                        k += 1
+    def ac_refine(slot, blk):
+        # correction bits for nonzero history (G.1.2.3)
+        nonlocal eobrun
+        k = ss
+        if eobrun == 0:
+            act = huff_ac[slot[2]]
+            while k <= se:
+                rs = act.decode(br)
+                r, size = rs >> 4, rs & 0xF
+                newval = 0
+                if size == 0:
+                    if r != 15:
+                        eobrun = 1 << r
+                        if r:
+                            eobrun += br.receive(r)
+                        break
                 else:
-                    # ---- AC refinement (G.1.2.3): correction bits
-                    k = ss
-                    if eobrun == 0:
-                        while k <= se:
-                            rs = act.decode(br)
-                            r, size = rs >> 4, rs & 0xF
-                            newval = 0
-                            if size == 0:
-                                if r != 15:
-                                    eobrun = 1 << r
-                                    if r:
-                                        eobrun += br.receive(r)
-                                    break
-                            else:
-                                if size != 1:
-                                    raise ValueError(
-                                        "bad refinement magnitude"
-                                    )
-                                newval = p1 if br.read_bit() else m1
-                            while k <= se:
-                                idx = zz[k]
-                                if blk[idx] != 0:
-                                    correction(blk, idx, p1, m1)
-                                else:
-                                    if r == 0:
-                                        break
-                                    r -= 1
-                                k += 1
-                            if newval and k <= se:
-                                blk[zz[k]] = newval
-                            k += 1
-                    if eobrun > 0:
-                        while k <= se:
-                            idx = zz[k]
-                            if blk[idx] != 0:
-                                correction(blk, idx, p1, m1)
-                            k += 1
-                        eobrun -= 1
-    # scan ends: discard padding bits; next marker begins at br.i
-    # unless the reader already consumed one
-    return br.i - 2 if br.marker is not None else br.i
+                    if size != 1:
+                        raise ValueError("bad refinement magnitude")
+                    newval = p1 if br.read_bit() else m1
+                while k <= se:
+                    idx = zz[k]
+                    if blk[idx] != 0:
+                        correction(blk, idx)
+                    else:
+                        if r == 0:
+                            break
+                        r -= 1
+                    k += 1
+                if newval and k <= se:
+                    blk[zz[k]] = newval
+                k += 1
+        if eobrun > 0:
+            while k <= se:
+                idx = zz[k]
+                if blk[idx] != 0:
+                    correction(blk, idx)
+                k += 1
+            eobrun -= 1
+
+    if not progressive:
+        return baseline, restart
+    if ss == 0:
+        return (dc_refine if ah else dc_first), restart
+    return (ac_refine if ah else ac_first), restart
 
 
 def _jpeg_dims(p: bytes):
     """JPEG dimensions from the SOF marker — header-only scan, no
     entropy decode. Newspaper's image scoring (reference images.py)
-    needs exactly this: width/height, not pixels."""
+    needs exactly this: width/height, not pixels. Lenient where the
+    decoder is strict: any SOF0..3 counts, a stray SOI is skipped, and
+    the SOF body need only hold its dims."""
     if p[:2] != b"\xff\xd8":
         raise ValueError("bad JPEG signature")
     i = 2
-    while i + 2 <= len(p):
-        if p[i] != 0xFF:
-            raise ValueError("bad JPEG marker stream")
-        # legal 0xFF fill bytes may pad before any marker (spec B.1.1.2)
-        while i + 1 < len(p) and p[i + 1] == 0xFF:
-            i += 1
-        if i + 2 > len(p):
+    while (seg := _jpeg_segment(p, i)) is not None:
+        m, start, end = seg
+        if m == 0xDA:
             break
-        m = p[i + 1]
-        if m == 0xD8 or m == 0x01 or 0xD0 <= m <= 0xD7:
-            i += 2
-            continue
-        if m in (0xD9, 0xDA):
-            break
-        if i + 4 > len(p):
-            break
-        seglen = int.from_bytes(p[i + 2 : i + 4], "big")
-        if seglen < 2:
-            raise ValueError("bad JPEG segment length")
-        if m in (0xC0, 0xC1, 0xC2, 0xC3):
-            if i + 9 > len(p):
+        if 0xC0 <= m <= 0xC3:
+            if start + 5 > len(p):
                 raise ValueError("truncated JPEG SOF")
-            h = int.from_bytes(p[i + 5 : i + 7], "big")
-            w = int.from_bytes(p[i + 7 : i + 9], "big")
-            if w <= 0 or h <= 0:
-                raise ValueError("bad JPEG dimensions")
-            return w, h
-        i += 2 + seglen
+            return _jpeg_sof_dims(p[start : start + 5])
+        i = end
     raise ValueError("JPEG SOF not found")
+
+
+def _jpeg_sof_dims(seg: bytes):
+    """(width, height) of a SOF body: precision, then Y and X."""
+    import struct
+
+    h, w = struct.unpack_from(">HH", seg, 1)
+    if w <= 0 or h <= 0:
+        raise ValueError("bad JPEG dimensions")
+    return w, h
 
 
 def probe_image_dims(payload: bytes):
@@ -1567,17 +1392,10 @@ def probe_image_dims(payload: bytes):
             raise ValueError("bad BMP dimensions")
         return w, abs(h), "bmp"
     if payload[:2] in (b"P6", b"P5"):
-        import re
-
-        # the decoder's explicit whitespace class, NOT \s: the probe and
-        # _decode_ppm must never disagree about the same payload
-        m = re.match(
-            rb"P[56][ \t\r\n]+(?:#[^\n]*\n[ \t\r\n]*)*(\d+)[ \t\r\n]+(\d+)[ \t\r\n]+(\d+)[ \t\r\n]",
-            payload,
-        )
+        m = _PPM_HEADER_RE.match(payload)
         if not m:
             raise ValueError("bad PPM header")
-        w, h = int(m.group(1)), int(m.group(2))
+        w, h = int(m.group(2)), int(m.group(3))
         if w <= 0 or h <= 0:
             raise ValueError("bad PPM dimensions")
         return w, h, "ppm"
@@ -1587,11 +1405,12 @@ def probe_image_dims(payload: bytes):
 def _decode_image(payload: bytes, real_decode: bool = False):
     """Image decode. real_decode=True parses REAL containers with the
     pure-stdlib decoders above (PPM/P6, uncompressed BMP, PNG via zlib,
-    non-interlaced GIF via the LZW decoder, and baseline sequential
-    JPEG via the full Huffman+IDCT decoder — the formats expressible
-    without PIL/opencv, which this container lacks; other magic bytes
-    and non-baseline variants raise ValueError into the error column,
-    the slot where a PIL-backed decoder would plug in).
+    GIF via the LZW decoder, sequential and progressive Huffman JPEG
+    via the full Huffman+IDCT decoder, AVI/MJPEG — the formats
+    expressible without PIL/opencv, which this container lacks; other
+    magic bytes and the variants those decoders do not read, e.g.
+    arithmetic-coded or 12-bit JPEG, raise ValueError into the error
+    column, the slot where a PIL-backed decoder would plug in).
 
     real_decode=False returns the deterministic fake whose dims derive
     from md5(payload) — chosen so the DuckDB oracle reconstructs them

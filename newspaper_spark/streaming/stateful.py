@@ -9,7 +9,7 @@ batch job; state size is O(active users), not O(events).
 """
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
+from typing import Any, Callable, Iterable, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -30,58 +30,80 @@ STATE_SCHEMA = T.StructType(
 )
 
 
+def _session_update(
+    key: Tuple[Any, ...],
+    pdfs: Iterable[pd.DataFrame],
+    state: GroupState,
+    gap_s: float,
+    read_ts: Callable[[pd.DataFrame], list],
+    set_timeout: Callable[[GroupState, float], None],
+) -> Iterator[pd.DataFrame]:
+    """The session fold both update functions share. A timed-out state
+    is emitted closed and dropped. Otherwise the batch's event times
+    (``read_ts`` per frame, then sorted) fold into the open
+    (start, last, n): every gap longer than ``gap_s`` emits the session
+    it closes, the open session is stored, ``set_timeout(state, last)``
+    arms its expiry, and it is emitted open (closed=False) for
+    observers."""
+    user_id = key[0]
+    out = []
+    if state.hasTimedOut:
+        start_s, last_s, n = state.get
+        out.append((user_id, start_s, last_s, n, True))
+        state.remove()
+    else:
+        ts_list = sorted(t for pdf in pdfs for t in read_ts(pdf))
+        if state.exists:
+            start_s, last_s, n = state.get
+        else:
+            start_s = last_s = None
+            n = 0
+        for t in ts_list:
+            if last_s is not None and t - last_s > gap_s:
+                out.append((user_id, start_s, last_s, n, True))
+                start_s, last_s, n = t, t, 1
+            else:
+                if start_s is None:
+                    start_s = last_s = t
+                else:
+                    # ts_list is sorted only WITHIN a batch: an
+                    # out-of-order event from a later batch can carry
+                    # t < last_s — it joins the session but must not
+                    # move its end (or start) backward, or the timeout
+                    # would fire before true last_event + gap
+                    start_s = min(start_s, t)
+                    last_s = max(last_s, t)
+                n += 1
+        if last_s is not None:
+            state.update((start_s, last_s, n))
+            set_timeout(state, last_s)
+            out.append((user_id, start_s, last_s, n, False))
+    if out:
+        yield pd.DataFrame(
+            {
+                "user_id": [o[0] for o in out],
+                "session_start": pd.to_datetime([o[1] for o in out], unit="s"),
+                "session_end": pd.to_datetime([o[2] for o in out], unit="s"),
+                "n_events": [o[3] for o in out],
+                "closed": [o[4] for o in out],
+            }
+        )
+
+
 def make_session_fn(gap_minutes: int = 30):
+    """Processing-time session fn: event times arrive as epoch seconds
+    (``ts_s``) and the session closes ``gap`` of wall clock after its
+    last batch."""
     gap_s = gap_minutes * 60
 
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        user_id = key[0]
-        out = []
-        if state.hasTimedOut:
-            start_s, last_s, n = state.get
-            out.append((user_id, start_s, last_s, n, True))
-            state.remove()
-        else:
-            ts_list = []
-            for pdf in pdfs:
-                ts_list.extend(pdf["ts_s"].tolist())
-            ts_list.sort()
-            if state.exists:
-                start_s, last_s, n = state.get
-            else:
-                start_s = last_s = None
-                n = 0
-            for t in ts_list:
-                if last_s is not None and t - last_s > gap_s:
-                    out.append((user_id, start_s, last_s, n, True))
-                    start_s, last_s, n = t, t, 1
-                else:
-                    if start_s is None:
-                        start_s = last_s = t
-                    else:
-                        # cross-batch out-of-order event: joins the
-                        # session but never moves its bounds backward
-                        start_s = min(start_s, t)
-                        last_s = max(last_s, t)
-                    n += 1
-            if last_s is not None:
-                state.update((start_s, last_s, n))
-                state.setTimeoutDuration(gap_s * 1000)
-                # also emit the open session (closed=False) for observers
-                out.append((user_id, start_s, last_s, n, False))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [o[0] for o in out],
-                    "session_start": pd.to_datetime([o[1] for o in out], unit="s"),
-                    "session_end": pd.to_datetime([o[2] for o in out], unit="s"),
-                    "n_events": [o[3] for o in out],
-                    "closed": [o[4] for o in out],
-                }
-            )
+    def read_ts(pdf: pd.DataFrame) -> list:
+        return pdf["ts_s"].tolist()
+
+    def set_timeout(state: GroupState, last_s: float) -> None:
+        state.setTimeoutDuration(gap_s * 1000)
+
+    def update(key, pdfs, state):
+        return _session_update(key, pdfs, state, gap_s, read_ts, set_timeout)
 
     return update
 
@@ -95,67 +117,21 @@ def make_event_time_session_fn(gap_minutes: int = 30):
     straggler can't reopen a closed session."""
     gap_s = gap_minutes * 60
 
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        user_id = key[0]
-        out = []
-        if state.hasTimedOut:
-            start_s, last_s, n = state.get
-            out.append((user_id, start_s, last_s, n, True))
-            state.remove()
-        else:
-            ts_list = []
-            for pdf in pdfs:
-                # ts arrives as datetime64 (the watermark column must
-                # stay a timestamp) — convert to epoch seconds
-                ts_list.extend(
-                    pdf["ts"].astype("int64").floordiv(1_000_000_000).tolist()
-                )
-            ts_list.sort()
-            if state.exists:
-                start_s, last_s, n = state.get
-            else:
-                start_s = last_s = None
-                n = 0
-            for t in ts_list:
-                if last_s is not None and t - last_s > gap_s:
-                    out.append((user_id, start_s, last_s, n, True))
-                    start_s, last_s, n = t, t, 1
-                else:
-                    if start_s is None:
-                        start_s = last_s = t
-                    else:
-                        # ts_list is sorted only WITHIN a batch: a
-                        # late-but-within-watermark event from a later
-                        # batch can carry t < last_s — it joins the
-                        # session but must not move its end (or start)
-                        # backward, or the timeout would fire before
-                        # true last_event + gap
-                        start_s = min(start_s, t)
-                        last_s = max(last_s, t)
-                    n += 1
-            if last_s is not None:
-                state.update((start_s, last_s, n))
-                # close when the watermark passes last event + gap; the
-                # timeout timestamp must exceed the current watermark
-                target_ms = int((last_s + gap_s) * 1000)
-                state.setTimeoutTimestamp(
-                    max(target_ms, state.getCurrentWatermarkMs() + 1)
-                )
-                out.append((user_id, start_s, last_s, n, False))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [o[0] for o in out],
-                    "session_start": pd.to_datetime([o[1] for o in out], unit="s"),
-                    "session_end": pd.to_datetime([o[2] for o in out], unit="s"),
-                    "n_events": [o[3] for o in out],
-                    "closed": [o[4] for o in out],
-                }
-            )
+    def read_ts(pdf: pd.DataFrame) -> list:
+        # ts arrives as datetime64 (the watermark column must stay a
+        # timestamp) — convert to epoch seconds
+        return pdf["ts"].astype("int64").floordiv(1_000_000_000).tolist()
+
+    def set_timeout(state: GroupState, last_s: float) -> None:
+        # close when the watermark passes last event + gap; the timeout
+        # timestamp must exceed the current watermark
+        target_ms = int((last_s + gap_s) * 1000)
+        state.setTimeoutTimestamp(
+            max(target_ms, state.getCurrentWatermarkMs() + 1)
+        )
+
+    def update(key, pdfs, state):
+        return _session_update(key, pdfs, state, gap_s, read_ts, set_timeout)
 
     return update
 

@@ -171,6 +171,31 @@ def test_meta_img_chain():
     assert get_meta_img_url("http://x.com/p", doc2, MetaIndex(doc2)) == "http://x.com/img/b.png"
 
 
+def test_top_image_is_first_in_document_order_under_any_hash_seed():
+    """With no meta image, top_image is the top node's first <img src>
+    in document order: the same for every string-hash seed."""
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    code = (
+        "from newspaper_spark.kernel.article import extract_article\n"
+        "p = '<p>' + ' '.join(['The council voted on the new budget for "
+        "the city and the schools'] * 6) + '.</p>'\n"
+        "html = ('<html><head><title>T</title></head><body><div>' + p"
+        " + '<img src=\"/a.jpg\">' + p + '<img src=\"/b.jpg\">' + p"
+        " + '<img src=\"/c.jpg\">' + p + '</div></body></html>')\n"
+        "r = extract_article(html, 'http://example.com/news/story.html')\n"
+        "print(r['top_image'], len(r['images']))\n"
+    )
+    for seed in range(1, 7):
+        out = subprocess.run(
+            [sys.executable, "-c", code], cwd=root, capture_output=True,
+            text=True, check=True, env={"PYTHONHASHSEED": str(seed)},
+        ).stdout.split()
+        assert out == ["http://example.com/a.jpg", "3"], (seed, out)
+
+
 def test_authors_byline():
     from newspaper_spark.dom import fromstring
     from newspaper_spark.kernel.metadata import get_authors

@@ -2887,12 +2887,15 @@ def _t_encode_baseline_from_coefs(grids, samp, w, h, quant):
     )
 
 
-def _t_encode_progressive_from_coefs(grids, samp, w, h, quant, dri=0):
+def _t_encode_progressive_from_coefs(grids, samp, w, h, quant, dri=0,
+                                    dc_interleaved=True):
     """Multi-scan progressive stream: interleaved DC first (Al=1) +
     DC refinement, then per-component AC first (Al=1, EOB runs) and
     AC refinement (Al=0, libjpeg-faithful correction-bit buffering).
     ``dri`` > 0 inserts restart markers every dri MCUs in the DC scans
-    (preds reset; byte-aligned RSTn cycle)."""
+    (preds reset; byte-aligned RSTn cycle). ``dc_interleaved=False``
+    emits each DC pass as one single-component scan per component,
+    over that component's data-block grid (T.81 A.2.2)."""
     import struct
 
     from newspaper_spark.operators.multimodal import _JPEG_ZIGZAG
@@ -2919,40 +2922,53 @@ def _t_encode_progressive_from_coefs(grids, samp, w, h, quant, dri=0):
             for bx in range(wb):
                 yield grids[ci][by][bx]
 
-    # ---- scans 1+2: DC first (Al=1) then DC refinement (Al=0), both
-    # interleaved over MCUs, with optional restart markers every dri
-    for scan_i in (0, 1):
-        data = bytearray()
-        bits = []
-        preds = [0] * nf
-        n_mcu = 0
+    def mcus():
+        # interleaved: MCU order over every component's full grid
         for my in range(mcuy):
             for mx in range(mcux):
+                yield [
+                    (ci, grids[ci][my * vs + by][mx * hs + bx])
+                    for ci, (hs, vs) in enumerate(samp)
+                    for by in range(vs)
+                    for bx in range(hs)
+                ]
+
+    if dc_interleaved:
+        dc_scans = [(list(range(1, nf + 1)), list(mcus()))]
+    else:
+        dc_scans = [
+            ([ci + 1], [[(ci, coef)] for coef in comp_blocks(ci)])
+            for ci in range(nf)
+        ]
+
+    # ---- DC first (Al=1) then DC refinement (Al=0), with optional
+    # restart markers every dri MCUs
+    for scan_i in (0, 1):
+        for scomp_ids, units in dc_scans:
+            data = bytearray()
+            bits = []
+            preds = [0] * nf
+            for n_mcu, unit in enumerate(units):
                 if dri and n_mcu and n_mcu % dri == 0:
                     data += _t_bits_to_bytes(bits)
                     bits = []
                     data += bytes([0xFF, 0xD0 + ((n_mcu // dri - 1) % 8)])
                     preds = [0] * nf
-                for ci in range(nf):
-                    hs, vs = samp[ci]
-                    for by in range(vs):
-                        for bx in range(hs):
-                            coef = grids[ci][my * vs + by][mx * hs + bx]
-                            if scan_i == 0:
-                                val = coef[0] >> 1
-                                diff = val - preds[ci]
-                                preds[ci] = val
-                                size = abs(diff).bit_length()
-                                c, n = _T_DC_CODES[size]
-                                _t_put(bits, c, n)
-                                if size:
-                                    _t_emit_val(bits, diff, size)
-                            else:
-                                bits.append(coef[0] & 1)
-                n_mcu += 1
-        data += _t_bits_to_bytes(bits)
-        ah, al = (0, 1) if scan_i == 0 else (1, 0)
-        out += _t_sos(list(range(1, nf + 1)), 0, 0, ah, al) + data
+                for ci, coef in unit:
+                    if scan_i == 0:
+                        val = coef[0] >> 1
+                        diff = val - preds[ci]
+                        preds[ci] = val
+                        size = abs(diff).bit_length()
+                        c, n = _T_DC_CODES[size]
+                        _t_put(bits, c, n)
+                        if size:
+                            _t_emit_val(bits, diff, size)
+                    else:
+                        bits.append(coef[0] & 1)
+            data += _t_bits_to_bytes(bits)
+            ah, al = (0, 1) if scan_i == 0 else (1, 0)
+            out += _t_sos(scomp_ids, 0, 0, ah, al) + data
     if dri:
         # disable restarts for the AC scans below (DRI redefinition
         # between scans, T.81 B.2.4.4)
@@ -3123,10 +3139,7 @@ def test_jpeg_progressive_equals_baseline_gray():
     and as a 4-scan progressive stream (DC first/refine + AC first
     with EOB runs / AC refine with correction bits) must decode to
     IDENTICAL pixels — the two entropy paths share one IDCT."""
-    from newspaper_spark.operators.multimodal import (
-        _decode_jpeg,
-        _jpeg_sof_marker,
-    )
+    from newspaper_spark.operators.multimodal import _decode_jpeg
 
     w, h = 24, 16
     plane = [[(x * 11 + y * 7 + (x * y) % 13) % 256 for x in range(w)]
@@ -3135,8 +3148,8 @@ def test_jpeg_progressive_equals_baseline_gray():
     grids, _, _ = _t_coef_grids([plane], [(1, 1)], quant)
     base = _t_encode_baseline_from_coefs(grids, [(1, 1)], w, h, quant)
     prog = _t_encode_progressive_from_coefs(grids, [(1, 1)], w, h, quant)
-    assert _jpeg_sof_marker(base) == 0xC0
-    assert _jpeg_sof_marker(prog) == 0xC2
+    assert b"\xff\xc0" in base and b"\xff\xc2" not in base
+    assert b"\xff\xc2" in prog and b"\xff\xc0" not in prog
     assert _decode_jpeg(prog) == _decode_jpeg(base)
 
 
@@ -3157,6 +3170,46 @@ def test_jpeg_progressive_equals_baseline_color_subsampled():
     base = _t_encode_baseline_from_coefs(grids, samp, w, h, quant)
     prog = _t_encode_progressive_from_coefs(grids, samp, w, h, quant)
     assert _decode_jpeg(prog) == _decode_jpeg(base)
+    # one DC scan per component: the data-grid DC traversal
+    split = _t_encode_progressive_from_coefs(
+        grids, samp, w, h, quant, dc_interleaved=False
+    )
+    assert split.count(b"\xff\xda") == 12
+    assert _decode_jpeg(split) == _decode_jpeg(base)
+
+
+def test_jpeg_every_prefix_decodes_or_raises_valueerror():
+    """Every truncation of a baseline, a progressive and a
+    non-interleaved-with-restarts 16×16 colour stream either decodes
+    or raises ValueError, in the decoder and in the dims probe."""
+    from newspaper_spark.operators.multimodal import _decode_jpeg, _jpeg_dims
+
+    w, h = 16, 16
+    Y = [[(x * 9 + y * 5) % 256 for x in range(w)] for y in range(h)]
+    Cb = [[(x * 3 + y * 13 + 40) % 256 for x in range(8)] for y in range(8)]
+    Cr = [[(x * 7 + y * 2 + 90) % 256 for x in range(8)] for y in range(8)]
+    quant = [1] * 64
+    samp = [(2, 2), (1, 1), (1, 1)]
+    grids, _, _ = _t_coef_grids([Y, Cb, Cr], samp, quant)
+    payloads = [
+        _t_encode_baseline_from_coefs(grids, samp, w, h, quant),
+        _t_encode_progressive_from_coefs(grids, samp, w, h, quant),
+        _t_encode_seq_noninterleaved_from_coefs(grids, samp, w, h, quant, dri=1),
+    ]
+    decoded = 0
+    for payload in payloads:
+        for k in range(len(payload) + 1):
+            try:
+                _jpeg_dims(payload[:k])
+            except ValueError:
+                pass
+            try:
+                _decode_jpeg(payload[:k])
+                decoded += 1
+            except ValueError:
+                pass
+    # the full streams, and the progressive one cut between scans
+    assert decoded > len(payloads)
 
 
 def test_jpeg_progressive_eobrun_zrl_and_negatives():

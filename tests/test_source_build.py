@@ -78,3 +78,27 @@ def test_build_sources_pipeline(spark):
     # the dated story was memoized-out; the /news/ slug survives, deduped
     assert urls == {"http://news.example.com/news/another-very-long-story-slug-here"}
     assert len(rows) == 1
+
+
+def test_extract_categories_and_feeds_match_kernel(spark):
+    """The Spark discovery stages explode exactly the kernel's lists,
+    one row per url, for every source page (an empty page gives none)."""
+    from newspaper_spark.kernel.source import get_category_urls, get_feed_urls
+    from newspaper_spark.operators.source_build import (
+        extract_categories,
+        extract_feeds,
+    )
+
+    pages = [
+        ("http://news.example.com", SOURCE_HTML),
+        ("http://other.example.org", SOURCE_HTML),
+        ("http://empty.example.net", ""),
+    ]
+    sources = spark.createDataFrame(pages, "source_url string, html string")
+    for stage, kernel, col in (
+        (extract_categories, get_category_urls, "category_url"),
+        (extract_feeds, get_feed_urls, "feed_url"),
+    ):
+        got = sorted((r.source_url, r[col]) for r in stage(sources).collect())
+        want = sorted((s, u) for s, html in pages for u in kernel(s, html))
+        assert got == want and got, col
