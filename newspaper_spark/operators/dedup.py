@@ -7,19 +7,23 @@ written Spark-first:
                  combine via min() aggregation.
 * minhash LSH  — shingle → ONE base md5-derived 60-bit hash → K affine
                  rehashes (universal hashing (a_k·x + b_k) mod p, p =
-                 2^31−1) → running minima in a single `aggregate` pass →
-                 B bands; candidate pairs come from a self-equi-join on
-                 (band_idx, band_signature), i.e. co-partitioned hash
-                 join, never an O(n²) cross join. One md5 per shingle
-                 (not K), and everything is reconstructable in the
-                 DuckDB oracle via ('0x' || substring(md5(s),1,15)).
+                 2^31−1) → K minima in one hash aggregate → B bands;
+                 candidate pairs come from the banded self-equi-join
+                 (``band_pairs``), i.e. co-partitioned hash join, never
+                 an O(n²) cross join. One md5 per shingle (not K), and
+                 everything is reconstructable in the DuckDB oracle via
+                 ('0x' || substring(md5(s),1,15)).
 * simhash      — 64-bit sign-aggregated token hashes; bits come from
-                 the md5 hex digest (portable to the oracle), votes
-                 accumulate in ONE `aggregate` pass carrying a 64-slot
-                 vote array (not 64 passes).
+                 the md5 hex digest (portable to the oracle), the 64
+                 bit-votes are conditional sums in ONE hash aggregate
+                 (not 64 passes).
 * n-gram jaccard — verification stage for LSH candidates; shingles are
                  hashed to int64 before the join so the shuffle carries
                  8-byte values instead of document-sized string arrays.
+
+Every candidate generator here and in ``similarity`` blocks through
+``band_keys`` → ``band_pairs``: a new blocking scheme adds keys, not a
+join.
 
 At 100 TB: every stage is a narrow map except the LSH band join and the
 final groupBys, which shuffle on uniformly-distributed hash keys (no
@@ -36,7 +40,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from newspaper_spark import cache
+# normalized_text is only re-exported: __spark_entry__.py imports it from here
 from newspaper_spark.functions.columns import md5_long, normalized_text, ws_tokens
+from newspaper_spark.operators.textstats import doc_fingerprint_col
 
 log = logging.getLogger(__name__)
 
@@ -83,9 +89,64 @@ def _cap_collision_groups(
     return blocked.join(big.select(*key_cols), key_cols, "left_anti")
 
 
+def band_keys(df: DataFrame, keys: list, keep: tuple = ()) -> DataFrame:
+    """(id, *keep) → one row per blocking key: (id, *keep, band, key),
+    ``band`` being the key's position in ``keys`` (Column expressions
+    over ``df``)."""
+    return df.select(
+        "id",
+        *keep,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("band"), k.alias("key"))
+                    for b, k in enumerate(keys)
+                ]
+            )
+        ).alias("bk"),
+    ).select("id", *keep, "bk.band", "bk.key")
+
+
+def band_pairs(
+    blocked: DataFrame,
+    keep: tuple = (),
+    max_group_size: int | None = None,
+    op_name: str = "",
+) -> DataFrame:
+    """Candidate pairs (id_a < id_b, *keep as <col>_a/<col>_b) of a
+    ``band_keys`` table: rows sharing a (band, key) pair, once per pair
+    however many bands collide. Both sides shuffle-partition on the
+    blocking key, so work is proportional to true collisions.
+    ``max_group_size`` drops (and logs) oversized collision groups
+    first — see ``_cap_collision_groups``."""
+    if max_group_size is not None:
+        blocked = _cap_collision_groups(
+            blocked, ["band", "key"], max_group_size, op_name
+        )
+    l, r = blocked.alias("l"), blocked.alias("r")
+    return (
+        l.join(
+            r,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.key") == F.col("r.key"))
+            & (F.col("l.id") < F.col("r.id")),
+        )
+        .select(
+            F.col("l.id").alias("id_a"),
+            F.col("r.id").alias("id_b"),
+            *[
+                F.col(f"{side}.{c}").alias(f"{c}_{suffix}")
+                for c in keep
+                for side, suffix in (("l", "a"), ("r", "b"))
+            ],
+        )
+        .distinct()
+    )
+
+
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact-dup fingerprint: md5 of normalized text."""
-    return df.withColumn("fingerprint", F.md5(normalized_text(F.col(text_col))))
+    return df.withColumn("fingerprint", doc_fingerprint_col(F.col(text_col)))
 
 
 def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -123,30 +184,6 @@ def affine_params(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signature(text_col, num_hashes: int = 16, shingle_n: int = 3):
-    """Array of ``num_hashes`` minhash values (BIGINT) as a Column.
-
-    One md5 per shingle; the K hash functions are affine rehashes of
-    that base value, and all K running minima ride in a single
-    `aggregate` pass. Column-expression variant — prefer
-    ``minhash_table`` in pipelines: higher-order-function lambdas are
-    interpreted (no whole-stage codegen), so the relational
-    formulation is several times faster at scale."""
-    sh = shingles_col(text_col, shingle_n)
-    xs = F.transform(sh, lambda s: md5_long(s) % MERSENNE31)
-    params = affine_params(num_hashes)
-
-    def rehashes(x):
-        return F.array(*[(F.lit(a) * x + F.lit(b)) % MERSENNE31 for a, b in params])
-
-    init = F.array_repeat(F.lit(MERSENNE31).cast("long"), num_hashes)
-    return F.aggregate(
-        xs,
-        init,
-        lambda acc, x: F.zip_with(acc, rehashes(x), lambda m, h: F.least(m, h)),
-    )
-
-
 def minhash_table(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -160,8 +197,7 @@ def minhash_table(
     whole-stage codegen, and the K minima come from a hash aggregate
     with map-side partial combine — one shuffle on id carrying K longs
     per (id, partition), never the shingles themselves. Duplicate
-    shingles are harmless under min(), so no distinct pass is needed.
-    Identical output to minhash_signature (same hash family)."""
+    shingles are harmless under min(), so no distinct pass is needed."""
     # null text behaves like empty text (one '' shingle) so no document
     # silently disappears from the signature table
     sh = df.select(
@@ -194,9 +230,8 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) via banded LSH.
 
-    rows/band = num_hashes/bands. Pair generation = self equi-join on
-    (band, signature): both sides shuffle-partition on the band key, so
-    work is proportional to true collisions.
+    rows/band = num_hashes/bands. Pair generation = ``band_pairs`` on
+    (band, band signature).
 
     PRECONDITION at scale: run ``dedup_exact`` first (as q_corpus_prep
     does). m byte-identical documents collide in EVERY band and emit
@@ -225,34 +260,9 @@ def minhash_lsh_pairs(
         part = F.slice("mh", b * rows_per_band + 1, rows_per_band)
         return F.array_join(F.transform(part, lambda v: v.cast("string")), "|")
 
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_sig(b).alias("sig"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bs"),
-    ).select("id", "bs.band", "bs.sig")
-    if max_group_size is not None:
-        banded = _cap_collision_groups(
-            banded, ["band", "sig"], max_group_size, "minhash_lsh_pairs"
-        )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.sig") == F.col("r.sig"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
-    return pairs
+    blocked = band_keys(sig, [band_sig(b) for b in range(bands)])
+    return band_pairs(blocked, max_group_size=max_group_size,
+                      op_name="minhash_lsh_pairs")
 
 
 def ngram_jaccard_pairs(
@@ -287,73 +297,16 @@ def ngram_jaccard_pairs(
     )
 
 
-# 16-bit masks, indexed by (bit % 16) + 1 via element_at
-_BIT_MASKS = [1 << i for i in range(16)]
-
-
-def simhash_col(text_col, bits: int = 64):
-    """64-bit SimHash over word tokens, entirely in Column space.
-
-    Per token: ONE md5, split into 4 16-bit chunks (hex substrings —
-    the DuckDB oracle reconstructs them with ('0x'||…)::INT). Votes for
-    all 64 bits accumulate in a single `aggregate` pass carrying a
-    64-slot vote array; the final fold sets bit i when vote_i > 0."""
-    assert bits == 64, "simhash_col is specialized to 64 bits"
-    toks = ws_tokens(text_col)
-    # one md5 per token (materialized by the first transform), then the
-    # second transform splits the hex into 4 16-bit ints
-    hexes = F.transform(toks, lambda t: F.md5(t))
-    chunk_arrays = F.transform(
-        hexes,
-        lambda h: F.array(
-            *[
-                F.conv(F.substring(h, 4 * j + 1, 4), 16, 10).cast("int")
-                for j in range(4)
-            ]
-        ),
-    )
-    masks = F.array(*[F.lit(m) for m in _BIT_MASKS])
-    idx64 = F.sequence(F.lit(0), F.lit(bits - 1))
-
-    def token_votes(chunks):
-        # ±1 per bit: +1 when bit i of the token hash is set
-        return F.transform(
-            idx64,
-            lambda i: F.when(
-                F.element_at(chunks, F.floor(i / 16).cast("int") + 1)
-                .bitwiseAND(F.element_at(masks, (i % 16) + 1))
-                != 0,
-                1,
-            ).otherwise(-1),
-        )
-
-    votes = F.aggregate(
-        chunk_arrays,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, chunks: F.zip_with(acc, token_votes(chunks), lambda a, v: a + v),
-    )
-    sim = F.lit(0).cast("long")
-    for i in range(bits):
-        bit = (
-            F.lit(int(-(2**63))) if i == 63 else F.shiftleft(F.lit(1).cast("long"), i)
-        )
-        sim = sim.bitwiseOR(
-            F.when(F.element_at(votes, i + 1) > 0, bit).otherwise(F.lit(0).cast("long"))
-        )
-    return sim
-
-
 def simhash_table(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(id, sim) — relational SimHash, identical output to simhash_col.
+    """(id, sim) — relational SimHash.
 
     Tokens explode to rows; md5 + hex-chunk extraction run in
     whole-stage codegen; the 64 bit-votes are conditional sums in one
     hash aggregate (map-side partial combine, single shuffle on id
-    carrying 64 longs per (id, partition)). This avoids the
-    interpreted higher-order-function path entirely — measured ~10×
-    faster than the Column variant on the documents table."""
+    carrying 64 longs per (id, partition)) — no interpreted
+    higher-order-function lambdas."""
     # null text behaves like empty text (one '' token), matching
     # minhash_table's null semantics
     toks = df.select(
@@ -451,38 +404,13 @@ def simhash_near_dups(
             return F.col("sim")
         return F.shiftright("sim", off).bitwiseAND(F.lit((1 << width) - 1))
 
-    chunks = sh.select(
-        "id",
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(c).alias("chunk"), chunk_val(off, width).alias("val"))
-                    for c, (off, width) in enumerate(_chunk_layout(n_chunks))
-                ]
-            )
-        ).alias("cv"),
-    ).select("id", "sim", "cv.chunk", "cv.val")
-    if max_group_size is not None:
-        chunks = _cap_collision_groups(
-            chunks, ["chunk", "val"], max_group_size, "simhash_near_dups"
-        )
-    l, r = chunks.alias("l"), chunks.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col("l.val") == F.col("r.val"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.col("l.sim").alias("sim_a"),
-            F.col("r.sim").alias("sim_b"),
-        )
-        .distinct()
+    blocked = band_keys(
+        sh,
+        [chunk_val(off, width) for off, width in _chunk_layout(n_chunks)],
+        keep=("sim",),
     )
+    cand = band_pairs(blocked, keep=("sim",), max_group_size=max_group_size,
+                      op_name="simhash_near_dups")
     ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return cand.select("id_a", "id_b", ham.alias("hamming")).filter(
         F.col("hamming") <= max_hamming

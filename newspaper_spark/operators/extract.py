@@ -22,8 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .batch import row_udf
-
 ARTICLE_FIELDS = [
     ("title", T.StringType()),
     ("text", T.StringType()),
@@ -126,16 +124,6 @@ def extract_article_packed_udf(
     return _extract_batch(texts, urls, flags)
 
 
-def _fulltext(html, lang):
-    """newspaper.fulltext equivalent (api.py:71-93): html → main text."""
-    from ..kernel.fulltext import fulltext
-
-    return fulltext(html, lang or "en")
-
-
-fulltext_udf = row_udf(_fulltext, T.StringType(), str)
-
-
 def extract_articles(
     df: DataFrame,
     text_col: str = "text",
@@ -193,16 +181,3 @@ def extract_articles_packed(
     )
     return enriched.select(*keep, "article.*")
 
-
-def extract_fulltext(
-    df: DataFrame,
-    text_col: str = "text",
-    language: str = "en",
-    keep_cols: tuple = ("conv_id", "turn_idx"),
-) -> DataFrame:
-    """Minimal kernel: adds an ``extracted_text`` column."""
-    keep = [c for c in keep_cols if c in df.columns]
-    return df.select(
-        *keep,
-        fulltext_udf(F.col(text_col), F.lit(language)).alias("extracted_text"),
-    )

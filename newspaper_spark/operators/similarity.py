@@ -5,12 +5,12 @@
   Baseline + correctness oracle.
 * lsh_topk — random-hyperplane LSH with BANDED signatures as the scale
   path: each vector hashes to an n_planes sign-bit string split into
-  ``bands`` sub-signatures; a pair is a candidate when ANY band
-  matches (union of equi-joins), which keeps recall usable near the
-  threshold while the shuffle stays proportional to bucket collisions,
-  not |Q|×|N|.
+  ``bands`` sub-signatures (``dedup.band_keys``); a pair is a candidate
+  when ANY band matches, which keeps recall usable near the threshold
+  while the shuffle stays proportional to bucket collisions, not
+  |Q|×|N|.
 * embedding_dedup_pairs — near-duplicate pairs over one table via the
-  same banded bucket join.
+  banded self-join ``dedup.band_pairs``.
 
 Hyperplanes are deterministic (md5-derived pseudo-randoms), so results
 are reproducible and oracle-checkable, and every function is a pure
@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from newspaper_spark import cache
-
+from newspaper_spark.operators.dedup import band_keys, band_pairs
 
 
 def _dot(a, b):
@@ -172,44 +172,20 @@ def hyperplanes(dim: int, n_planes: int) -> list:
     return planes
 
 
-def signature_col(vec, planes):
-    """Sign-bit signature string for one vector against fixed planes.
-
-    Dot products fold left-to-right in double precision, so the oracle's
-    explicit sum expression reproduces the exact same signs."""
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.array(*[F.lit(x) for x in plane]),
-                    lambda v, w: v * w,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            >= 0,
-            F.lit("1"),
-        ).otherwise(F.lit("0"))
-        for plane in planes
-    ]
-    return F.concat(*bits)
-
-
 def signature_udf(planes):
-    """Arrow-vectorized signature: one numpy batch op instead of
-    n_planes × dim interpreted Catalyst lambda evaluations per row
-    (the HOF path doesn't codegen). np.cumsum's last element IS the
-    sequential left-fold sum bit-for-bit (verified over random
-    vectors), so signs — and therefore buckets — match signature_col
-    and the DuckDB oracle exactly."""
+    """Arrow-vectorized sign-bit signature string of each vector
+    against fixed planes: one numpy batch op instead of n_planes × dim
+    interpreted Catalyst lambda evaluations per row. np.cumsum's last
+    element IS the sequential left-fold sum bit-for-bit (verified over
+    random vectors), so signs — and therefore buckets — match the
+    DuckDB oracle's explicit left-to-right sums exactly."""
     import numpy as np
 
     mat = np.asarray(planes, dtype=np.float64)  # (n_planes, dim)
 
     def _sig_batch(vecs: pd.Series) -> pd.Series:
-        # null / wrong-length vectors: the Column path's null dot fails
-        # the >= 0 test, i.e. all-'0' — mirror that
+        # null / wrong-length vectors: the oracle's null dot fails the
+        # >= 0 test, i.e. all-'0' — mirror that
         default = "0" * mat.shape[0]
         arrs, idx = [], []
         for i, v in enumerate(vecs):
@@ -230,22 +206,11 @@ def signature_udf(planes):
     return F.pandas_udf(_sig_batch, "string")
 
 
-def _explode_bands(df: DataFrame, id_alias: str, bands: int, band_size: int) -> DataFrame:
-    """(id, sig) → one row per (id, band, band-substring)."""
-    return df.select(
-        id_alias,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.substring("sig", b * band_size + 1, band_size).alias("bsig"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_alias, "bb.band", "bb.bsig")
+def _band_substrings(n_planes: int, bands: int) -> list:
+    """The ``bands`` blocking keys of an n_planes-bit signature string
+    ``sig``: its consecutive substrings."""
+    size = n_planes // bands
+    return [F.substring("sig", b * size + 1, size) for b in range(bands)]
 
 
 def lsh_topk(
@@ -263,11 +228,10 @@ def lsh_topk(
     """Approximate top-k via banded hyperplane LSH.
 
     Candidates = pairs sharing at least one of ``bands`` sub-signatures
-    (union of co-partitioned equi-joins, deduped on ids), then exact
+    (one co-partitioned equi-join on (band, key), deduped on ids), then exact
     cosine + per-query rank over candidates only. Recall < 1 by design;
     the band count trades recall for shuffle width."""
     assert n_planes % bands == 0, "n_planes must divide into bands"
-    band_size = n_planes // bands
     planes = hyperplanes(dim, n_planes)
     sig = signature_udf(planes)
     q = queries.select(
@@ -280,12 +244,16 @@ def lsh_topk(
         F.col(c_vec).alias("cv"),
         sig(F.col(c_vec)).alias("sig"),
     )
-    qb = _explode_bands(q, "query_id", bands, band_size)
-    cb = _explode_bands(c, "neighbor_id", bands, band_size)
+    keys = _band_substrings(n_planes, bands)
+    qb = band_keys(q.withColumnRenamed("query_id", "id"), keys)
+    cb = band_keys(c.withColumnRenamed("neighbor_id", "id"), keys)
     cand = (
-        qb.join(cb, ["band", "bsig"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
+        qb.alias("q")
+        .join(cb.alias("c"), ["band", "key"])
+        .filter(F.col("q.id") != F.col("c.id"))
+        .select(
+            F.col("q.id").alias("query_id"), F.col("c.id").alias("neighbor_id")
+        )
         .distinct()
     )
     scored = (
@@ -454,10 +422,10 @@ def embedding_dedup_pairs(
     bands: int = 4,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via the banded LSH bucket
-    join (id_a < id_b). Any-band-match candidate generation keeps
-    recall high near the threshold; exact cosine verifies."""
+    self-join ``band_pairs`` (id_a < id_b). Any-band-match candidate
+    generation keeps recall high near the threshold; exact cosine
+    verifies."""
     assert n_planes % bands == 0, "n_planes must divide into bands"
-    band_size = n_planes // bands
     planes = hyperplanes(dim, n_planes)
     sigd = cache.track(
         df.select(
@@ -475,18 +443,7 @@ def embedding_dedup_pairs(
     # evicts them or the session ends — NOT freed at query completion;
     # long sessions release them via newspaper_spark.cache.release()
     # (or tracking_scope()) after consuming the output.
-    b = _explode_bands(sigd, "id", bands, band_size)
-    l, r = b.alias("l"), b.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bsig") == F.col("r.bsig"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
+    cand = band_pairs(band_keys(sigd, _band_substrings(n_planes, bands)))
     va = sigd.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
     vb = sigd.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
     return (

@@ -60,11 +60,23 @@ __all__ = [
 ]
 
 
-def _cms_col(value, row: int, width: int):
-    """Count-Min row ``row``'s column index for ``value`` (md5-derived,
-    exact; DuckDB: ``('0x'||substring(md5('cms'||r||':'||v),1,15))::BIGINT
-    % width``)."""
-    return md5_long(F.concat(F.lit(f"cms{row}:"), value)) % width
+def _cms_cells(value, depth: int, width: int):
+    """One row per Count-Min row for ``value``: struct ``p(row, col)``,
+    ``col`` md5-derived and exact (DuckDB:
+    ``('0x'||substring(md5('cms'||r||':'||v),1,15))::BIGINT % width``)."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(r).cast("int").alias("row"),
+                    (md5_long(F.concat(F.lit(f"cms{r}:"), value)) % width)
+                    .cast("long")
+                    .alias("col"),
+                )
+                for r in range(depth)
+            ]
+        )
+    ).alias("p")
 
 
 def cms_counters(
@@ -82,22 +94,8 @@ def cms_counters(
     relational form of the streaming CMS +=1). ``weight_col`` turns
     the sketch into a weighted frequency sketch (defaults to count).
     """
-    v = F.col(value_col)
     w = F.coalesce(F.col(weight_col), F.lit(0)).cast("long") if weight_col else F.lit(1).cast("long")
-    probes = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).cast("int").alias("row"),
-                        _cms_col(v, r, width).cast("long").alias("col"),
-                    )
-                    for r in range(depth)
-                ]
-            )
-        ).alias("p"),
-        w.alias("w"),
-    )
+    probes = df.select(_cms_cells(F.col(value_col), depth, width), w.alias("w"))
     return probes.groupBy(
         F.col("p.row").alias("row"), F.col("p.col").alias("col")
     ).agg(F.sum("w").alias("cnt"))
@@ -118,20 +116,8 @@ def cms_estimate(
     The counter table is bounded (depth x width rows), so the join is
     a broadcast; probe cost is independent of the build stream size.
     """
-    v = F.col(value_col)
     exploded = probes.select(
-        "*",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).cast("int").alias("row"),
-                        _cms_col(v, r, width).cast("long").alias("col"),
-                    )
-                    for r in range(depth)
-                ]
-            )
-        ).alias("p"),
+        "*", _cms_cells(F.col(value_col), depth, width)
     ).select("*", F.col("p.row").alias("row"), F.col("p.col").alias("col")).drop("p")
     joined = exploded.join(F.broadcast(counters), ["row", "col"], "left")
     keys = [c for c in probes.columns]

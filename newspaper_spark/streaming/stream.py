@@ -28,10 +28,6 @@ def read_transcript_stream(
     )
 
 
-def extract_stream(transcripts: DataFrame) -> DataFrame:
-    return extract_articles(transcripts)
-
-
 def windowed_turn_counts(
     transcripts: DataFrame,
     window_duration: str = "10 minutes",
@@ -87,7 +83,7 @@ def start_extraction_stream(
 ):
     """File-to-file streaming extraction with exactly-once checkpointing."""
     stream = read_transcript_stream(spark, input_dir)
-    extracted = extract_stream(stream)
+    extracted = extract_articles(stream)
     return (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)
@@ -114,11 +110,9 @@ def dedup_stream(
     dedup_exact groupBy. Works only on streaming DataFrames with an
     event-time column (``ts``).
     """
-    from ..operators.dedup import normalized_text
+    from ..operators.textstats import doc_fingerprint_col
 
-    fp = transcripts.withColumn(
-        "fingerprint", F.md5(normalized_text(F.col("text")))
-    )
+    fp = transcripts.withColumn("fingerprint", doc_fingerprint_col(F.col("text")))
     return fp.withWatermark("ts", watermark_delay).dropDuplicatesWithinWatermark(
         ["fingerprint"]
     )

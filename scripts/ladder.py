@@ -398,14 +398,8 @@ def ann_candidates(r: Rung, vecs: DataFrame, n_planes: int) -> int:
         similarity.signature_udf(planes)(F.col("embedding")).alias("sig"),
     ).persist()
     try:
-        b = similarity._explode_bands(sig, "id", 4, n_planes // 4)
-        left, right = b.alias("l"), b.alias("r")
-        cond = (
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bsig") == F.col("r.bsig"))
-            & (F.col("l.id") < F.col("r.id"))
-        )
-        return left.join(right, cond).select("l.id", "r.id").distinct().count()
+        keys = similarity._band_substrings(n_planes, 4)
+        return dedup.band_pairs(dedup.band_keys(sig, keys)).count()
     finally:
         sig.unpersist()
 

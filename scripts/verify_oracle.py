@@ -1,9 +1,15 @@
 """Local stand-in for the driver's correctness gate: runs every
 queries() entry at sf0.01 and compares row-count, schema and an
 order-insensitive value hash against oracle_sql() via DuckDB.
+
+``--plans`` instead builds each query without collecting it and prints
+its name, the md5 of its optimized logical plan (expression ids and
+``plan_id``s masked) and the md5 of its physical operator-name
+sequence — diff two trees' outputs to see which plans a change moved.
 """
 import hashlib
 import pathlib
+import re
 import sys
 from collections import Counter
 
@@ -61,6 +67,40 @@ def print_row_diff(srows, scols, orows, ocols, limit=5):
             print(f"      {line}")
 
 
+def _md5(text):
+    return hashlib.md5(text.encode("utf-8")).hexdigest()
+
+
+def plan_digests(sdf):
+    """(optimized-plan md5, physical operator-sequence md5) of one
+    DataFrame, without executing it."""
+    qe = sdf._jdf.queryExecution()
+    logical = re.sub(r"#\d+|plan_id=\d+", "#", qe.optimizedPlan().toString())
+    ops = [
+        m.group(1)
+        for m in re.finditer(
+            r"^[ :|+\-]*(?:\*\(\d+\) )?(\w+)",
+            qe.executedPlan().treeString(),
+            re.M,
+        )
+    ]
+    return _md5(logical), _md5(" ".join(ops))
+
+
+def print_plans(spark, qs, only):
+    from newspaper_spark import cache
+
+    for name, fn in qs.items():
+        if only and name not in only:
+            continue
+        try:
+            with cache.tracking_scope():
+                digests = " ".join(plan_digests(fn(spark, SF_DIR)))
+        except Exception as e:  # noqa: BLE001
+            digests = f"ERROR {str(e)[:120]!r}"
+        print(f"{name} {digests}", flush=True)
+
+
 def main():
     import duckdb
 
@@ -68,9 +108,15 @@ def main():
     from newspaper_spark import cache
     from newspaper_spark.plans.session import get_spark
 
-    only = sys.argv[1:] or None
+    args = sys.argv[1:]
+    plans = "--plans" in args
+    only = [a for a in args if a != "--plans"] or None
 
     spark = get_spark(cores=8)
+    if plans:
+        print_plans(spark, entrymod.queries(), only)
+        spark.stop()
+        return
     con = duckdb.connect()
     for t in TABLES:
         p = f"{SF_DIR}/{t}.parquet"

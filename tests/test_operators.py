@@ -87,6 +87,53 @@ def test_lsh_group_size_cap_on_exact_dup_cluster(spark, caplog):
     assert not caplog.records
 
 
+def test_band_pairs_shared_blocking_join(spark, caplog):
+    """The one blocking join: a pair colliding in two bands comes out
+    once, never as a self-pair and always id_a < id_b; keep columns
+    arrive as <col>_a/<col>_b; with max_group_size an oversized
+    (band, key) group is dropped and logged."""
+    import logging
+
+    from newspaper_spark import cache
+    from newspaper_spark.operators.dedup import band_pairs
+
+    blocked = spark.createDataFrame(
+        [
+            # 1 and 2 collide in band 0 AND band 1
+            (2, "x", 0, "k0"), (1, "y", 0, "k0"),
+            (2, "x", 1, "k1"), (1, "y", 1, "k1"),
+            # 3 collides with 1 in band 1 only under a different key
+            (3, "z", 1, "k9"), (1, "y", 1, "k9"),
+            # a lone key: no partner, and no self-pair
+            (4, "w", 0, "solo"),
+            # a band-2 group of four members
+            (5, "v", 2, "big"), (6, "u", 2, "big"),
+            (7, "t", 2, "big"), (8, "s", 2, "big"),
+        ],
+        "id int, tag string, band int, key string",
+    )
+    rows = band_pairs(blocked, keep=("tag",)).collect()
+    assert set(rows[0].asDict()) == {"id_a", "id_b", "tag_a", "tag_b"}
+    got = [(r.id_a, r.id_b, r.tag_a, r.tag_b) for r in rows]
+    assert len(got) == len(set(got))
+    assert all(a < b for a, b, _, _ in got)
+    assert sorted(got) == [
+        (1, 2, "y", "x"), (1, 3, "y", "z"),
+        (5, 6, "v", "u"), (5, 7, "v", "t"), (5, 8, "v", "s"),
+        (6, 7, "u", "t"), (6, 8, "u", "s"), (7, 8, "t", "s"),
+    ]
+
+    with cache.tracking_scope(), caplog.at_level(
+        logging.WARNING, "newspaper_spark.operators.dedup"
+    ):
+        capped = band_pairs(blocked, max_group_size=3, op_name="probe")
+        assert {(r.id_a, r.id_b) for r in capped.collect()} == {(1, 2), (1, 3)}
+    assert any(
+        "probe: skipping 1 collision group(s) (4 rows)" in r.message
+        for r in caplog.records
+    )
+
+
 def test_ngram_jaccard_verification(spark, docs):
     from newspaper_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
 
@@ -165,6 +212,7 @@ def test_lsh_recall_against_brute(spark):
     }
     recall = len(brute & approx) / len(brute)
     assert recall >= 0.5, f"LSH recall too low: {recall}"
+    assert not any(qid == nid for qid, nid in approx)
 
 
 def test_embedding_dedup(spark):
