@@ -45,6 +45,20 @@ def ws_tokens(c: Column) -> Column:
     return F.split(normalized_text(c), " ")
 
 
+def ws_bigrams(norm: Column) -> Column:
+    """Adjacent token pairs ``'w1 w2'`` of an already-normalized text
+    (a :func:`normalized_text` column): the pairs of :func:`ws_tokens`,
+    in order, overlapping. The consumed ``(?:^| )`` anchors each match
+    at a token start (a bare lookahead would match at every character)
+    and the zero-width lookahead captures the pair without consuming
+    it, so consecutive pairs share their middle token — no per-document
+    ``lead`` window (a shuffle and sort of the tokenized corpus) and no
+    higher-order lambda (interpreted per element). Only valid over
+    single-spaced text. Oracle, over ``t = string_split(norm, ' ')``:
+    ``list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i + 1])``."""
+    return F.regexp_extract_all(norm, F.lit(r"(?:^| )(?=(\S+ \S+))"), 1)
+
+
 def md5_long(c: Column) -> Column:
     """First 60 bits of md5(c) as a non-negative BIGINT.
     Oracle: ``('0x' || substring(md5(x), 1, 15))::BIGINT``."""

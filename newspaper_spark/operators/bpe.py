@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.columns import ws_tokens
+from .textstats import term_counts
 
 __all__ = ["bpe_word_counts", "bpe_train", "bpe_apply", "bpe_encode_docs"]
 
@@ -55,14 +55,8 @@ def bpe_word_counts(
     """The corpus-sized stage: ``(word, freq)`` over the standard
     tokenization (lowercase, explicit-class whitespace collapse).
     Map-side combined; the shuffle carries vocabulary rows only."""
-    return (
-        df.select(
-            F.explode(
-                ws_tokens(F.coalesce(F.col(text_col), F.lit("")))
-            ).alias("word")
-        )
-        .groupBy("word")
-        .agg(F.count("*").cast("long").alias("freq"))
+    return term_counts(df, text_col).select(
+        F.col("term").alias("word"), F.col("tf").alias("freq")
     )
 
 
@@ -158,22 +152,16 @@ def bpe_encode_docs(
     segmented through the merge chain ONCE (vocab-bounded — never
     re-segment every running token), and the segmentation broadcasts
     back. Raw text never shuffles; the merge chain is Column-only."""
-    words = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(ws_tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("word"),
-    )
-    doc_words = words.groupBy("_id", "word").agg(
-        F.count("*").cast("long").alias("k")
-    )
-    seg = bpe_apply(doc_words.select("word").distinct(), merges).select(
-        "word", "n_tokens"
-    )
+    doc_words = term_counts(df, text_col, F.col(id_col).alias("_id"))
+    seg = bpe_apply(
+        doc_words.select("term").distinct(), merges, word_col="term"
+    ).select("term", "n_tokens")
     return (
-        doc_words.join(F.broadcast(seg), "word")
+        doc_words.join(F.broadcast(seg), "term")
         .groupBy("_id")
         .agg(
-            F.sum("k").alias("n_words"),
-            F.sum(F.col("k") * F.col("n_tokens")).alias("n_bpe_tokens"),
+            F.sum("tf").alias("n_words"),
+            F.sum(F.col("tf") * F.col("n_tokens")).alias("n_bpe_tokens"),
         )
         .select(
             F.col("_id").alias(id_col),

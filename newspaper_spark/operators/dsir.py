@@ -33,39 +33,39 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from newspaper_spark import cache
-from newspaper_spark.functions.columns import md5_long, normalized_text, round6
+from newspaper_spark.functions.columns import (
+    md5_long,
+    normalized_text,
+    round6,
+    ws_bigrams,
+)
 
 
 def _bucket_rows(df: DataFrame, id_col: str, text_col: str, n_buckets: int):
     """(id, b) — one row per unigram AND bigram occurrence, hashed to
     a bucket via the repo's portable md5-derived 60-bit integer.
 
-    MAP-ONLY codegen formulation, no higher-order functions (Catalyst
-    HOF lambdas are INTERPRETED per element — the repo's measured
-    5-13× trap) and, since round 8, no window either: the original
-    ``lead``-window bigram partner forced a corpus-sized
-    (id, pos, tok) shuffle + per-doc sort. Overlapping bigrams instead
-    come from a zero-width-LOOKAHEAD ``regexp_extract_all`` over the
-    already-normalized text — ``(?:^| )(?=(\\S+ \\S+))`` anchors at
-    each token start (the consumed ``^``/space prevents mid-token
-    matches) and the lookahead group captures the pair without
-    consuming it, so consecutive pairs overlap exactly like the lead
-    window produced. Verified row-for-row identical to the window form
-    (incl. empty/null/single-token/multi-space docs); everything fuses
+    MAP-ONLY codegen formulation: bigrams come from ``ws_bigrams`` over
+    the normalized text (no lambda, no window), so everything fuses
     into the scan stage."""
     norm = normalized_text(F.coalesce(F.col(text_col), F.lit("")))
-    # normalize in its OWN projection: split and regexp_extract_all
-    # both consume it, and inlining the expression evaluates the
+    # normalize in its OWN projection: split and ws_bigrams both
+    # consume it, and inlining the expression evaluates the
     # lower+regexp_replace twice per row (measured ~20% of the stage)
     dn = df.select(F.col(id_col).alias("id"), norm.alias("nt"))
-    toks = F.split(F.col("nt"), " ")
-    bigrams = F.regexp_extract_all(
-        F.col("nt"), F.lit(r"(?:^| )(?=(\S+ \S+))"), 1
+    grams = F.concat(F.split(F.col("nt"), " "), ws_bigrams(F.col("nt")))
+    return dn.select("id", F.explode(grams).alias("g")).select(
+        "id", (md5_long("g") % n_buckets).alias("b")
     )
-    return dn.select(
-        "id",
-        F.explode(F.concat(toks, bigrams)).alias("g"),
-    ).select("id", (md5_long("g") % n_buckets).alias("b"))
+
+
+def _bucket_counts(df: DataFrame, id_col: str, text_col: str, n_buckets: int):
+    """(id, b, k): per-document hashed-feature bucket counts."""
+    return (
+        _bucket_rows(df, id_col, text_col, n_buckets)
+        .groupBy("id", "b")
+        .agg(F.count("*").cast("long").alias("k"))
+    )
 
 
 def dsir_scores(
@@ -91,13 +91,10 @@ def dsir_scores(
     in-corpus split): with a Column, the target bucket distribution is
     derived by filtering the already-persisted per-(doc, bucket)
     counts — identical counts by construction, and the second
-    explode + window + hash pass over the exemplar text disappears.
+    explode + hash pass over the exemplar text disappears.
     """
     feats_raw = cache.track(
-        _bucket_rows(raw, id_col, text_col, n_buckets)
-        .groupBy("id", "b")
-        .agg(F.count("*").cast("long").alias("k"))
-        .persist()
+        _bucket_counts(raw, id_col, text_col, n_buckets).persist()
     )
     # persist is load-bearing: feats_raw feeds both the raw bucket
     # distribution AND the scoring join; an AQE runtime broadcast would

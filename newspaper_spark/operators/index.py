@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from newspaper_spark import cache
 from newspaper_spark.functions.columns import ws_tokens
+from newspaper_spark.operators.textstats import term_counts
 
 __all__ = ["build_postings", "sparse_dot_pairs"]
 
@@ -134,15 +135,7 @@ def sparse_dot_pairs(
     no sampling.
     """
     tf_rel = cache.track(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(
-                ws_tokens(F.coalesce(F.col(text_col), F.lit("")))
-            ).alias("term"),
-        )
-        .groupBy("term", "id")
-        .agg(F.count("*").cast("long").alias("tf"))
-        .persist()
+        term_counts(df, text_col, F.col(id_col).alias("id")).persist()
     )
     wdf = tf_rel.groupBy("term").agg(F.count("*").cast("long").alias("df"))
     p = (

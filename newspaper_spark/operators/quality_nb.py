@@ -12,8 +12,8 @@ engine (per-article newspaper3k) has no corpus-level analog; this is a
 beyond-reference LLM-pipeline operator.
 
 Model: multinomial Naive Bayes over unigram+bigram features hashed
-into ``n_buckets`` buckets (the same feature map as DSIR — shared
-``_bucket_rows``), add-one smoothing, class priors from labeled doc
+into ``n_buckets`` buckets (the same feature map as DSIR — dsir's
+``_bucket_counts``), add-one smoothing, class priors from labeled doc
 counts. A document's log-odds of being high-quality is
 
     logodds(x) = log P(pos)/P(neg)
@@ -47,18 +47,9 @@ from pyspark.sql import functions as F
 
 from newspaper_spark import cache
 from newspaper_spark.functions.columns import round6
-from newspaper_spark.operators.dsir import _bucket_rows
+from newspaper_spark.operators.dsir import _bucket_counts
 
 __all__ = ["nb_quality_scores"]
-
-
-def _bucket_counts(df: DataFrame, id_col: str, text_col: str, n_buckets: int):
-    """(id, b, k): per-document hashed-feature bucket counts."""
-    return (
-        _bucket_rows(df, id_col, text_col, n_buckets)
-        .groupBy("id", "b")
-        .agg(F.count("*").cast("long").alias("k"))
-    )
 
 
 def nb_quality_scores(

@@ -1,6 +1,12 @@
 """Text analysis operators: language-ID, quality scoring, token
-counting, rolling-hash fingerprints. All pure Column expressions —
-JVM-side, whole-stage-codegen friendly, SQL-oracle-checkable.
+counting, rolling-hash fingerprints, repetition and n-gram language-
+model statistics. Per-document Columns and relational passes alike run
+JVM-side, whole-stage-codegen friendly and SQL-oracle-checkable.
+
+Every corpus-statistics operator reads terms through
+:func:`term_counts` and adjacent pairs through :func:`bigram_rows` (or
+``functions.columns.ws_bigrams`` over a normalized column): one
+spelling of what counts as a term and as a bigram.
 """
 from __future__ import annotations
 
@@ -8,7 +14,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from newspaper_spark import cache
-from newspaper_spark.functions.columns import md5_long, normalized_text, round6, ws_tokens
+from newspaper_spark.functions.columns import (
+    md5_long,
+    normalized_text,
+    round6,
+    ws_bigrams,
+    ws_tokens,
+)
 
 # small high-frequency marker lists per language (public knowledge,
 # intentionally tiny: this is an n-gram/marker heuristic, not a model).
@@ -75,6 +87,33 @@ def lang_id_col(text_col):
 def token_count_col(text_col):
     """Whitespace token count."""
     return F.size(ws_tokens(text_col))
+
+
+def term_counts(df: DataFrame, text_col: str, *keys) -> DataFrame:
+    """``(*keys, term, tf)``: occurrences of each whitespace token per
+    distinct ``keys`` value (column names or Columns), map-side
+    combined — the shuffle carries (keys, term, count) rows, never
+    text. A null text reads as '' (one '' token), so explode never
+    drops a document."""
+    rows = df.select(
+        *keys,
+        F.explode(ws_tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("term"),
+    )
+    return rows.groupBy(*rows.columns).agg(F.count("*").cast("long").alias("tf"))
+
+
+def bigram_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(id, w1, w2)``: one row per adjacent token pair of each
+    document, map-only (see ``ws_bigrams``); a null text reads as ''."""
+    norm = normalized_text(F.coalesce(F.col(text_col), F.lit("")))
+    dn = df.select(F.col(id_col).alias("id"), norm.alias("nt"))
+    g = dn.select("id", F.explode(ws_bigrams(F.col("nt"))).alias("g"))
+    # tokens cannot contain spaces post-normalization
+    return g.select(
+        "id",
+        F.substring_index("g", " ", 1).alias("w1"),
+        F.substring_index("g", " ", -1).alias("w2"),
+    )
 
 
 #: pre-tokenizer pattern (GPT-2-ish without lookarounds, so the same
@@ -187,39 +226,28 @@ def repetition_stats(
 
     These are the "repetitious text" filters of the Gopher/MassiveText
     quality pipeline (Rae et al. 2021, §A1.1), the n=2 member of their
-    duplicate-n-gram family. Relational shape: bigrams are exploded
-    rows, counted with a hash aggregate, topped with one row_number
-    window — every shuffle is keyed by ``id_col`` (uniform), so the
-    plan is a straight scale-out at 100 TB. The distinct-token count
-    stays a pure Column (``array_distinct``), no extra shuffle.
+    duplicate-n-gram family. Relational shape: ``ws_bigrams`` pairs
+    (map-only, no lambda) are exploded rows, counted with a hash
+    aggregate, topped with one row_number window — every shuffle is
+    keyed by ``id_col`` (uniform), so the plan is a straight scale-out
+    at 100 TB. The distinct-token count stays a pure Column
+    (``array_distinct``), no extra shuffle.
     """
     from pyspark.sql import Window as W
 
     # null text behaves like empty text (one '' token) — stats stay
     # defined and no row vanishes
     norm = normalized_text(F.coalesce(F.col(text_col), F.lit("")))
-    toks = F.split(norm, " ")
-    base = df.select(
-        F.col(id_col).alias("id"),
-        toks.alias("t"),
-        F.length(norm).cast("long").alias("nlen"),
+    dn = df.select(F.col(id_col).alias("id"), norm.alias("nt"))
+    toks = F.split("nt", " ")
+    base = dn.select(
+        "id",
+        "nt",
+        F.length("nt").cast("long").alias("nlen"),
         F.size(toks).cast("long").alias("ntok"),
         F.size(F.array_distinct(toks)).cast("long").alias("ndis"),
     )
-    bigrams = base.select(
-        "id",
-        F.explode(
-            F.when(
-                F.col("ntok") >= 2,
-                F.transform(
-                    F.sequence(F.lit(1), (F.col("ntok") - 1).cast("int")),
-                    lambda i: F.concat(
-                        F.element_at("t", i), F.lit(" "), F.element_at("t", i + 1)
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("gram"),
-    )
+    bigrams = base.select("id", F.explode(ws_bigrams(F.col("nt"))).alias("gram"))
     bgc = bigrams.groupBy("id", "gram").agg(F.count("*").cast("long").alias("cnt"))
     per_doc = bgc.groupBy("id").agg(
         F.sum("cnt").alias("total_bg"),
@@ -301,42 +329,33 @@ def unigram_logprob(
     vocab-bounded per group.
     """
     grp = [group_col] if group_col else []
-    # coalesce: explode(null) would silently DROP the document from the
-    # output — null text scores as the one-empty-token document instead
-    tok_rows = df.select(
-        F.col(id_col).alias("id"),
-        *grp,
-        F.explode(ws_tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("tok"),
-    )
     doc_tok = cache.track(
-        tok_rows.groupBy("id", *grp, "tok")
-        .agg(F.count("*").cast("long").alias("k"))
-        .persist()
+        term_counts(df, text_col, F.col(id_col).alias("id"), *grp).persist()
     )
     # persist is load-bearing: doc_tok feeds the probe side AND the
     # vocabulary AND (via vocab) the corpus total, and the runtime
     # broadcasts defeat ReuseExchange — unpersisted, the plan scans and
     # explodes the whole corpus three times (verified via explain).
-    vocab = doc_tok.groupBy(*grp, "tok").agg(F.sum("k").alias("cnt"))
+    vocab = doc_tok.groupBy(*grp, "term").agg(F.sum("tf").alias("cnt"))
     if group_col:
         total = vocab.groupBy(group_col).agg(F.sum("cnt").alias("n_corpus"))
         logp = vocab.join(F.broadcast(total), group_col).select(
             group_col,
-            "tok",
+            "term",
             F.log10(F.col("cnt") / F.col("n_corpus")).alias("logp"),
         )
-        scored = doc_tok.join(F.broadcast(logp), [group_col, "tok"])
+        scored = doc_tok.join(F.broadcast(logp), [group_col, "term"])
     else:
         total = vocab.agg(F.sum("cnt").alias("n_corpus"))
         logp = vocab.crossJoin(F.broadcast(total)).select(
-            "tok", F.log10(F.col("cnt") / F.col("n_corpus")).alias("logp")
+            "term", F.log10(F.col("cnt") / F.col("n_corpus")).alias("logp")
         )
-        scored = doc_tok.join(F.broadcast(logp), "tok")
+        scored = doc_tok.join(F.broadcast(logp), "term")
     return (
         scored.groupBy("id", *grp)
         .agg(
-            F.sum("k").alias("n_tok"),
-            F.sum(F.col("k") * F.col("logp")).alias("s"),
+            F.sum("tf").alias("n_tok"),
+            F.sum(F.col("tf") * F.col("logp")).alias("s"),
         )
         .select(
             F.col("id").alias(id_col),
@@ -362,8 +381,9 @@ def bigram_backoff_logprob(
     with the paper's fixed α=0.4 (S(w2|w1) = c2/c1 if the bigram was
     seen, else 0.4·(c1(w2)+1)/(N+V)).
 
-    Scale shape: count tables only ever shuffle as (gram, count) pairs
-    (map-side combined); the doc-side join is an equi-join keyed by the
+    Scale shape: bigrams come map-only from :func:`bigram_rows`; count
+    tables only ever shuffle as (gram, count) pairs (map-side
+    combined); the doc-side join is an equi-join keyed by the
     bigram (uniform-ish; NOT broadcast — a web-scale bigram table is
     not broadcastable, unlike unigram_logprob's vocab) and the unigram
     fallback join is keyed by w2 (hot function-word keys are AQE
@@ -372,61 +392,29 @@ def bigram_backoff_logprob(
     unigram_logprob: the sum runs over DISTINCT doc bigrams, and
     near-tie engine log10 ulp differences are absorbed by the round.
     """
-    did = F.col(id_col).alias("id")
-
-    def _bigrams(frame):
-        # MAP-ONLY bigram generation (round 8, the dsir reformulation):
-        # the zero-width-lookahead regexp over the normalized text
-        # yields every overlapping adjacent pair with NO per-doc
-        # lead-window — the original form shuffled + sorted the whole
-        # tokenized corpus (twice: train and score side). Verified
-        # row-for-row identical to the window form (incl. empty/null/
-        # single-token/multi-space docs). substring_index recovers
-        # (w1, w2) — tokens cannot contain spaces post-normalization.
-        norm = normalized_text(F.coalesce(F.col(text_col), F.lit("")))
-        dn = frame.select(did, norm.alias("nt"))
-        g = dn.select(
-            "id",
-            F.explode(
-                F.regexp_extract_all(
-                    F.col("nt"), F.lit(r"(?:^| )(?=(\S+ \S+))"), 1
-                )
-            ).alias("g"),
-        )
-        return g.select(
-            "id",
-            F.substring_index("g", " ", 1).alias("w1"),
-            F.substring_index("g", " ", -1).alias("w2"),
-        )
-
     # model (train split): unigram + bigram count tables. The unigram
     # table counts ALL train tokens (not just bigram w1s — the last
     # token of every doc is still a unigram event).
-    ttok = train.select(
-        did, F.explode(ws_tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("tok")
-    )
-    uni = cache.track(
-        ttok.groupBy("tok").agg(F.count("*").cast("long").alias("c1")).persist()
-    )
+    uni = cache.track(term_counts(train, text_col).persist())
     totals = uni.agg(
-        F.sum("c1").cast("long").alias("n_corpus"),
+        F.sum("tf").cast("long").alias("n_corpus"),
         F.count("*").cast("long").alias("v_corpus"),
     )
-    tbg = _bigrams(train).groupBy("w1", "w2").agg(
+    tbg = bigram_rows(train, id_col, text_col).groupBy("w1", "w2").agg(
         F.count("*").cast("long").alias("c2")
     )
     model2 = tbg.join(
-        uni.select(F.col("tok").alias("w1"), F.col("c1").alias("c1w1")), "w1"
+        uni.select(F.col("term").alias("w1"), F.col("tf").alias("c1w1")), "w1"
     )
 
     # score side: per-(doc, bigram) counts
-    docbg = _bigrams(df).groupBy("id", "w1", "w2").agg(
+    docbg = bigram_rows(df, id_col, text_col).groupBy("id", "w1", "w2").agg(
         F.count("*").cast("long").alias("k")
     )
     scored = (
         docbg.join(model2, ["w1", "w2"], "left")
         .join(
-            uni.select(F.col("tok").alias("w2"), F.col("c1").alias("c1w2")),
+            uni.select(F.col("term").alias("w2"), F.col("tf").alias("c1w2")),
             "w2",
             "left",
         )
@@ -460,7 +448,7 @@ def bigram_backoff_logprob(
     # anchor on the input doc set: a doc with <2 tokens has no bigrams
     # but must still get its (0, 0.0) row
     return (
-        df.select(did).join(agg, "id", "left")
+        df.select(F.col(id_col).alias("id")).join(agg, "id", "left")
         .select(
             F.col("id").alias(id_col),
             F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
@@ -494,44 +482,37 @@ def tfidf_topk(
     """
     from pyspark.sql import Window as W
 
-
-    tok_rows = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(ws_tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("tok"),
-    )
     doc_tok = cache.track(
-        tok_rows.groupBy("id", "tok")
-        .agg(F.count("*").cast("long").alias("cnt"))
-        .persist()
+        term_counts(df, text_col, F.col(id_col).alias("id")).persist()
     )
-    ntok = doc_tok.groupBy("id").agg(F.sum("cnt").alias("ntok"))
-    dfreq = doc_tok.groupBy("tok").agg(
+    ntok = doc_tok.groupBy("id").agg(F.sum("tf").alias("ntok"))
+    dfreq = doc_tok.groupBy("term").agg(
         F.countDistinct("id").cast("long").alias("df")
     )
     n_docs = doc_tok.agg(F.countDistinct("id").alias("n_docs"))
     scored = (
-        doc_tok.join(F.broadcast(dfreq), "tok")
+        doc_tok.join(F.broadcast(dfreq), "term")
         .join(ntok.withColumnRenamed("id", "nid"), F.col("id") == F.col("nid"))
         .crossJoin(F.broadcast(n_docs))
         .select(
             "id",
-            "tok",
+            "term",
             F.floor(
-                (F.col("cnt") / F.col("ntok"))
+                (F.col("tf") / F.col("ntok"))
                 * F.log10((F.col("n_docs") + 1) / (F.col("df") + 1))
                 * F.lit(1000000.0)
                 + F.lit(0.5)
             ).alias("s6"),
         )
     )
-    w = W.partitionBy("id").orderBy(F.col("s6").desc(), F.col("tok").asc())
+    w = W.partitionBy("id").orderBy(F.col("s6").desc(), F.col("term").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
             F.col("id").alias(id_col),
             F.col("rank").cast("long").alias("rank"),
-            F.col("tok").alias("term"),
+            "term",
             (F.col("s6") / F.lit(1000000.0)).alias("tfidf"),
         )
     )
@@ -556,12 +537,11 @@ def pmi_collocations(
     so all three probabilities share one sample space and the
     estimator is the textbook one.
 
-    Scale shape: one posexplode + per-doc lead window (bounded by doc
-    length) feeds a map-side-combined ``groupBy(w1, w2)`` — (gram,
-    count) pairs are the only corpus-sized shuffle; that relation is
-    persisted (cache-tracked, released by the caller's
-    ``tracking_scope()``) and reused for both marginals and the total,
-    so the corpus is read once. Marginal joins are keyed by w1/w2 and
+    Scale shape: map-only :func:`bigram_rows` feed a map-side-combined
+    ``groupBy(w1, w2)`` — (gram, count) pairs are the only corpus-sized
+    shuffle; that relation is persisted (cache-tracked, released by the
+    caller's ``tracking_scope()``) and reused for both marginals and
+    the total, so the corpus is read once. Marginal joins are keyed by w1/w2 and
     NOT broadcast (a web-scale vocabulary isn't — the stupid_backoff
     precedent; hot function-word keys are AQE skew-split, and the join
     payload is a single count). ``min_count`` is an exact integer cut;
@@ -575,19 +555,8 @@ def pmi_collocations(
 
     Returns the top-k ``(w1, w2, pair_n, left_n, right_n, pmi)``.
     """
-    from pyspark.sql import Window as W
-
-    did = F.col(id_col).alias("id")
-    t = df.select(
-        did,
-        F.posexplode(
-            ws_tokens(F.coalesce(F.col(text_col), F.lit("")))
-        ).alias("pos", "w1"),
-    )
-    w = W.partitionBy("id").orderBy("pos")
     bg = cache.track(
-        t.select("id", "w1", F.lead("w1").over(w).alias("w2"))
-        .filter(F.col("w2").isNotNull())
+        bigram_rows(df, id_col, text_col)
         .groupBy("w1", "w2")
         .agg(F.count("*").cast("long").alias("pair_n"))
         .persist()

@@ -3,9 +3,10 @@ queries() entry at sf0.01 and compares row-count, schema and an
 order-insensitive value hash against oracle_sql() via DuckDB.
 
 ``--plans`` instead builds each query without collecting it and prints
-its name, the md5 of its optimized logical plan (expression ids and
-``plan_id``s masked) and the md5 of its physical operator-name
-sequence — diff two trees' outputs to see which plans a change moved.
+its name, the md5 of its optimized logical plan (expression ids,
+``plan_id``s and lambda-variable numbers masked) and the md5 of its
+physical operator-name sequence — diff two trees' outputs to see which
+plans a change moved.
 """
 import hashlib
 import pathlib
@@ -71,11 +72,20 @@ def _md5(text):
     return hashlib.md5(text.encode("utf-8")).hexdigest()
 
 
+def _mask_plan(text):
+    """Plan text with its session-specific numbering masked: expression
+    ids (``#12``), ``plan_id``s, and the session-wide counter PySpark
+    appends to lambda variables (``lambda x_21#…``), which shifts in
+    every later query when one lambda is added or removed anywhere."""
+    text = re.sub(r"#\d+|plan_id=\d+", "#", text)
+    return re.sub(r"(lambda \w+?)_\d+", r"\1", text)
+
+
 def plan_digests(sdf):
     """(optimized-plan md5, physical operator-sequence md5) of one
     DataFrame, without executing it."""
     qe = sdf._jdf.queryExecution()
-    logical = re.sub(r"#\d+|plan_id=\d+", "#", qe.optimizedPlan().toString())
+    logical = _mask_plan(qe.optimizedPlan().toString())
     ops = [
         m.group(1)
         for m in re.finditer(

@@ -4445,6 +4445,61 @@ def test_pmi_collocations_matches_python_model(spark):
             assert i > ranks[("neural", "network")]
 
 
+def test_ngram_helpers_match_ws_tokens_on_hostile_texts(spark):
+    """ws_bigrams / bigram_rows give exactly the adjacent pairs of
+    ws_tokens, and term_counts exactly a Counter over ws_tokens, on
+    seeded hostile texts: null, '', one token, leading/trailing and
+    mixed WS_CLASS runs, and U+00A0 / U+3000 / BOM / \\x1c, which are
+    NOT whitespace and must stay inside tokens."""
+    import random
+    from collections import Counter
+
+    from newspaper_spark.functions.columns import (
+        normalized_text,
+        ws_bigrams,
+        ws_tokens,
+    )
+    from newspaper_spark.operators.textstats import bigram_rows, term_counts
+
+    rng = random.Random(19)
+    words = ["a", "Bb", "ccc", "ÉtÉ", "中文", "x1", "a b", "-", "A",
+             "nb\u00a0sp", "\u3000", "\ufeffz", "q\x1cq", "\u00a0"]
+    seps = [" ", "  ", "\t", "\x0b", "\f", "\r", "\n", " \t\r\n\x0b\f "]
+    texts = [None, "", "w", " w ", "\t\x0b\f\r\n", "a b", "a a a a"]
+    for _ in range(3000):
+        n = rng.randrange(0, 9)
+        toks = [rng.choice(words) for _ in range(n)]
+        body = "".join(t + rng.choice(seps) for t in toks[:-1]) + "".join(toks[-1:])
+        lead = rng.choice(seps) if rng.random() < 0.3 else ""
+        trail = rng.choice(seps) if rng.random() < 0.3 else ""
+        texts.append(lead + body + trail)
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, t string")
+    t = F.coalesce(F.col("t"), F.lit(""))
+    rows = df.select(
+        "id",
+        ws_tokens(t).alias("toks"),
+        ws_bigrams(normalized_text(t)).alias("bg"),
+    ).collect()
+    toks = {r.id: r.toks for r in rows}
+    assert len(toks) == len(texts)
+    pairs = {i: list(zip(ts, ts[1:])) for i, ts in toks.items()}
+    bad = [r.id for r in rows if r.bg != [f"{a} {b}" for a, b in pairs[r.id]]]
+    assert bad == []
+
+    got_pairs = {i: Counter() for i in toks}
+    for r in bigram_rows(df, "id", "t").collect():
+        got_pairs[r.id][(r.w1, r.w2)] += 1
+    assert got_pairs == {i: Counter(ps) for i, ps in pairs.items()}
+
+    tc = term_counts(df, "t", "id")
+    assert tc.columns == ["id", "term", "tf"]
+    got_tf = {i: Counter() for i in toks}
+    for r in tc.collect():
+        got_tf[r.id][r.term] += r.tf
+    assert got_tf == {i: Counter(ts) for i, ts in toks.items()}
+    assert got_tf[0] == Counter({"": 1})  # the null text
+
+
 def test_chunk_text_matches_python_model(spark):
     """chunk_text vs an independent window model: window count rule,
     offsets, short final windows, single-window docs, the empty-doc

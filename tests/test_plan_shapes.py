@@ -48,6 +48,57 @@ def test_add_nlp_single_fused_udf_slot(spark):
     assert "_keywords(" not in p and "_summary(" not in p
 
 
+def test_ngram_operators_plan_no_lambda_and_pmi_no_window(spark):
+    """Bigrams come map-only from ws_bigrams/bigram_rows: no Catalyst
+    lambda (interpreted per element) in the n-gram operators' plans,
+    and no per-document lead Window in pmi_collocations'."""
+    from newspaper_spark import cache
+    from newspaper_spark.operators.dsir import dsir_scores
+    from newspaper_spark.operators.textstats import (
+        bigram_backoff_logprob,
+        pmi_collocations,
+        repetition_stats,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    with cache.tracking_scope():
+        plans = {
+            "repetition_stats": _plan(spark, repetition_stats(docs)),
+            "pmi_collocations": _plan(spark, pmi_collocations(docs)),
+            "bigram_backoff_logprob": _plan(
+                spark, bigram_backoff_logprob(docs, docs)
+            ),
+            "dsir_scores": _plan(
+                spark, dsir_scores(docs, F.col("doc_id") % 2 == 0)
+            ),
+        }
+    assert [n for n, p in plans.items() if "lambdafunction" in p] == []
+    assert "Window" not in plans["pmi_collocations"]
+
+
+def test_mask_plan_hides_session_numbering():
+    """verify_oracle --plans digests must not move when an unrelated
+    query gains or loses a lambda: expression ids, plan_ids and the
+    session-wide lambda-variable counter are all masked."""
+    import pathlib
+    import sys
+
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "scripts"))
+    from verify_oracle import _mask_plan
+
+    a = ("Project [transform(t#12, lambdafunction(upper(lambda x_21#40), "
+         "lambda x_21#40, false)) AS u#7], plan_id=3")
+    b = ("Project [transform(t#99, lambdafunction(upper(lambda x_3#5), "
+         "lambda x_3#5, false)) AS u#8], plan_id=41")
+    assert _mask_plan(a) == _mask_plan(b)
+    assert "lambda x#" in _mask_plan(a)
+    # names keep their own underscores; only the trailing counter goes
+    assert _mask_plan("lambda acc_sum_7#1") == "lambda acc_sum#"
+    # a different variable or operator still changes the text
+    assert _mask_plan(a) != _mask_plan(a.replace("upper", "lower"))
+    assert _mask_plan(a) != _mask_plan(a.replace("x_21", "y_21"))
+
+
 def test_anchor_topk_window_group_limit_pushdown(spark):
     """anchor_topk's per-target top-k claims WindowGroupLimit
     pushdown (partial top-k map-side before the window shuffle)."""
