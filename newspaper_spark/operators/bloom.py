@@ -24,15 +24,20 @@ reconstructs the filter bit-for-bit (CLAUDE.md hashing convention):
   ``1::BIGINT << 63``), and every word value stays positive.
 
 Scale shape: the build is one explode(k) + map-side ``bit_or``
-groupBy onto at most m/32 rows (a few thousand for a billion-key
-filter — the ONLY state that ever moves); the probe is explode(k) +
-broadcast join against those rows + a k-row-per-key min aggregate.
-Probe cost is independent of the seen-set size; raw URLs never
-shuffle. Sizing: m ≈ 1.44 · k/ln2 · n_keys bits for the standard
-(2^-k)-ish false-positive rate at k hashes — callers pick m per
-epoch from the expected key count.
+groupBy onto at most m/32 rows (the ONLY state that ever moves); the
+probe is one plan for batch and streaming frames: those rows packed
+into one dense row of ceil(m/32) BIGINT words (m/4 bytes, 8 MB for
+m = 2^25), broadcast ONCE and cross-joined, then k Column bit tests
+per row — no aggregate, no shuffle and no state on the probed side,
+and rows need no unique id. Probe cost is independent of the seen-set
+size; raw URLs never shuffle. Sizing: m ≈ 1.44 · k/ln2 · n_keys bits
+for the standard (2^-k)-ish false-positive rate at k hashes — callers
+pick m per epoch from the expected key count.
 """
 from __future__ import annotations
+
+import functools
+import operator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,13 +47,15 @@ from newspaper_spark.functions.columns import md5_long
 __all__ = [
     "bloom_build",
     "bloom_probe",
-    "bloom_probe_stream",
     "bloom_seen_filter",
 ]
 
-#: bit mask for the in-scope ``pos`` column (pyspark's shiftleft wrapper
-#: only takes a literal bit count, so the column form goes through expr)
-_MASK = "shiftleft(cast(1 as bigint), cast(pos % 32 as int))"
+
+def _mask(pos: str):
+    """Bit mask of position column ``pos`` within its 32-bit word
+    (pyspark's shiftleft wrapper only takes a literal bit count, so the
+    column form goes through expr)."""
+    return F.expr(f"shiftleft(cast(1 as bigint), cast({pos} % 32 as int))")
 
 
 def _bit_pos(col, i: int, m: int):
@@ -71,7 +78,7 @@ def bloom_build(df: DataFrame, col: str, m: int = 1 << 20, k: int = 4) -> DataFr
     return (
         pos.select(
             F.shiftright("pos", 5).alias("word_idx"),
-            F.expr(_MASK).alias("mask"),
+            _mask("pos").alias("mask"),
         )
         .groupBy("word_idx")
         .agg(F.bit_or("mask").alias("word"))
@@ -82,7 +89,6 @@ def bloom_probe(
     df: DataFrame,
     words: DataFrame,
     col: str,
-    id_col: str,
     m: int = 1 << 20,
     k: int = 4,
     out_col: str = "possibly_seen",
@@ -91,89 +97,46 @@ def bloom_probe(
     bits of ``df[col]`` are set in the ``words`` relation from
     :func:`bloom_build` (built with the SAME m and k — mismatched
     parameters silently probe the wrong bits). No false negatives by
-    construction; null values probe as not-seen. ``id_col`` must be
-    unique per row (it keys the probe aggregate and the join back)."""
-    probes = df.select(
-        F.col(id_col),
-        F.explode(
-            F.array(*[_bit_pos(F.col(col), i, m) for i in range(k)])
-        ).alias("pos"),
-    )
-    hit = F.coalesce(F.col("word"), F.lit(0)).bitwiseAND(F.expr(_MASK)) != 0
-    verdict = (
-        probes.withColumn("word_idx", F.shiftright("pos", 5))
-        .join(F.broadcast(words), "word_idx", "left")
-        .select(id_col, F.when(hit, 1).otherwise(0).alias("hit"))
-        .groupBy(id_col)
-        # null col -> explode of null positions still yields k rows of
-        # null pos -> hit 0 -> not seen; min==1 demands every probe hit
-        .agg((F.min("hit") == 1).alias(out_col))
-    )
-    return df.join(verdict, id_col, "left").withColumn(
-        out_col, F.coalesce(F.col(out_col), F.lit(False))
-    )
+    construction; null values probe as not-seen. Output: ``df``'s
+    columns in their order, then ``out_col``.
 
-
-def bloom_probe_stream(
-    df: DataFrame,
-    words: DataFrame,
-    col: str,
-    id_col: str,
-    m: int = 1 << 20,
-    k: int = 4,
-    out_col: str = "possibly_seen",
-) -> DataFrame:
-    """Map-only twin of :func:`bloom_probe` for Structured Streaming:
-    the batch probe's explode + groupBy(id) is a stateful streaming
-    aggregation, but membership is just an AND of k bounded bit
-    checks — so this variant computes each probe position as a column
-    and resolves it with its own stream-static BROADCAST join against
-    the (≤ m/32 row) words relation. k joins, zero aggregations, zero
-    state: legal in append mode with no watermark, exactly what a
-    streaming crawl loop needs (``df`` may be a streaming DataFrame;
-    ``words`` is the batch-built filter state).
-
-    Bit-for-bit the same verdicts as bloom_probe (same positions, same
-    words) — proven by the batch-equivalence test. Works on batch
-    DataFrames too; the batch probe stays preferable there only when k
-    joins cost more than one shuffle-free explode+agg (they rarely do
-    — both are broadcast — so this is also a fine batch plan).
-    """
-    out = df
-    hit_cols = []
-    for i in range(k):
-        wi, w, p, h = f"_wi{i}", f"_w{i}", f"_pos{i}", f"_hit{i}"
-        side = words.select(
-            F.col("word_idx").alias(wi), F.col("word").alias(w)
+    Map-only (module docstring): ``df`` may be a streaming DataFrame
+    (``words`` is batch-built filter state), and its rows need no
+    unique id."""
+    n_words = -(-m // 32)
+    dense = words.agg(
+        F.map_from_entries(F.collect_list(F.struct("word_idx", "word"))).alias(
+            "_by_idx"
         )
-        out = out.withColumn(p, _bit_pos(F.col(col), i, m)).withColumn(
-            wi, F.shiftright(p, 5)
-        )
-        out = out.join(F.broadcast(side), wi, "left")
-        mask = F.expr(
-            f"shiftleft(cast(1 as bigint), cast({p} % 32 as int))"
-        )
-        # null col -> null pos -> null mask -> hit false (not seen),
-        # matching the batch probe's min(hit)==1 over k null probes
-        out = out.withColumn(
-            h,
-            F.coalesce(
-                F.coalesce(F.col(w), F.lit(0)).bitwiseAND(mask) != 0,
-                F.lit(False),
-            ),
-        ).drop(p, wi, w)
-        hit_cols.append(h)
-    verdict = F.col(hit_cols[0])
-    for h in hit_cols[1:]:
-        verdict = verdict & F.col(h)
-    return out.withColumn(out_col, verdict).drop(*hit_cols)
+    ).select(
+        # dense: a missing word is 0. The lambda runs over the one
+        # packed row, not per probed row
+        F.transform(
+            F.sequence(F.lit(0).cast("long"), F.lit(n_words - 1).cast("long")),
+            lambda i: F.coalesce(F.col("_by_idx")[i], F.lit(0).cast("long")),
+        ).alias("_words")
+    )
+    pos = [f"_pos{i}" for i in range(k)]
+    probed = df.select(
+        "*", *[_bit_pos(F.col(col), i, m).alias(p) for i, p in enumerate(pos)]
+    )
+    seen = functools.reduce(
+        operator.and_,
+        [
+            F.get(F.col("_words"), F.shiftright(p, 5)).bitwiseAND(_mask(p)) != 0
+            for p in pos
+        ],
+    )
+    # a null value has null positions -> null verdict -> not seen
+    return probed.crossJoin(F.broadcast(dense)).select(
+        *df.columns, F.coalesce(seen, F.lit(False)).alias(out_col)
+    )
 
 
 def bloom_seen_filter(
     candidates: DataFrame,
     seen: DataFrame,
     url_col: str = "url",
-    id_col: str = "doc_id",
     m: int = 1 << 20,
     k: int = 4,
 ) -> DataFrame:
@@ -181,9 +144,9 @@ def bloom_seen_filter(
     ``seen[url_col]`` and probe every candidate. Returns the candidate
     columns plus ``possibly_seen``; keep rows where ``NOT
     possibly_seen`` (a false positive loses a new URL at the sized
-    rate; a true duplicate is never re-emitted). The exact-anti-join
-    twin in source_build.py remains the right plan while the seen set
+    rate; a true duplicate is never re-emitted). The exact anti-join
+    in source_build.py remains the right plan while the seen set
     broadcasts comfortably; this is the bounded-state replacement
     beyond that."""
     words = bloom_build(seen, url_col, m=m, k=k)
-    return bloom_probe(candidates, words, url_col, id_col, m=m, k=k)
+    return bloom_probe(candidates, words, url_col, m=m, k=k)

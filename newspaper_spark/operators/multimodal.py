@@ -824,7 +824,9 @@ class _JpegHuffTable:
 class _JpegBitReader:
     """MSB-first bit reader over entropy-coded data with 0xFF00 byte
     stuffing. Any other marker ends the data a block may read; the
-    traversal consumes each RSTn with expect_restart."""
+    traversal consumes each RSTn with expect_restart. ``cur`` holds
+    only the ``nbits`` unread bits (``cur < 1 << nbits``), so a bit
+    read never shifts more than one byte's worth of integer."""
 
     def __init__(self, data: bytes, pos: int):
         self.d = data
@@ -843,14 +845,15 @@ class _JpegBitReader:
             if self.d[self.i] != 0x00:  # not a stuffed literal 0xFF
                 raise ValueError("JPEG entropy data ended at marker")
             self.i += 1
-        self.cur = (self.cur << 8) | b
-        self.nbits += 8
+        self.cur, self.nbits = b, 8  # only ever loaded when empty
 
     def read_bit(self) -> int:
         if self.nbits == 0:
             self._load_byte()
         self.nbits -= 1
-        return (self.cur >> self.nbits) & 1
+        bit = self.cur >> self.nbits
+        self.cur -= bit << self.nbits
+        return bit
 
     def receive(self, n: int) -> int:
         v = 0
@@ -860,7 +863,7 @@ class _JpegBitReader:
 
     def expect_restart(self):
         """Byte-align, then consume the RSTn marker that must follow."""
-        self.nbits = 0  # discard padding bits to the byte boundary
+        self.cur = self.nbits = 0  # discard padding to the byte boundary
         d, i = self.d, self.i
         if i + 1 >= len(d) or d[i] != 0xFF or not 0xD0 <= d[i + 1] <= 0xD7:
             raise ValueError("expected JPEG restart marker")

@@ -32,16 +32,17 @@ an RFC 9309 extension robotparser itself does not implement.
 Scale shape: parsing is pure Catalyst (split + posexplode + regexes —
 no UDF); group numbering uses ONE window partitioned by host and
 bounded by lines-per-robots-file (tens — never corpus-wide); the gate
-joins URLs to the per-host chosen group's rules (a few rows per host,
-AQE-broadcast while small) with a prefix filter and a ``min_by`` line
-aggregate. Raw pages never shuffle.
+is one plan for batch and streaming URLs: a broadcast join of each URL
+to its host's line-ordered rule array and a first-prefix-match filter.
+Aggregates run on the rules side only (group selection and the
+per-host pack, a few rows per host); URLs and raw pages never shuffle.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["parse_robots", "robots_gate", "robots_gate_stream"]
+__all__ = ["parse_robots", "robots_gate"]
 
 #: explicit horizontal-whitespace class — NEVER \\s cross-engine
 #: (CLAUDE.md); robots directives are single-line so \\n can't occur
@@ -184,67 +185,17 @@ def robots_gate(
     id/url/host plus ``allowed`` (boolean; hosts with no robots rules
     default to allowed) and ``matched_rule`` (the deciding rule's path
     prefix, NULL when no rule matched). ``agent`` is normalized the
-    robotparser way: text before the first '/' lowercased."""
-    grp = _chosen_rules(rules, agent, host_col)
-    probe = urls.withColumn("_path", _probe_path(url_col))
-    matched = (
-        probe.join(grp, on=[host_col], how="left")
-        .filter(
-            F.col("rule_path").isNull()
-            | F.col("_path").startswith(F.col("rule_path"))
-        )
-        .groupBy(id_col)
-        .agg(
-            F.min_by(
-                F.struct(
-                    F.col("rule_allow").alias("a"),
-                    F.col("rule_path").alias("p"),
-                ),
-                F.coalesce(F.col("line_no"), F.lit(2147483647)),
-            ).alias("m")
-        )
-        .select(
-            id_col,
-            F.coalesce(F.col("m.a"), F.lit(True)).alias("allowed"),
-            F.col("m.p").alias("matched_rule"),
-        )
-    )
-    out = urls.join(matched, id_col, "left")
-    # a URL whose every group-rule prefix mismatches loses all its
-    # join rows to the filter only when rules exist but none match —
-    # the left join above still keeps it via the unmatched-side NULLs
-    return out.select(
-        id_col,
-        url_col,
-        host_col,
-        F.coalesce(F.col("allowed"), F.lit(True)).alias("allowed"),
-        "matched_rule",
-    )
+    robotparser way: text before the first '/' lowercased.
 
-
-def robots_gate_stream(
-    urls: DataFrame,
-    rules: DataFrame,
-    agent: str,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    host_col: str = "host",
-) -> DataFrame:
-    """Map-only twin of :func:`robots_gate` for Structured Streaming:
-    the batch gate's per-URL min_by aggregate is a stateful streaming
-    aggregation, but first-match evaluation over a host's rules is a
-    BOUNDED scan (tens of lines per robots.txt) — so this variant
-    packs each host's chosen-group rules into one line-ordered array
-    (batch side), stream-static broadcast-joins it onto the URLs, and
-    takes the first prefix match with a Column filter. Zero
-    aggregations on the stream, zero state: legal in append mode with
-    no watermark (``urls`` may be streaming; ``rules`` is batch state,
-    exactly how a crawl loop holds robots.txt snapshots).
-
-    Same verdicts as robots_gate by construction (array order = line
-    order = the batch min_by key) — proven by the batch-equivalence
-    test. The HOF filter is interpreted per element (CLAUDE.md), but
-    over ≤ rules-per-robots-file elements — bounded, not corpus-sized.
+    Map-only: each host's chosen-group rules are packed into one
+    line-ordered array (rules side), broadcast-joined onto the URLs by
+    host, and the first prefix match is taken with a Column filter. No
+    aggregate and no state on the URL side, so ``urls`` may be a
+    streaming DataFrame (``rules`` is batch state, as a crawl loop
+    holds robots.txt snapshots), and every row gets its own verdict
+    whether or not ``id_col`` is unique. The HOF filter is interpreted
+    per element (CLAUDE.md), but over <= rules-per-robots-file
+    elements — bounded, not corpus-sized.
     """
     grp = _chosen_rules(rules, agent, host_col)
     per_host = grp.groupBy(host_col).agg(

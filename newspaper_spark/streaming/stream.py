@@ -28,6 +28,17 @@ def read_transcript_stream(
     )
 
 
+def _parquet_sink(stream: DataFrame, output_dir: str, checkpoint_dir: str):
+    """The append-mode parquet sink every stream here writes to; exactly
+    once through its checkpoint. Returns the unstarted writer."""
+    return (
+        stream.writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+
+
 def windowed_turn_counts(
     transcripts: DataFrame,
     window_duration: str = "10 minutes",
@@ -66,13 +77,7 @@ def start_windowed_count_stream(
     emitted exactly once, when the watermark passes its end."""
     stream = read_transcript_stream(spark, input_dir)
     counts = windowed_turn_counts(stream, window_duration, watermark_delay)
-    return (
-        counts.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return _parquet_sink(counts, output_dir, checkpoint_dir).start()
 
 
 def start_extraction_stream(
@@ -84,13 +89,7 @@ def start_extraction_stream(
     """File-to-file streaming extraction with exactly-once checkpointing."""
     stream = read_transcript_stream(spark, input_dir)
     extracted = extract_articles(stream)
-    return (
-        extracted.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return _parquet_sink(extracted, output_dir, checkpoint_dir).start()
 
 
 def dedup_stream(
@@ -129,10 +128,7 @@ def start_dedup_stream(
         read_transcript_stream(spark, input_dir), watermark_delay
     )
     return (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+        _parquet_sink(deduped, output_dir, checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )

@@ -48,6 +48,7 @@ sys.path.insert(0, str(REPO))
 import __spark_entry__ as E
 from newspaper_spark import cache, obs
 from newspaper_spark.operators import (
+    bloom,
     dedup,
     dsir,
     filters,
@@ -55,6 +56,7 @@ from newspaper_spark.operators import (
     index,
     packing,
     quality_nb,
+    robots,
     similarity,
     span_dedup,
     textstats,
@@ -223,6 +225,22 @@ def transcripts(r: Rung) -> DataFrame:
     return synthetic_transcripts(r.spark, r.sf_dir, replication=r.k)
 
 
+def crawl_urls(r: Rung) -> DataFrame:
+    """The synthetic URL universe (``_synth_url_expr``) ×k: every URL k
+    times under fresh doc_ids ``doc_id·k + r``, with its host and
+    q_bloom_seen's seen flag (base doc_id % 4 == 0). Each copy gets the
+    base URL's robots and Bloom verdicts, so the allowed and
+    possibly-seen counts scale exactly linearly in k."""
+    d = load_table(r.spark, r.sf_dir, "documents").select("doc_id", _replicas(r.k))
+    host = F.concat(F.lit("site"), (F.col("doc_id") % 7).cast("string"), F.lit(".com"))
+    return d.select(
+        (F.col("doc_id") * r.k + F.col("r")).alias("doc_id"),
+        E._synth_url_expr().alias("url"),
+        host.alias("host"),
+        _every(4).alias("seen"),
+    )
+
+
 def ann_vectors(r: Rung) -> DataFrame:
     """k·base_n fresh seeded uniform vectors (no cross-rung duplicates;
     random pairwise cosine stays far under 0.9) plus a near-dup of every
@@ -380,6 +398,42 @@ def _shard_assign(d: DataFrame) -> DataFrame:
     return packing.shard_assign(counted, shard_tokens=4096, seed="shard")
 
 
+# q_robots_gate's rule bodies, by host number % 3
+_ROBOTS = (
+    "User-agent: newsbot\nDisallow: /news/\nDisallow: /gallery/"
+    "\n\nUser-agent: *\nDisallow: /",
+    "# site robots\nUser-agent: *\nDisallow: /tag-\nDisallow:",
+    "User-agent: other\nDisallow: /",
+)
+
+
+def crawl_robots(r: Rung, urls: DataFrame):
+    """robots_gate for agent NewsBot/1.0 over q_robots_gate's rules for
+    site0..site6 (keyword arguments only: the same call runs against
+    older trees for A/B)."""
+    rules = robots.parse_robots(
+        r.spark.createDataFrame(
+            [(f"site{h}.com", _ROBOTS[h % 3]) for h in range(7)],
+            "host string, robots string",
+        )
+    )
+    out = robots.robots_gate(
+        urls=urls.select("doc_id", "url", "host"), rules=rules, agent="NewsBot/1.0"
+    )
+    return out, {"n_allowed": F.count_if("allowed")}
+
+
+def crawl_bloom(r: Rung, urls: DataFrame):
+    """q_bloom_seen's gate: m=1024, k=4 over the seen-flagged URLs."""
+    out = bloom.bloom_seen_filter(
+        candidates=urls.select("doc_id", "url"),
+        seen=urls.filter("seen").select("url"),
+        m=1024,
+        k=4,
+    )
+    return out, {"n_possibly_seen": F.count_if("possibly_seen")}
+
+
 def ann_pairs(r: Rung, vecs: DataFrame, n_planes: int):
     """embedding_dedup_pairs at q_embedding_dedup's shape (threshold 0.9,
     4 bands); the result must be exactly the seeded near-dups."""
@@ -473,6 +527,18 @@ LADDERS: dict[str, Ladder] = {
         "turns",
         (1, 10),
         lambda rungs, c: {"n_ok_linear": scales(rungs["extract"], "n_ok")},
+    ),
+    "crawl": Ladder(
+        crawl_urls,
+        {"robots_gate": Op(crawl_robots), "bloom_seen_filter": Op(crawl_bloom)},
+        "rows",
+        (1, 10),
+        lambda rungs, c: {
+            "allowed_linear": scales(rungs["robots_gate"], "n_allowed"),
+            "possibly_seen_linear": scales(
+                rungs["bloom_seen_filter"], "n_possibly_seen"
+            ),
+        },
     ),
     # the operators round 8 changed, held to per-row cost at x10 ≤ x1
     "r08": Ladder(

@@ -21,6 +21,7 @@ INVARIANTS = {
     "sparse": {"pairs_linear"},
     "badwords": {"rare_hits_constant", "frequent_hits_linear"},
     "extract": {"n_ok_linear"},
+    "crawl": {"allowed_linear", "possibly_seen_linear"},
 }
 
 

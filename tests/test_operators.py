@@ -2160,6 +2160,52 @@ def test_bloom_seen_filter_invariants(spark):
     assert bloom_build(seen, "url", m=256, k=4).count() <= 256 // 32
 
 
+def test_crawl_gates_repeated_ids(spark):
+    """Ids need not be unique: two rows sharing doc_id 1 but differing
+    in URL each get their own verdict from both crawl gates on a batch
+    frame — the Bloom probe never gives a false negative (the seen URL
+    flags whatever its sibling is), and robots_gate returns each row's
+    own allowed and matched_rule, as urllib.robotparser decides them."""
+    import urllib.robotparser as rp
+
+    from newspaper_spark.operators.bloom import bloom_seen_filter
+    from newspaper_spark.operators.robots import parse_robots, robots_gate
+
+    seen_url, new_url = "http://a.com/seen", "http://a.com/new"
+    cand = spark.createDataFrame(
+        [(1, seen_url), (1, new_url)], "doc_id long, url string"
+    )
+    seen = spark.createDataFrame([(seen_url,)], "url string")
+    # m=2^20: a false positive on the one new URL is ~1e-21
+    got = sorted(
+        (r.doc_id, r.url, r.possibly_seen)
+        for r in bloom_seen_filter(cand, seen, m=1 << 20, k=4).collect()
+    )
+    assert got == [(1, new_url, False), (1, seen_url, True)]
+
+    body = "User-agent: newsbot\nDisallow: /private/\n"
+    rules = parse_robots(
+        spark.createDataFrame([("a.com", body)], "host string, robots string")
+    )
+    urls = spark.createDataFrame(
+        [(1, "http://a.com/open", "a.com"), (1, "http://a.com/private/x", "a.com")],
+        "doc_id long, url string, host string",
+    )
+    ref = rp.RobotFileParser()
+    ref.parse(body.splitlines())
+    got = sorted(
+        (r.doc_id, r.url, r.allowed, r.matched_rule)
+        for r in robots_gate(urls, rules, "NewsBot/1.0").collect()
+    )
+    assert got == [
+        (1, "http://a.com/open", True, None),
+        (1, "http://a.com/private/x", False, "/private/"),
+    ]
+    assert [r[2] for r in got] == [
+        ref.can_fetch("NewsBot/1.0", r[1]) for r in got
+    ]
+
+
 def test_line_filters_classes_and_drop_rule(spark):
     """Each RefinedWeb line-removal class triggers independently;
     empty lines survive; the 5% whole-doc drop rule is integer-exact
@@ -3199,6 +3245,33 @@ def test_jpeg_progressive_equals_baseline_gray():
     assert b"\xff\xc0" in base and b"\xff\xc2" not in base
     assert b"\xff\xc2" in prog and b"\xff\xc0" not in prog
     assert _decode_jpeg(prog) == _decode_jpeg(base)
+
+
+def test_jpeg_bit_reader_keeps_only_unread_bits(monkeypatch):
+    """The entropy bit reader holds only its unread bits: after every
+    scan of the progressive test payload ``cur < 1 << nbits`` (an
+    unmasked accumulator grows as long as the scan read so far, and
+    every bit read shifts all of it)."""
+    from newspaper_spark.operators import multimodal
+
+    readers = []
+
+    class Recording(multimodal._JpegBitReader):
+        def __init__(self, data, pos):
+            super().__init__(data, pos)
+            readers.append(self)
+
+    w, h = 24, 16
+    plane = [[(x * 11 + y * 7 + (x * y) % 13) % 256 for x in range(w)]
+             for y in range(h)]
+    quant = [1] * 64
+    grids, _, _ = _t_coef_grids([plane], [(1, 1)], quant)
+    prog = _t_encode_progressive_from_coefs(grids, [(1, 1)], w, h, quant)
+    want = multimodal._decode_jpeg(prog)
+    monkeypatch.setattr(multimodal, "_JpegBitReader", Recording)
+    assert multimodal._decode_jpeg(prog) == want
+    assert len(readers) > 1  # one per scan
+    assert all(br.cur < 1 << br.nbits for br in readers)
 
 
 def test_jpeg_progressive_equals_baseline_color_subsampled():

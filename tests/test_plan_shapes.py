@@ -220,16 +220,41 @@ def test_no_cartesian_product_in_any_query_plan(spark):
 def test_bm25_and_bloom_zero_sort_merge_joins(spark):
     """bm25_topk's 'zero sort-merge joins' and bloom_seen's
     broadcast-only probe are standing claims (BENCH.md audits) —
-    pinned here against the actual query plans."""
+    pinned here against the actual query plans. bloom_seen's one
+    broadcast is the dense filter row, joined without a key."""
     import __spark_entry__ as E
     from newspaper_spark import cache
 
-    for name in ("bm25_topk", "bloom_seen"):
+    for name, join in (
+        ("bm25_topk", "BroadcastHashJoin"),
+        ("bloom_seen", "BroadcastNestedLoopJoin BuildRight"),
+    ):
         with cache.tracking_scope():
             df = E.queries()[name](spark, SF_DIR)
             p = _plan(spark, df, mode="simple")
             assert "SortMergeJoin" not in p, name
-            assert "BroadcastHashJoin" in p, name
+            assert join in p, name
+
+
+def test_bloom_probe_one_broadcast_no_probe_side_aggregate(spark):
+    """bloom_probe packs the filter into one dense row and broadcasts
+    it ONCE (the k-join form planned and broadcast the bloom_build
+    aggregate k times), and the probed rows reach the output through
+    no Aggregate and no shuffle: every Aggregate and Exchange in the
+    plan sits under the one BroadcastExchange, which the tree prints
+    after the probed side."""
+    from newspaper_spark.operators.bloom import bloom_build, bloom_probe
+
+    cand = spark.createDataFrame(
+        [(i % 3, f"http://h{i % 5}.com/p{i}") for i in range(40)],
+        "doc_id long, url string",
+    )
+    words = bloom_build(cand.filter("doc_id = 0"), "url", m=1024, k=4)
+    p = _plan(spark, bloom_probe(cand, words, "url", m=1024, k=4), "simple")
+    assert p.count("BroadcastExchange") == 1
+    probe_side = p.split("BroadcastExchange")[0]
+    assert "Aggregate" not in probe_side
+    assert "Exchange" not in probe_side
 
 
 def test_source_meta_map_only(spark):
