@@ -47,7 +47,6 @@ CLOSES["tr"] = frozenset(["tr", "td", "th", "caption", "colgroup"])
 CLOSES["td"] = frozenset(["td", "th", "caption", "colgroup"])
 CLOSES["th"] = frozenset(["td", "th", "caption", "colgroup"])
 CLOSES["thead"] = frozenset(["tr", "td", "th", "tbody", "caption", "colgroup"])
-CLOSES["tbody"] = frozenset(["tr", "td", "th", "thead", "caption", "colgroup"])
 CLOSES["tfoot"] = frozenset(["tr", "td", "th", "thead", "tbody", "caption", "colgroup"])
 CLOSES["tbody"] = frozenset(
     ["tr", "td", "th", "thead", "tbody", "caption", "colgroup"]

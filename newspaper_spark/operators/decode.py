@@ -13,10 +13,11 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .batch import row_udf
 
 _CHARSET_RE = re.compile(
     rb"""<meta[^>]+charset\s*=\s*["']?\s*([a-zA-Z0-9_\-]+)"""
@@ -142,11 +143,7 @@ def decode_html_bytes(raw: bytes) -> str:
         return _detect_and_decode(raw)
 
 
-def _decode_batch(payloads: pd.Series) -> pd.Series:
-    return pd.Series([decode_html_bytes(p) for p in payloads], dtype="object")
-
-
-decode_html_udf = F.pandas_udf(_decode_batch, T.StringType())
+decode_html_udf = row_udf(decode_html_bytes, T.StringType(), lambda: None)
 
 
 def decode_html(df: DataFrame, binary_col: str, out_col: str = "text") -> DataFrame:

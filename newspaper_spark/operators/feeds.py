@@ -19,7 +19,7 @@ surface, minus the network fetch (out of scope by SURVEY design):
   the structured half of feed ingestion: a REAL stdlib
   ``xml.etree.ElementTree`` parse of each feed body (RSS 2.0 and Atom
   1.0), emitting one row per entry with title / link / published.
-  Arrow-batched ``mapInPandas`` — the XML never shuffles, entries
+  One ``batch.flat_map`` stage — the XML never shuffles, entries
   fan out map-side. Malformed XML lands in the error channel
   (``error='malformed-xml'`` row with null entry fields) instead of
   failing the stage, the same contract as the media decoders.
@@ -30,8 +30,12 @@ column, which is what a 100 TB crawl archive actually holds.
 """
 from __future__ import annotations
 
+import xml.etree.ElementTree as ET
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .batch import flat_map
 
 __all__ = ["FEED_URL_RE", "feed_urls", "parse_feed_entries", "parse_sitemaps", "SITEMAP_MAX_ENTRIES"]
 
@@ -65,6 +69,57 @@ def feed_urls(
     return df.select(F.col(id_col), F.posexplode(urls).alias("url_idx", "url"))
 
 
+def _xml_root(xml):
+    """``(root, None)`` for a parsed XML body, or ``(None, error)``: a
+    null body parses as ''; any DOCTYPE/ENTITY declaration gives
+    ``'dtd-rejected'`` BEFORE the parser sees it (stdlib ET expands
+    internal entities with no budget — billion-laughs DoS; no real
+    feed or sitemap carries a DTD, and the literal token inside CDATA
+    also rejects — a documented trade for a hostile-input corpus);
+    unparseable XML gives ``'malformed-xml'``."""
+    if xml is None:
+        xml = ""
+    up = str(xml).upper()
+    if "<!DOCTYPE" in up or "<!ENTITY" in up:
+        return None, "dtd-rejected"
+    try:
+        return ET.fromstring(xml), None
+    except ET.ParseError:
+        return None, "malformed-xml"
+
+
+_FEED_OUTPUTS = ["fmt", "entry_idx", "title", "link", "published", "error"]
+
+
+def _feed_rows(xml):
+    root, err = _xml_root(xml)
+    if err is None and root.tag not in ("rss", f"{_ATOM_NS}feed"):
+        err = "not-a-feed"
+    if err is not None:
+        return [(None, None, None, None, None, err)]
+    if root.tag == "rss":
+        fmt = "rss"
+        entries = [
+            (e.findtext("title"), e.findtext("link"), e.findtext("pubDate"))
+            for e in root.findall("./channel/item")
+        ]
+    else:
+        fmt = "atom"
+        entries = []
+        for e in root.findall(f"{_ATOM_NS}entry"):
+            link = e.find(f"{_ATOM_NS}link")
+            entries.append(
+                (
+                    e.findtext(f"{_ATOM_NS}title"),
+                    link.get("href") if link is not None else None,
+                    e.findtext(f"{_ATOM_NS}updated"),
+                )
+            )
+    if not entries:
+        return [("empty", None, None, None, None, None)]
+    return [(fmt, i, title, link, pub, None) for i, (title, link, pub) in enumerate(entries)]
+
+
 def parse_feed_entries(
     df: DataFrame, xml_col: str = "xml", id_col: str = "feed_id"
 ) -> DataFrame:
@@ -81,95 +136,53 @@ def parse_feed_entries(
     ``error='malformed-xml'`` row; an XML root that is neither
     ``<rss>`` nor Atom ``<feed>`` emits ``error='not-a-feed'``; any
     DOCTYPE/ENTITY declaration emits ``error='dtd-rejected'`` without
-    reaching the parser (stdlib ET has no entity-expansion budget — a
-    billion-laughs feed would DoS the executor)."""
-    spark = df.sparkSession  # noqa: F841  (documents the session tie)
-    out_schema = (
+    reaching the parser (see :func:`_xml_root`). The id is copied
+    through as is, null included. One ``batch.flat_map`` stage."""
+    return flat_map(
+        df, [id_col], xml_col, _feed_rows, _FEED_OUTPUTS,
         f"{id_col} long, fmt string, entry_idx int, title string, "
-        "link string, published string, error string"
+        "link string, published string, error string",
     )
-
-    def batches(it):
-        import xml.etree.ElementTree as ET
-
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for fid, xml in zip(pdf[id_col], pdf[xml_col]):
-                fid = int(fid)
-                if xml is None or not str(xml).strip():
-                    rows.append((fid, None, None, None, None, None, "malformed-xml"))
-                    continue
-                # stdlib ET expands internal entities with no budget
-                # (billion-laughs DoS); no real feed carries a DTD, so
-                # any DOCTYPE/ENTITY declaration routes to the error
-                # channel BEFORE the parser ever sees it (conservative:
-                # the literal token inside CDATA also rejects — a
-                # documented trade for a hostile-input corpus)
-                up = str(xml).upper()
-                if "<!DOCTYPE" in up or "<!ENTITY" in up:
-                    rows.append((fid, None, None, None, None, None, "dtd-rejected"))
-                    continue
-                try:
-                    root = ET.fromstring(xml)
-                except ET.ParseError:
-                    rows.append((fid, None, None, None, None, None, "malformed-xml"))
-                    continue
-                if root.tag == "rss":
-                    items = root.findall("./channel/item")
-                    entries = [
-                        (
-                            (e.findtext("title")),
-                            (e.findtext("link")),
-                            (e.findtext("pubDate")),
-                        )
-                        for e in items
-                    ]
-                    fmt = "rss"
-                elif root.tag == f"{_ATOM_NS}feed":
-                    entries = []
-                    for e in root.findall(f"{_ATOM_NS}entry"):
-                        link = e.find(f"{_ATOM_NS}link")
-                        entries.append(
-                            (
-                                e.findtext(f"{_ATOM_NS}title"),
-                                link.get("href") if link is not None else None,
-                                e.findtext(f"{_ATOM_NS}updated"),
-                            )
-                        )
-                    fmt = "atom"
-                else:
-                    rows.append((fid, None, None, None, None, None, "not-a-feed"))
-                    continue
-                if not entries:
-                    rows.append((fid, "empty", None, None, None, None, None))
-                    continue
-                for i, (title, link, pub) in enumerate(entries):
-                    rows.append((fid, fmt, i, title, link, pub, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "fmt", "entry_idx", "title", "link",
-                    "published", "error",
-                ],
-            )
-
-    return df.select(id_col, xml_col).mapInPandas(batches, out_schema)
 
 
 _SITEMAP_NS = "{http://www.sitemaps.org/schemas/sitemap/0.9}"
 
-_SITEMAP_SCHEMA = (
-    "site_id long, kind string, entry_idx int, loc string, "
-    "lastmod string, changefreq string, priority string, error string"
-)
+_SITEMAP_OUTPUTS = [
+    "kind", "entry_idx", "loc", "lastmod", "changefreq", "priority", "error",
+]
 
 #: sitemaps.org hard cap — a conforming sitemap holds at most 50,000
 #: URLs; anything past it is a protocol violation AND an output-bound
 #: hazard (one hostile row fanning out to millions), so the parser
 #: rejects rather than truncating silently.
 SITEMAP_MAX_ENTRIES = 50_000
+
+
+def _sitemap_rows(xml):
+    root, err = _xml_root(xml)
+    if err is None and root.tag == f"{_SITEMAP_NS}urlset":
+        kind, child = "urlset", f"{_SITEMAP_NS}url"
+    elif err is None and root.tag == f"{_SITEMAP_NS}sitemapindex":
+        kind, child = "index", f"{_SITEMAP_NS}sitemap"
+    else:
+        return [(None, None, None, None, None, None, err or "not-a-sitemap")]
+    entries = root.findall(child)
+    if len(entries) > SITEMAP_MAX_ENTRIES:
+        return [(None, None, None, None, None, None, "too-many-entries")]
+    if not entries:
+        return [(kind, None, None, None, None, None, "empty")]
+    return [
+        (
+            kind,
+            i,
+            e.findtext(f"{_SITEMAP_NS}loc"),
+            e.findtext(f"{_SITEMAP_NS}lastmod"),
+            e.findtext(f"{_SITEMAP_NS}changefreq"),
+            e.findtext(f"{_SITEMAP_NS}priority"),
+            None,
+        )
+        for i, e in enumerate(entries)
+    ]
 
 
 def parse_sitemaps(
@@ -188,67 +201,10 @@ def parse_sitemaps(
     entries'``) instead of silently truncating. priority/lastmod stay
     the document's literal TEXT (no float/date coercion — the value
     in the XML is text; coercion policy belongs to the caller).
-    Arrow-batched ``mapInPandas``; map-only, the XML never shuffles.
+    One ``batch.flat_map`` stage; map-only, the XML never shuffles.
     """
-    import xml.etree.ElementTree as ET
-    from typing import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            id_col, "kind", "entry_idx", "loc",
-            "lastmod", "changefreq", "priority", "error",
-        ]
-        for pdf in it:
-            rows = []
-            for sid, xml in zip(pdf[id_col].values, pdf[xml_col].values):
-                def err(tag):
-                    rows.append((sid, None, None, None, None, None, None, tag))
-
-                # NULL xml passes the DOCTYPE substring check as the
-                # string 'None' but ET.fromstring(None) raises
-                # TypeError, killing the task instead of landing in the
-                # error channel (ADVICE r6) — coalesce to '' so a null
-                # row yields error='malformed-xml' like any other junk
-                if xml is None or (isinstance(xml, float) and pd.isna(xml)):
-                    xml = ""
-                up = str(xml).upper()
-                if "<!DOCTYPE" in up or "<!ENTITY" in up:
-                    err("dtd-rejected")
-                    continue
-                try:
-                    root = ET.fromstring(xml)
-                except ET.ParseError:
-                    err("malformed-xml")
-                    continue
-                if root.tag == f"{_SITEMAP_NS}urlset":
-                    kind, child = "urlset", f"{_SITEMAP_NS}url"
-                elif root.tag == f"{_SITEMAP_NS}sitemapindex":
-                    kind, child = "index", f"{_SITEMAP_NS}sitemap"
-                else:
-                    err("not-a-sitemap")
-                    continue
-                entries = root.findall(child)
-                if len(entries) > SITEMAP_MAX_ENTRIES:
-                    err("too-many-entries")
-                    continue
-                if not entries:
-                    rows.append((sid, kind, None, None, None, None, None, "empty"))
-                    continue
-                for i, e in enumerate(entries):
-                    rows.append(
-                        (
-                            sid,
-                            kind,
-                            i,
-                            e.findtext(f"{_SITEMAP_NS}loc"),
-                            e.findtext(f"{_SITEMAP_NS}lastmod"),
-                            e.findtext(f"{_SITEMAP_NS}changefreq"),
-                            e.findtext(f"{_SITEMAP_NS}priority"),
-                            None,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(id_col, xml_col).mapInPandas(batches, _SITEMAP_SCHEMA)
+    return flat_map(
+        df, [id_col], xml_col, _sitemap_rows, _SITEMAP_OUTPUTS,
+        f"{id_col} long, kind string, entry_idx int, loc string, "
+        "lastmod string, changefreq string, priority string, error string",
+    )

@@ -1,8 +1,8 @@
 """NLP operators: keyword extraction and extractive summary as
-Arrow-vectorized stages (Article.nlp equivalent, article.py:372-388)."""
+per-row pandas UDFs (``batch.row_udf``; Article.nlp equivalent,
+article.py:372-388)."""
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -34,37 +34,28 @@ _NLP_TYPE = T.StructType(
 )
 
 
-def _nlp_batch(titles, texts, langs):
-    """Fused keywords+summary: one Python pass that shares the
-    ``keywords()`` computation ``summarize()`` would otherwise redo per
-    row. Result-identical to the two single-column UDFs — both columns'
+def _nlp(title, text, lang):
+    """Fused keywords+summary: one Python call that shares the
+    ``keywords()`` computation ``summarize()`` would otherwise redo.
+    Result-identical to the two single-column UDFs — both columns'
     kernel calls agree on ``(text, lang)`` and ``keywords()`` is
     deterministic, including the failure paths: if ``keywords()``
     raises, ``summarize()`` would raise at its own internal
-    ``keywords()`` call, so both columns take their original fallbacks
-    (``[]`` / ``""``)."""
+    ``keywords()`` call, so the row takes both original fallbacks
+    (``row_udf``'s default ``([], "")``); a raising summary alone
+    falls back to ``""``."""
     from ..kernel.nlp import keywords, summarize_with_keywords
 
-    kw_out, sum_out = [], []
-    for title, text, lang in zip(titles, texts, langs):
-        title = title or ""
-        text = text or ""
-        lang = lang or "en"
-        try:
-            kws = keywords(text, lang)
-            kw_out.append(sorted(kws.keys()))
-        except Exception:
-            kws = None
-            kw_out.append([])
-        try:
-            summary = "" if kws is None else summarize_with_keywords(title, text, kws, 5, lang)
-            sum_out.append(summary[:5000])
-        except Exception:
-            sum_out.append("")
-    return pd.DataFrame({"keywords": kw_out, "summary": sum_out})
+    title, text, lang = title or "", text or "", lang or "en"
+    kws = keywords(text, lang)
+    try:
+        summary = summarize_with_keywords(title, text, kws, 5, lang)[:5000]
+    except Exception:  # noqa: BLE001
+        summary = ""
+    return sorted(kws.keys()), summary
 
 
-nlp_udf = F.pandas_udf(_nlp_batch, _NLP_TYPE)
+nlp_udf = row_udf(_nlp, _NLP_TYPE, lambda: ([], ""))
 
 _SENT_FEATURES_TYPE = T.ArrayType(
     T.StructType(

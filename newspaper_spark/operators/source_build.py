@@ -11,7 +11,6 @@ replaces generate_articles(limit=5000) (source.py:329-335).
 """
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -190,34 +189,22 @@ def extract_page_links(
     )
 
 
-def _source_meta_batch(source_urls, htmls):
-    from ..dom.htmlparser import fromstring
-    from ..kernel.metadata import MetaIndex, get_meta_description
+def _brand(source_url):
     from ..kernel.urlutils import extract_domain
 
-    brands, descs = [], []
-    for su, html in zip(source_urls, htmls):
-        try:
-            brands.append(extract_domain(su or "").domain)
-        except Exception:
-            brands.append("")
-        try:
-            doc = fromstring(html or "")
-            descs.append(get_meta_description(doc, MetaIndex(doc)) if doc is not None else "")
-        except Exception:
-            descs.append("")
-    return pd.DataFrame({"brand": brands, "description": descs})
+    return extract_domain(source_url or "").domain
 
 
-source_meta_udf = F.pandas_udf(
-    _source_meta_batch,
-    T.StructType(
-        [
-            T.StructField("brand", T.StringType()),
-            T.StructField("description", T.StringType()),
-        ]
-    ),
-)
+def _description(html):
+    from ..dom.htmlparser import fromstring
+    from ..kernel.metadata import MetaIndex, get_meta_description
+
+    doc = fromstring(html or "")
+    return get_meta_description(doc, MetaIndex(doc)) if doc is not None else ""
+
+
+brand_udf = row_udf(_brand, T.StringType(), str)
+description_udf = row_udf(_description, T.StringType(), str)
 
 
 def extract_source_meta(
@@ -231,14 +218,14 @@ def extract_source_meta(
     ``extract_domain`` (the tldextract analog — handles two-label
     public suffixes, subdomains, ports, userinfo), description from
     the REAL DOM parse + meta[name=description] first-match kernel,
-    '' when absent (the reference's default). One Arrow-batched pandas
-    UDF computes both per page; map-only — homepage HTML never
-    shuffles, so the stage scales as a pure scan at any source count.
+    '' when absent (the reference's default); each field falls back to
+    '' on its own. Two per-row pandas UDFs in one projection, planned
+    as one Arrow evaluation; map-only — homepage HTML never shuffles,
+    so the stage scales as a pure scan at any source count.
     """
-    meta = source_meta_udf(F.col(url_col), F.col(html_col))
     passthrough = [c for c in sources.columns if c != html_col]
     return sources.select(
         *passthrough,
-        meta.getField("brand").alias("brand"),
-        meta.getField("description").alias("description"),
+        brand_udf(F.col(url_col)).alias("brand"),
+        description_udf(F.col(html_col)).alias("description"),
     )

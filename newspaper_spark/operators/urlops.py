@@ -1,30 +1,30 @@
 """URL-predicate operators: the reference's valid_url / prepare_url as
-vectorized pandas UDFs (urls.py semantics need registered-domain
-splitting, which has no Column-function equivalent)."""
+per-row pandas UDFs (urls.py semantics need registered-domain
+splitting, which has no Column-function equivalent). A URL the kernel
+cannot parse (``http://[bad/`` raises in ``urlparse``) is not valid
+and prepares to ''."""
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .batch import row_udf
 
-def _valid_url_batch(urls):
+
+def _valid_url(url):
     from ..kernel.urlutils import valid_url
 
-    return urls.map(lambda u: bool(valid_url(u)) if u is not None else False)
+    return url is not None and bool(valid_url(url))
 
 
-def _prepare_url_batch(urls, sources):
+def _prepare_url(url, source):
     from ..kernel.urlutils import prepare_url
 
-    return pd.Series(
-        [prepare_url(u, s or None) if u else "" for u, s in zip(urls, sources)],
-        dtype="object",
-    )
+    return prepare_url(url, source or None) if url else ""
 
 
-valid_url_udf = F.pandas_udf(_valid_url_batch, T.BooleanType())
-prepare_url_udf = F.pandas_udf(_prepare_url_batch, T.StringType())
+valid_url_udf = row_udf(_valid_url, T.BooleanType(), bool)
+prepare_url_udf = row_udf(_prepare_url, T.StringType(), str)
 
 
 def url_blocklist_filter(df, blocklist, url_col: str = "url", id_col: str = "doc_id"):

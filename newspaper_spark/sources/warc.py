@@ -11,9 +11,10 @@ WARC files: a flat concatenation of records, each a version line
 (newspaper3k) starts from fetched HTML and has no archive-reader
 analog; this is a beyond-reference source operator in the spirit of
 the multimodal decoder family (multimodal.py): REAL pure-stdlib
-parsing of a binary container behind an Arrow-batched ``mapInPandas``
-stage, fed by deterministically Column-assembled payloads so the
-expected output is relationally reconstructable by the DuckDB oracle.
+parsing of a binary container behind one ``batch.flat_map`` stage
+(Arrow-batched ``mapInPandas``), fed by deterministically
+Column-assembled payloads so the expected output is relationally
+reconstructable by the DuckDB oracle.
 
 Correctness notes (what makes this a real WARC reader, not a split):
   * the record walk is driven by ``Content-Length`` octet counts —
@@ -36,11 +37,10 @@ because files are independent.
 """
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.batch import flat_map
 
 __all__ = [
     "warc_response_record_col",
@@ -241,6 +241,12 @@ def read_record_at(data: bytes, offset: int, length: int) -> dict:
     return recs[0]
 
 
+_WARC_OUTPUTS = [
+    "rec_idx", "offset", "record_bytes", "warc_type", "record_id",
+    "target_uri", "warc_date", "content_length", "http_status",
+    "http_content_type", "payload_text", "error",
+]
+
 _WARC_SCHEMA = (
     "file_id long, rec_idx int, offset long, record_bytes long, "
     "warc_type string, record_id string, "
@@ -250,35 +256,23 @@ _WARC_SCHEMA = (
 )
 
 
+def _warc_rows(payload):
+    if isinstance(payload, str):
+        payload = payload.encode("utf-8")
+    recs = _parse_warc_bytes(bytes(payload or b""))
+    return [tuple(rec[c] for c in _WARC_OUTPUTS) for rec in recs]
+
+
 def parse_warc_files(
     files: DataFrame, id_col: str = "file_id", content_col: str = "warc"
 ) -> DataFrame:
     """``(file_id, warc bytes|str)`` → one row per parsed record.
 
-    Map-only Arrow-batched stage; per-file fault tolerance via the
-    error column (framing faults stop that file only).
+    One map-only ``batch.flat_map`` stage; per-file fault tolerance via
+    the error column (framing faults stop that file only). The id
+    column comes out named ``file_id`` whatever ``id_col`` is.
     """
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "rec_idx", "offset", "record_bytes", "warc_type",
-            "record_id", "target_uri",
-            "warc_date", "content_length", "http_status",
-            "http_content_type", "payload_text", "error",
-        ]
-        for pdf in batches:
-            rows = []
-            for fid, payload in zip(
-                pdf[id_col].values, pdf[content_col].values
-            ):
-                if isinstance(payload, str):
-                    payload = payload.encode("utf-8")
-                for rec in _parse_warc_bytes(bytes(payload or b"")):
-                    rows.append({"file_id": fid, **rec})
-            yield pd.DataFrame(
-                rows, columns=["file_id", *cols]
-            ) if rows else pd.DataFrame(columns=["file_id", *cols])
-
-    return files.select(id_col, content_col).mapInPandas(
-        op, schema=_WARC_SCHEMA
+    return flat_map(
+        files.select(F.col(id_col).alias("file_id"), content_col),
+        ["file_id"], content_col, _warc_rows, _WARC_OUTPUTS, _WARC_SCHEMA,
     )

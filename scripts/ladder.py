@@ -12,8 +12,9 @@ shared:
   shapes the input (build function, sf dir, k and the ladder's
   constants), but not that function's code: delete the directory after
   editing one;
-* one discarded warm-up, then every (op, k) interleaved per epoch;
-  medians per rung and the high/low ratio of µs per unit;
+* one discarded warm-up run of every (op, k), then every (op, k)
+  interleaved per epoch; medians per rung and the high/low ratio of µs
+  per unit;
 * a timed run is ONE noop write under ``obs.profile`` and
   ``cache.tracking_scope()``; the op's output facts are observed on that
   write (``DataFrame.observe``), not taken by a second action.
@@ -605,7 +606,8 @@ def run_ladder(spark: SparkSession, name: str, sf_dir: str, reps: int) -> dict:
         rec.update(seen.get)
         return rec
 
-    timed(*grid[0])  # discarded warm-up: cold plans and Python workers
+    for cell in grid:  # discarded warm-ups: cold plans and Python workers
+        timed(*cell)
     runs = {cell: [] for cell in grid}
     for _ in range(reps):
         for op, k in grid:

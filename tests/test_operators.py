@@ -323,6 +323,21 @@ def test_valid_url_udf(spark):
     assert out[2] is False
 
 
+def test_valid_url_udf_unparseable_url_is_false(spark):
+    """A URL the kernel's urlparse rejects (``http://[bad/`` raises
+    ``ValueError: Invalid IPv6 URL``) is one invalid row, not a failed
+    task; the valid row beside it still passes."""
+    from newspaper_spark.operators.urlops import valid_url_udf
+
+    rows = [
+        (1, "http://[bad/x.html"),
+        (2, "http://www.cnn.com/2013/11/27/travel/weather-thanksgiving/index.html"),
+    ]
+    df = spark.createDataFrame(rows, "id int, url string")
+    out = {r.id: r.v for r in df.select("id", valid_url_udf(F.col("url")).alias("v")).collect()}
+    assert out == {1: False, 2: True}
+
+
 def test_decode_html_bytes(spark):
     from newspaper_spark.operators.decode import decode_html
 
@@ -2326,7 +2341,7 @@ def test_pack_offsets_prefix_sum_and_spans(spark):
 
 
 def test_add_nlp_fused_udf_matches_unfused(spark):
-    """The fused _nlp_batch must be row-identical to the two original
+    """The fused _nlp UDF must be row-identical to the two original
     single-column UDFs (keywords_udf / summary_udf) — including the
     fallback paths: null/empty title, null/empty text, no-terminator
     single-sentence text, and multi-sentence prose."""
@@ -4115,6 +4130,34 @@ def test_parse_sitemaps_null_xml_lands_in_error_channel(spark):
     out = {r.site_id: r for r in parse_sitemaps(df).collect()}
     assert out[0].error == "malformed-xml" and out[0].loc is None
     assert out[1].error == "malformed-xml"
+
+
+def test_feed_and_sitemap_parsers_pass_a_null_id_through(spark):
+    """A null feed/site id is copied onto its entry rows as null; it
+    neither fails the task nor moves the entries to the error
+    channel."""
+    from newspaper_spark.operators.feeds import parse_feed_entries, parse_sitemaps
+
+    rss = (
+        '<rss version="2.0"><channel><item><title>a</title></item>'
+        "<item><title>b</title></item></channel></rss>"
+    )
+    feeds = spark.createDataFrame([(None, rss), (7, rss)], "feed_id long, xml string")
+    got = sorted(
+        (r.feed_id is None, r.entry_idx, r.title, r.error)
+        for r in parse_feed_entries(feeds).collect()
+    )
+    assert got == [
+        (False, 0, "a", None), (False, 1, "b", None),
+        (True, 0, "a", None), (True, 1, "b", None),
+    ]
+    urlset = (
+        '<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
+        "<url><loc>http://a.com/1</loc></url></urlset>"
+    )
+    sites = spark.createDataFrame([(None, urlset)], "site_id long, xml string")
+    [row] = parse_sitemaps(sites).collect()
+    assert row.site_id is None and row.loc == "http://a.com/1" and row.error is None
 
 
 def test_streaming_sitemap_parse_batch_equal(spark, tmp_path):

@@ -35,7 +35,7 @@ def test_chunk_text_zero_shuffles(spark):
 def test_add_nlp_single_fused_udf_slot(spark):
     """add_nlp's keywords+summary come from ONE fused pandas UDF whose
     struct result is projected twice — the plan must contain exactly
-    one _nlp_batch evaluation slot (equal deterministic python-UDF
+    one _nlp evaluation slot (equal deterministic python-UDF
     expressions dedupe into a single ArrowEvalPython argument), not one
     per output column, and none of the unfused per-column UDFs."""
     from newspaper_spark.operators.nlp_ops import add_nlp
@@ -44,7 +44,7 @@ def test_add_nlp_single_fused_udf_slot(spark):
         [("t", "Some text here.")], "title string, text string"
     )
     p = _plan(spark, add_nlp(df))
-    assert p.count("_nlp_batch") == 1
+    assert p.count("_nlp(") == 1
     assert "_keywords(" not in p and "_summary(" not in p
 
 
